@@ -7,6 +7,7 @@
 # across sessions drift ±10-15%.
 #
 # usage: scripts/ab_bench.sh <query> <old-rev> [sf_dir] [rounds]
+# SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM size both arms (default 32 / 48g).
 # output: one line per run (arm, round, per-query seconds = min of the
 # bench unit's two samples), then a min-per-arm summary. Paste the
 # table into the round notes / an AB_*.md artifact.
@@ -16,9 +17,11 @@ REV=$2
 SFDIR=$(cd "${3:-tmp_sf1_organic}" && pwd)
 ROUNDS=${4:-2}
 REPO=$(git rev-parse --show-toplevel)
-WT=$(mktemp -d /tmp/ab_wt.XXXXXX)
-git worktree add -f "$WT" "$REV" >/dev/null 2>&1
-trap 'git worktree remove -f "$WT" >/dev/null 2>&1 || true' EXIT
+# The OLD arm is a plain export of <old-rev> (no worktree bookkeeping
+# in the repo); TMPDIR picks where it lands.
+WT=$(mktemp -d "${TMPDIR:-/tmp}/ab_wt.XXXXXX")
+trap 'rm -rf "$WT"' EXIT
+git -C "$REPO" archive "$REV" | tar -x -C "$WT"
 
 echo "ab_bench: building old jar at $REV ..." >&2
 (cd "$WT" && sbt -batch package >/dev/null 2>&1)
@@ -28,14 +31,17 @@ echo "ab_bench: building working-tree jar ..." >&2
 run_arm() { # $1 = dir, $2 = label, $3 = round
   local out
   out=$(cd "$1" && SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_ONLY="$QUERY" \
-    SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g \
+    SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+    SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep -m1 '"metric"')
   AB_OUT="$out" python3 - "$2" "$3" "$QUERY" <<'PY'
 import json, os, sys
 label, rnd, q = sys.argv[1], sys.argv[2], sys.argv[3]
 d = json.loads(os.environ["AB_OUT"])
 samples = d.get("samples", {}).get(q) or [d["queries"][q]]
-print(f"{label} round {rnd}: {q} = {min(samples):.2f} s  (samples {samples})")
+guard = d.get("guards", {}).get(q)
+print(f"{label} round {rnd}: {q} = {min(samples):.2f} s  (samples {samples})"
+      + (f"  guard: {guard}" if guard else ""))
 PY
 }
 

@@ -76,7 +76,7 @@ object Bench {
     // frames, symmetric across scales so ratios stay comparable.
     val coldTimed = sys.env.get("SPARK_GRAFT_COLD_TIMED").contains("1")
     // Guard decisions per query: operators with data-dependent physical
-    // plans (containment tier/verify, LPA argmax packing, embed vector
+    // plans (containment verify/keys, LPA argmax packing, embed vector
     // fetch, prefix-Jaccard index) register which regime actually ran
     // via operators.Guard; the warmup pass exercises the same decisions
     // as the timed runs, so snapshot after the unit and ship the map in

@@ -16,39 +16,43 @@ import org.apache.spark.sql.SparkSession
   * `repartition(col)`, origin REPARTITION_BY_COL, which AQE may
   * coalesce — starts wide and lands at the advisory size).
   *
-  * Below the floor nothing is set: sf0.001/0.01/0.1 behavior is
+  * Below the 1 GiB floor nothing is set: sf0.001/0.01/0.1 behavior is
   * bit-identical to round 15, so the driver's bench and oracle legs
-  * stay comparable. All three knobs are env-overridable; the local
-  * defaults (1 GiB floor, 16 MiB target, 4096 cap) are sized for this
-  * host's 100x corpus — a real cluster would raise the target to the
-  * guide's 100 MB–1 GB band, where the same formula yields the
-  * conventional bytes/partition posture at any scale.
+  * stay comparable. The target is the guide's 128 MiB bytes/partition
+  * band: a 16 MiB target measured flat-to-worse at the 1.8 GiB 100x
+  * corpus (OPTIMIZATION_r16.md §Posture), so corpora up to
+  * cores x 128 MiB resolve to the core count and only genuinely large
+  * inputs fan out wider, up to the 4096 cap.
   */
 object ScalePosture {
+
+  private[graft] val MIN_BYTES: Long = 1L << 30
+  private[graft] val TARGET_BYTES: Long = 128L << 20
+  private[graft] val MAX_PARTS: Long = 4096L
 
   /** Apply the posture for `sfDir`; returns a human-readable record of
     * the decision for the run artifact.
     */
   def configure(spark: SparkSession, sfDir: String): String = {
-    val minBytes = envLong("GRAFT_POSTURE_MIN_BYTES", 1L << 30)
-    val targetBytes = envLong("GRAFT_POSTURE_TARGET_BYTES", 16L << 20)
-    val maxParts = envLong("GRAFT_POSTURE_MAX_PARTS", 4096L)
     val bytes = dirBytes(new java.io.File(sfDir))
-    val cpus = spark.sparkContext.defaultParallelism
-    if (bytes < minBytes)
-      s"default inputMB=${bytes >> 20} floorMB=${minBytes >> 20}"
-    else {
-      val n = math.min(maxParts, math.max(cpus.toLong, bytes / targetBytes))
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        n.toString)
-      s"initialPartitionNum=$n inputMB=${bytes >> 20} " +
-        s"targetMB=${targetBytes >> 20}"
+    initialPartitions(bytes, spark.sparkContext.defaultParallelism) match {
+      case None =>
+        s"default inputMB=${bytes >> 20} floorMB=${MIN_BYTES >> 20}"
+      case Some(n) =>
+        spark.conf.set(
+          "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+          n.toString)
+        s"initialPartitionNum=$n inputMB=${bytes >> 20} " +
+          s"targetMB=${TARGET_BYTES >> 20}"
     }
   }
 
-  private def envLong(k: String, dflt: Long): Long =
-    sys.env.get(k).map(_.toLong).getOrElse(dflt)
+  /** The posture arithmetic: None below the floor, else input bytes per
+    * target, never fewer than `cpus` and never more than the cap.
+    */
+  private[graft] def initialPartitions(bytes: Long, cpus: Int): Option[Long] =
+    if (bytes < MIN_BYTES) None
+    else Some(math.min(MAX_PARTS, math.max(cpus.toLong, bytes / TARGET_BYTES)))
 
   private def dirBytes(f: java.io.File): Long =
     if (f.isFile) f.length

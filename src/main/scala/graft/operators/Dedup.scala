@@ -238,40 +238,6 @@ object Dedup {
   private def applyDf(inv: DataFrame, maxDf: Option[Int]): DataFrame =
     maxDf.map(dfCeiling(inv, _)).getOrElse(inv)
 
-  /** The same df ceiling as [[dfCeiling]] — keep s iff df(s) <= maxDf —
-    * expressed as an anti-join against the HOT shingle set
-    * {s : df(s) > maxDf}. Identical kept rows (the two predicates are
-    * complements over the same distinct (doc_id, s) universe; pinned by
-    * a DedupTest equivalence test).
-    *
-    * MEASURED AND REJECTED for the LSH tier (round 16): the form only
-    * wins when the hot set is broadcastable, making the anti join
-    * preserve the shingle window's HashPartitioning(doc_id) so the
-    * signature aggregate and verify index side go exchange-free. On the
-    * near-dup-heavy organic corpora the premise inverts — a typical
-    * source shingle appears in most of its ~100 copies, so MOST of the
-    * distinct shingle universe is hot (millions of strings, far past
-    * any broadcast threshold), AQE keeps the sort-merge anti join, and
-    * the build pays TWO full index exchanges where [[dfCeiling]]'s
-    * count window pays one. Interleaved A/B at the 100x organic corpus
-    * (one JVM per leg, alternating arms): window 15.2-21.8 s
-    * end-to-end curate_corpus vs anti 24.8-31.7 s. Kept (with the
-    * equivalence test and the ProfileCurate stage that measured it) as
-    * the documented rejected alternative; production tiers keep
-    * [[dfCeiling]].
-    */
-  private[operators] def applyDfAnti(inv: DataFrame,
-                                     maxDf: Option[Int]): DataFrame =
-    maxDf.map { cap =>
-      val hot = inv.groupBy(col("s")).agg(count(lit(1)).as("_df"))
-        .filter(col("_df") > cap)
-        .select(col("s"))
-      // using-column joins move the key to the front; restore the
-      // caller's column order so the two forms are drop-in equal
-      inv.join(hot, Seq("s"), "left_anti")
-        .select(inv.columns.map(col).toSeq: _*)
-    }.getOrElse(inv)
-
   /** Persist the inverted index for operators that consume it several
     * times (signatures, verify probe side, verify build side, set
     * sizes). Catalyst's ReuseExchange can't deduplicate those subtrees —
@@ -487,6 +453,14 @@ object Dedup {
     jaccardFromCounts(inter, shingleSizes(inv), threshold)
   }
 
+  /** Rep-doc count up to which [[containmentPairs]]' verify broadcasts
+    * its per-doc shingle arrays: at ~1.2 KB of array per doc the
+    * broadcast sits near 240 MB at the cap — comfortable on the target
+    * executors. Past it (millions of distinct docs at 100 TB) the same
+    * joins run as plain shuffled joins.
+    */
+  private[operators] val ARRAY_VERIFY_MAX_DOCS = 200000
+
   /** Asymmetric shingle-CONTAINMENT pairs: c(a→b) = |A ∩ B| / |A| — the
     * subset detector Jaccard structurally cannot be. A document fully
     * contained in a much larger one scores jaccard |A|/|B| ≈ 0 but
@@ -494,24 +468,26 @@ object Dedup {
     * class a training-data pipeline must catch (and the asymmetry tells
     * you WHICH side is the fragment).
     *
-    * CANDIDATE GENERATION is prefix-filtered on the CONTAINED side (the
-    * asymmetric AllPairs rule): c(a→b) ≥ p/q forces |A∩B| ≥ ⌈t·|A|⌉, so
-    * a's |A| − ⌈t·|A|⌉ + 1 rarest shingles must hit B somewhere — the
-    * candidate join pairs a's PREFIX rows against the FULL index
-    * (Σ df_pre·df_inv fan-out) instead of self-joining the full index
-    * (Σ df_inv², which grows QUADRATICALLY in any corpus-relative df
-    * ceiling — measured 41 s at 10x before this). The regime guard is
-    * measured like [[prefixJaccardPairs]]'s but prices the prefix
-    * tier's FULL cost: candidates ≈ Σ df_pre·df_inv (on a replicated
-    * corpus almost none collapse in the distinct — measured 30.2M
-    * distinct pairs from a 36.1M fan-out at 10x) and each candidate
-    * pays ~avg-doc-size verification rows in interCounts, so the
-    * prefix tier must beat the plain self-join by (1 + avgSz)x, not a
-    * constant margin — under a constant 2x the 10x replica picked
-    * prefix and verification alone was ~1.5 G rows (>600 s) against
-    * the plain tier's 276 M. Either tier is lossless (the filter only
-    * prunes pairs that cannot pass the threshold). ORDERED pairs a ≠ b:
-    * each unordered candidate yields both directions, scored
+    * One physical pipeline:
+    *  1. replica contraction — docs with identical normalized text
+    *     collapse to a min-id representative, weighted by group size k;
+    *  2. the shingle key is hashed to xxhash64 only when a one-aggregate
+    *     certificate proves the hash injective on this corpus;
+    *  3. the df ceiling applies to the WEIGHTED df (bit-for-bit the
+    *     uncontracted df), and every doc carries its post-cap size `sz`,
+    *     which prunes whole pairs on sizes alone (the `sz` window);
+    *  4. candidates pair a's PREFIX — its |A| − ⌈t·|A|⌉ + 1 rarest
+    *     shingles, the asymmetric AllPairs rule, since c(a→b) ≥ p/q
+    *     forces |A∩B| ≥ ⌈t·|A|⌉ — with the full index, and the PPJoin
+    *     positional bound drops candidates that cannot reach ⌈t·|A|⌉;
+    *  5. one verify: size(array_intersect) of the two docs' shingle
+    *     arrays. The doc-array joins carry a broadcast hint when the
+    *     representative count is at most [[ARRAY_VERIFY_MAX_DOCS]], and
+    *     are plain shuffled joins otherwise — the only size-dependent
+    *     choice, and it moves the physical plan, never the rows.
+    *
+    * Representative pairs then expand back to member pairs. ORDERED
+    * pairs a ≠ b: each unordered candidate yields both directions, scored
     * independently. The threshold p/q is enforced EXACTLY in integers
     * (q·|∩| >= p·|A|) and the score is emitted as floor-permille — no
     * doubles anywhere, so the oracle comparison is engine-exact.
@@ -519,55 +495,19 @@ object Dedup {
     * is trivially 1.0 (a two-shingle doc contained anywhere carries no
     * dup signal).
     */
-  /** Rep-doc count up to which the candidate tier verifies by
-    * broadcast array-intersect: at ~1.2 KB of shingle array per doc
-    * the broadcast sits near 240 MB at the cap — comfortable on the
-    * target executors — while a corpus past it (millions of distinct
-    * docs at 100 TB) falls back to the measured shuffle-verify guard.
-    */
-  private[operators] val ARRAY_VERIFY_MAX_DOCS = 200000
-
   def containmentPairs(docs: DataFrame, n: Int, thresholdNum: Int,
                        thresholdDen: Int, minSize: Int,
-                       maxDf: Option[Int] = None): DataFrame = {
-    // GRAFT_CONTAIN_TIER=prefix|plain force-overrides the tier choice
-    // for A/B benchmarking only; every tier is lossless, so the
-    // override can never change results, just the physical plan. Only
-    // the two documented values are accepted — a typo must fail
-    // loudly, not silently benchmark the wrong physical plan.
-    val forced = sys.env.get("GRAFT_CONTAIN_TIER") match {
-      case Some("prefix") => Some(true)
-      case Some("plain")  => Some(false)
-      case Some(other)    => sys.error(
-        s"GRAFT_CONTAIN_TIER must be 'prefix' or 'plain', got '$other'")
-      case None           => None
-    }
-    // GRAFT_CONTAIN_VERIFY=arrays|shuffle force-overrides the verify
-    // stage the same way (A/B pricing of the nRep > ARRAY_VERIFY_MAX_DOCS
-    // big-corpus fallback on corpora that would otherwise broadcast):
-    // 'arrays' lifts the broadcast ceiling, 'shuffle' zeroes it. Both
-    // verifies are exact, so only the physical plan moves.
-    val cap = sys.env.get("GRAFT_CONTAIN_VERIFY") match {
-      case Some("arrays")  => Int.MaxValue
-      case Some("shuffle") => 0
-      case Some(other)     => sys.error(
-        s"GRAFT_CONTAIN_VERIFY must be 'arrays' or 'shuffle', got '$other'")
-      case None            => ARRAY_VERIFY_MAX_DOCS
-    }
-    containmentPairsTier(docs, n, thresholdNum, thresholdDen, minSize,
-      maxDf, forced, cap)
-  }
+                       maxDf: Option[Int] = None): DataFrame =
+    containmentPairsCapped(docs, n, thresholdNum, thresholdDen, minSize,
+      maxDf, ARRAY_VERIFY_MAX_DOCS)
 
-  /** [[containmentPairs]] with explicit tier control for tests and
-    * A/Bs: forceCandidate Some(true) pins the prefix-candidate tier,
-    * Some(false) the plain self-join, None the guard; bcastDocsCap
-    * sets the array-verify ceiling (0 forces the shuffle verify).
-    * Every combination is lossless — only the physical plan changes.
+  /** [[containmentPairs]] with the verify's broadcast ceiling as a
+    * parameter (the test seam: bcastDocsCap = 0 plans the shuffled
+    * doc-array joins on any corpus). Results never depend on it.
     */
-  private[operators] def containmentPairsTier(
+  private[operators] def containmentPairsCapped(
       docs: DataFrame, n: Int, thresholdNum: Int, thresholdDen: Int,
-      minSize: Int, maxDf: Option[Int], forceCandidate: Option[Boolean],
-      bcastDocsCap: Int): DataFrame = {
+      minSize: Int, maxDf: Option[Int], bcastDocsCap: Int): DataFrame = {
     // The contraction's intra-group expansion emits containment=1000
     // unconditionally, which matches the uncontracted plan only while
     // inter = sz_a passes inter*den >= sz_a*num, i.e. den >= num. A
@@ -601,8 +541,8 @@ object Dedup {
     // DICTIONARY-HASHED SHINGLE KEY (round 15, the 100x decade probe's
     // #1 finding): every stage below shuffles, sorts or aggregates on
     // the shingle key — the df-cap window, the dfreq aggregate, the
-    // global (df, s) prefix order, the candidate join, and both
-    // verifies — and the raw key is the n-gram TEXT (~25-35 bytes,
+    // global (df, s) prefix order, the candidate join, and the verify
+    // arrays — and the raw key is the n-gram TEXT (~25-35 bytes,
     // growing with n) where 8 bytes of xxhash64 carry the same
     // identity. Hashing is adopted only after injectivity on THIS
     // corpus is PROVEN (count(distinct s) == count(distinct hash)): a
@@ -633,16 +573,10 @@ object Dedup {
     val hashKeys = collided.isNullAt(0) || !collided.getBoolean(0)
     val keyedInv =
       if (hashKeys) rawInv.withColumn("s", xxhash64(col("s"))) else rawInv
-    val keysTag = s" keys=${if (hashKeys) "hashed64" else "text"}"
     val invAll = keyedInv
       .join(weights.select(col("rep").as("doc_id"), col("k")), "doc_id")
     // The cached index carries each doc's post-cap set size: one window
-    // at build time buys the SIZE-COMPLEMENTARY filter in both tiers
-    // below — for the ordered pair (a,b), inter <= sz_b, so
-    // inter·den >= sz_a·num requires sz_b·den >= sz_a·num, and the
-    // repPairs gate requires sz_a >= minSize; both depend only on
-    // pair-constant sizes, so whole pairs drop BEFORE the
-    // intersection-count shuffle, never individual rows (lossless).
+    // at build time buys the SIZE-COMPLEMENTARY filter below.
     val inv = materialized((maxDf match {
       case Some(cap) =>
         val w = Window.partitionBy(col("s"))
@@ -656,31 +590,27 @@ object Dedup {
     // can release NOW instead of riding through the pair joins.
     inv.count()
     rawInv.unpersist()
-    val sizes = shingleSizes(inv)
-    // Size-complementary filter, applied map-side in every tier right
-    // after the shingle join and before anything shuffles on (a,b):
-    // a-side docs below minSize and pairs whose b side is too small to
-    // ever reach the containment threshold carry no information
-    // (inter <= sz_b, so inter·den >= sz_a·num forces sz_b·den >=
-    // sz_a·num). Both depend only on pair-constant sizes — lossless.
+    // Size-complementary filter, applied map-side right after the
+    // shingle join and before anything shuffles on (a,b): a-side docs
+    // below minSize and pairs whose b side is too small to ever reach
+    // the containment threshold carry no information (inter <= sz_b, so
+    // inter·den >= sz_a·num forces sz_b·den >= sz_a·num). Both depend
+    // only on pair-constant sizes — whole pairs drop, lossless.
     val szOk = col("a") =!= col("b") &&
       col("_sza") >= minSize &&
       col("_szb") * thresholdDen >= col("_sza") * thresholdNum
 
-    // CANDIDATE TIER (the round-13 default): prefix-filtered candidate
-    // pairs, the PPJoin+ positional upper bound, then per-candidate
-    // verification — the full-index pair aggregate (52 M keys for
-    // 5.9 k qualifying pairs at organic 10x, the measured round-12
-    // dominator) never happens. Stages:
+    // CANDIDATES (the round-13 prefix rule) — the full-index pair
+    // aggregate (52 M keys for 5.9 k qualifying pairs at organic 10x,
+    // the measured round-12 dominator) never happens:
     //
     //  1. invR ranks every doc's shingles in the global canonical
     //     order (df asc, s asc — the prefixRowsBy order), so the
     //     prefix is rnk <= sz − ⌈t·sz⌉ + 1 and every shingle carries
     //     its position.
     //  2. The candidate join pairs a's prefix rows with the full
-    //     index: preFanout = Σ df_pre·df rows, ALWAYS <= the plain
-    //     tier's Σ df² (prefix rows ⊂ index rows), and the aggregate
-    //     keys are a subset of the plain tier's pairs.
+    //     index: Σ df_pre·df rows, never more than a full self-join's
+    //     Σ df² (prefix rows ⊂ index rows).
     //  3. The per-pair aggregate keeps kpre = |shared ∩ prefix(a)| and
     //     pbmax = pos_b of the deepest prefix match. POSITIONAL BOUND
     //     (lossless, PPJoin Xiao et al. WWW'08 adapted to asymmetric
@@ -691,173 +621,60 @@ object Dedup {
     //     (sz_a − La = ⌈t·sz_a⌉ − 1). Pairs whose bound misses
     //     ⌈t·sz_a⌉ drop before verification — measured 2.2x fewer
     //     candidates at organic 10x, same qualifying pairs.
-    //  4. Verification: inter = |A∩B| exactly.
-    //     - verifyByArrays: per-doc shingle arrays broadcast to a
-    //       map-side size(array_intersect(..)) — zero shuffle; arrays
-    //       have distinct elements so the intersect size is exact.
-    //     - else: interCounts (expand by a's shingles, semi-join b) —
-    //       the shuffle path for corpora whose doc arrays don't fit a
-    //       broadcast.
-    // Candidate pairs (a, b, sz_a) shared by both verify paths AND the
-    // big-corpus guard (lazy: the plain-forced path never builds the
-    // rank index). The persisted rank index is returned alongside the
-    // pairs so the big-corpus guard can release BOTH caches when the
-    // plain tier wins — invR is typically much larger than the
-    // candidate aggregate and must not stay resident under plainInter's
-    // heavy self-join (round-15 advisory).
-    lazy val (candPairs: DataFrame, candIdx: DataFrame) = {
-      val dfreq = inv.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      // persisted: the candidate join reads invR on BOTH sides (a's
-      // prefix rows and the full index), and AQE stage reuse does not
-      // fire across the post-aggregate projection (the round-12
-      // finding), so without the cache the dfreq aggregate + rank
-      // window run twice. Same caller-clearCache contract as inv.
-      val invR = materialized(inv.join(dfreq, "s")
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))))
-        .withColumn("ta", expr(
-          s"(${thresholdNum}L * sz + ${thresholdDen - 1}L) div ${thresholdDen}L"))
-        .select(col("s"), col("doc_id"), col("sz"), col("rnk"), col("ta")))
-      val preR = invR.filter(col("rnk") <= col("sz") - col("ta") + 1)
-      val pairs = preR
-        .select(col("s"), col("doc_id").as("a"), col("sz").as("_sza"),
-          col("ta"))
-        .join(invR.select(col("s"), col("doc_id").as("b"),
-          col("sz").as("_szb"), col("rnk").as("pb")), Seq("s"))
-        .filter(szOk)
-        .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("kpre"), max(col("pb")).as("pbmax"),
-          first(col("_sza")).as("sz_a"), first(col("_szb")).as("szb"),
-          first(col("ta")).as("tA"))
-        .filter(col("kpre") +
-          least(col("tA") - 1, col("szb") - col("pbmax")) >= col("tA"))
-        .select(col("a"), col("b"), col("sz_a"))
-      (pairs, invR)
-    }
-    def candidateInter(verifyByArrays: Boolean,
-                       cand: DataFrame): DataFrame = {
-      if (verifyByArrays) {
-        // persisted for the same reason: two broadcast builds (a-side
-        // and b-side) each materialize the whole aggregate otherwise.
-        val docsArr = materialized(inv.groupBy(col("doc_id"))
-          .agg(collect_list(col("s")).as("arr")))
-        cand
-          .join(broadcast(docsArr
-            .select(col("doc_id").as("a"), col("arr").as("arr_a"))), "a")
-          .join(broadcast(docsArr
-            .select(col("doc_id").as("b"), col("arr").as("arr_b"))), "b")
-          .select(col("a"), col("b"),
-            size(array_intersect(col("arr_a"), col("arr_b")))
-              .cast("long").as("inter"),
-            col("sz_a"))
-      } else {
-        // ARRAYS-SHUFFLE verify (round 15, the 100x decade probe): the
-        // interCounts expansion priced nCand·avgSz rows through a join
-        // probe AND a (a,b)-keyed hash aggregate — 1.3 B rows at the
-        // 100x organic corpus (nCand 25.7 M, avgSz 50). Joining the
-        // candidates against the per-doc shingle ARRAYS instead moves
-        // the same information in nCand rows (wide ones — two
-        // avgSz-long arrays each — but with hashed 8-byte keys that is
-        // ~2·nCand·avgSz·8 bytes, the volume interCounts shipped as
-        // narrow rows anyway) and replaces the billion-row aggregate
-        // with a map-side array_intersect. Same exact counts: inv is
-        // distinct per (doc_id, s), so the intersect size IS |A∩B|.
-        // A/B at 100x organic: 170 s (interCounts) vs this shape —
-        // see SURVEY round-15 ledger; GRAFT_CONTAIN_BIGVERIFY=expand
-        // forces the old expansion for re-measurement.
-        if (sys.env.get("GRAFT_CONTAIN_BIGVERIFY").contains("expand"))
-          interCounts(cand.select(col("a"), col("b")), inv)
-            .join(sizes.select(col("doc_id").as("a"), col("sz").as("sz_a")),
-              "a")
-        else {
-          val docsArr = materialized(inv.groupBy(col("doc_id"))
-            .agg(collect_list(col("s")).as("arr")))
-          cand
-            .join(docsArr
-              .select(col("doc_id").as("a"), col("arr").as("arr_a")), "a")
-            .join(docsArr
-              .select(col("doc_id").as("b"), col("arr").as("arr_b")), "b")
-            .select(col("a"), col("b"),
-              size(array_intersect(col("arr_a"), col("arr_b")))
-                .cast("long").as("inter"),
-              col("sz_a"))
-        }
-      }
-    }
-    // PLAIN TIER: full-index self-join + pair aggregate. Kept for the
-    // A/B override and for the big-corpus regime where the measured
-    // guard can still prefer it. (A symmetric a<b enumeration with
-    // mirrored counts was measured in round 12 and is a wash.)
-    def plainInter: DataFrame =
-      inv.select(col("s"), col("doc_id").as("a"), col("sz").as("_sza"))
-        .join(inv.select(col("s"), col("doc_id").as("b"),
-          col("sz").as("_szb")), Seq("s"))
-        .filter(szOk)
-        .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("inter"))
-        .join(sizes.select(col("doc_id").as("a"), col("sz").as("sz_a")),
-          "a")
+    val dfreq = inv.groupBy(col("s")).agg(count(lit(1)).as("df"))
+    // persisted: the candidate join reads invR on BOTH sides (a's
+    // prefix rows and the full index), and AQE stage reuse does not
+    // fire across the post-aggregate projection (the round-12
+    // finding), so without the cache the dfreq aggregate + rank
+    // window run twice. Same caller-clearCache contract as inv.
+    val invR = materialized(inv.join(dfreq, "s")
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))))
+      .withColumn("ta", expr(
+        s"(${thresholdNum}L * sz + ${thresholdDen - 1}L) div ${thresholdDen}L"))
+      .select(col("s"), col("doc_id"), col("sz"), col("rnk"), col("ta")))
+    val cand = invR.filter(col("rnk") <= col("sz") - col("ta") + 1)
+      .select(col("s"), col("doc_id").as("a"), col("sz").as("_sza"),
+        col("ta"))
+      .join(invR.select(col("s"), col("doc_id").as("b"),
+        col("sz").as("_szb"), col("rnk").as("pb")), Seq("s"))
+      .filter(szOk)
+      .groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("kpre"), max(col("pb")).as("pbmax"),
+        first(col("_sza")).as("sz_a"), first(col("_szb")).as("szb"),
+        first(col("ta")).as("tA"))
+      .filter(col("kpre") +
+        least(col("tA") - 1, col("szb") - col("pbmax")) >= col("tA"))
+      .select(col("a"), col("b"), col("sz_a"))
 
+    // VERIFY: inter = |A∩B| exactly — inv is distinct per (doc_id, s),
+    // so the arrays hold distinct elements and the intersect size IS
+    // the intersection count. Each candidate moves as ONE row carrying
+    // both docs' arrays, never an expansion by a's postings (the
+    // round-15 100x probe: the expansion verify pushed 1.3 B rows
+    // through a join probe and an (a,b)-keyed aggregate). Up to the
+    // broadcast ceiling the array joins are map-side (zero shuffle);
+    // past it they shuffle, with hashed 8-byte keys ~2·nCand·avgSz·8
+    // bytes. docsArr is persisted because both joins read it.
     val nRep = weights.count()
-    val interSz =
-      if (forceCandidate.contains(false)) {
-        Guard.record("containment", s"tier=plain forced nRep=$nRep$keysTag")
-        plainInter
-      } else if (forceCandidate.contains(true) || nRep <= bcastDocsCap) {
-        // Candidate tier is unconditional when the arrays broadcast:
-        // its join fan-out and aggregate keys are subsets of the plain
-        // tier's (stage 2 above) and the verify is map-side — measured
-        // 2.4 s vs the plain aggregate's 8.5-10 s at organic 10x, same
-        // 5,928 qualifying pairs, and a tie at the replica's rep scale.
-        val arrays = nRep <= bcastDocsCap
-        Guard.record("containment",
-          s"tier=candidate verify=" +
-            s"${if (arrays) "arrays" else "shuffle"} nRep=$nRep" +
-            (if (forceCandidate.contains(true)) " forced" else "") + keysTag)
-        candidateInter(arrays, candPairs)
-      } else {
-        // Big-corpus regime (arrays exceed the broadcast budget). The
-        // candidate JOIN is never priced worse than the plain tier's
-        // (prefix rows ⊂ index rows, candidate keys ⊂ plain pair keys),
-        // so build the candidates, COUNT them, and decide only the
-        // VERIFY stage on the measured count: shuffle-verify expands
-        // each candidate by a's postings (nCand·avgSz rows) vs the
-        // plain tier's Σ df² pair-aggregate rows. Round 14 replaced
-        // the old preF·(1+avgSz) ≤ invF inequality — preF (the prefix
-        // join fan-out) over-bounds the post-positional-bound
-        // candidate count by orders of magnitude, and the committed
-        // organic-10x A/B showed the guard choosing plain at 15-18 s
-        // when the candidate+shuffle shape runs 7.9-9.2 s. Counting
-        // the real candidates costs one preF-bounded join whose result
-        // is REUSED (persisted) when the candidate side wins — and
-        // when plain wins, that join was bounded by the plain join it
-        // falls back to, so the detour never exceeds ~2x one stage.
-        def fanout(left: DataFrame, right: DataFrame): Long = {
-          val lf = left.groupBy(col("s")).agg(count(lit(1)).as("lf"))
-          val rf = right.groupBy(col("s")).agg(count(lit(1)).as("rf"))
-          val r = lf.join(rf, "s")
-            .agg(sum(col("lf") * col("rf")).as("c")).first()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
-        val avgSz = {
-          val r = sizes.agg(avg(col("sz"))).first()
-          if (r.isNullAt(0)) 1L else math.max(1L, r.getDouble(0).toLong)
-        }
-        val invF = fanout(inv, inv)
-        val candP = materialized(candPairs)
-        val nCand = candP.count()
-        val usePrefix = nCand * (1 + avgSz) <= invF
-        val verifyTag =
-          if (sys.env.get("GRAFT_CONTAIN_BIGVERIFY").contains("expand"))
-            "expand" else "arrshuffle"
-        Guard.record("containment",
-          s"tier=${if (usePrefix) "candidate" else "plain"} " +
-            s"verify=$verifyTag " +
-            s"nCand=$nCand invFanout=$invF avgSz=$avgSz nRep=$nRep$keysTag")
-        if (usePrefix) candidateInter(verifyByArrays = false, candP)
-        else { candP.unpersist(); candIdx.unpersist(); plainInter }
-      }
-    val repPairs = interSz
+    val bcast = nRep <= bcastDocsCap
+    Guard.record("containment",
+      s"verify=${if (bcast) "arrays" else "arrshuffle"} nRep=$nRep " +
+        s"keys=${if (hashKeys) "hashed64" else "text"}")
+    val docsArr = materialized(inv.groupBy(col("doc_id"))
+      .agg(collect_list(col("s")).as("arr")))
+    def arraysOf(side: String): DataFrame = {
+      val d = docsArr.select(col("doc_id").as(side),
+        col("arr").as(s"arr_$side"))
+      if (bcast) broadcast(d) else d
+    }
+    val repPairs = cand
+      .join(arraysOf("a"), "a")
+      .join(arraysOf("b"), "b")
+      .select(col("a"), col("b"),
+        size(array_intersect(col("arr_a"), col("arr_b")))
+          .cast("long").as("inter"),
+        col("sz_a"))
       .filter(col("sz_a") >= minSize)
       .filter(col("inter") * thresholdDen >= col("sz_a") * thresholdNum)
       .select(col("a"), col("b"),
@@ -875,7 +692,7 @@ object Dedup {
       .join(members.select(col("rep").as("b"), col("doc_id").as("mb")), "b")
       .select(col("ma").as("a"), col("mb").as("b"),
         col("containment_permille"))
-    val intra = sizes.filter(col("sz") >= minSize)
+    val intra = shingleSizes(inv).filter(col("sz") >= minSize)
       .select(col("doc_id").as("rep"))
       .join(members, "rep")
       .withColumnRenamed("doc_id", "ma")
@@ -1181,15 +998,12 @@ object Dedup {
       // three more times; through a one-unit-stale map the jump is
       // still valid and still compounds the per-round contraction to
       // ~7x — a diameter-d chain converges in ~log7(d) rounds).
-      val tRound = System.nanoTime()
       val once = unit(labels, labels)
       val prevLabels = labels
       labels = save(unit(once, labels)) // cut the growing lineage
       // the new eager checkpoint is self-contained; round N-1's blocks
       // are dead now (round 1's `prevLabels` is lazy — release no-ops)
       Ckpt.release(prevLabels)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC round $iter: ${(System.nanoTime() - tRound) / 1e9}%.2f s")
       val newSum = labels
         .agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
           lit(java.math.BigDecimal.ZERO)).as("s"))

@@ -62,7 +62,7 @@ object ProfileCurate {
         t("  3a + df ceiling window (OLD)")(noop(
           Dedup.dfCeiling(Dedup.shingleRows(docsIn, 3),
             graft.queries.TextDedup.MAX_DF)))
-        // the round-16 anti-join form (applyDfAnti is private — inlined)
+        // the round-16 anti-join form (measured and rejected)
         def dfAnti(inv0: org.apache.spark.sql.DataFrame) = {
           val hot = inv0.groupBy(col("s")).agg(count(lit(1)).as("_df"))
             .filter(col("_df") > graft.queries.TextDedup.MAX_DF)

@@ -18,9 +18,9 @@ class CacheScopeTest extends AnyFunSuite {
 
   private def nCached: Int = spark.sparkContext.getPersistentRDDs.size
 
-  // Replica-heavy corpus: the containment guard measures the PLAIN tier
-  // cheaper here (the round-11 regime finding), which is exactly the
-  // case where the guard-materialized prefix index is a dead cache.
+  // Replica-heavy corpus: the prefix-Jaccard guard measures the PLAIN
+  // tier cheaper here (the round-11 regime finding), which is exactly
+  // the case where the guard-materialized prefix index is a dead cache.
   private def replicaDocs = {
     val texts = Seq(
       "alpha beta gamma delta epsilon zeta eta theta iota kappa",
@@ -30,7 +30,7 @@ class CacheScopeTest extends AnyFunSuite {
       .toDF("doc_id", "text")
   }
 
-  test("containmentPairs plain tier releases the dead prefix cache; re-invocation adds nothing") {
+  test("containmentPairs leaves no dead cache and re-invocation adds nothing") {
     spark.catalog.clearCache()
     val base = nCached
     def run() = Dedup.containmentPairs(replicaDocs, n = 3,

@@ -8,13 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Pins [[Dedup.containmentPairs]] against a brute-force in-memory
-  * reference on random corpora — whichever candidate tier the measured
-  * regime guard picks (prefix-filtered or plain self-join), the OUTPUT
-  * must equal the definitionally-computed containment pairs, so this
-  * test is what makes the tier choice a pure physical-plan decision.
-  * Corpora are generated from a small vocabulary with deliberate
-  * duplication (truncations = the containment class, plus unrelated
-  * docs), which exercises both regimes across samples.
+  * reference on random corpora — with the verify's doc arrays broadcast
+  * and shuffled alike, the OUTPUT must equal the definitionally-computed
+  * containment pairs, so this test is what makes the broadcast hint a
+  * pure physical-plan decision. Corpora are generated from a small
+  * vocabulary with deliberate duplication (truncations = the
+  * containment class, plus unrelated docs).
   */
 class ContainmentPropertyTest extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -72,19 +71,16 @@ class ContainmentPropertyTest extends AnyFunSuite {
       val (tn, td) = thresholds(i % thresholds.size)
       val want = refContainment(docs, maxDf = 6, tNum = tn, tDen = td,
         minSize = 3)
-      // every physical shape must agree with the definition: the
-      // default guard, the forced plain self-join, the candidate tier
-      // with broadcast array verify, and the candidate tier with the
-      // shuffle (interCounts) verify (bcastDocsCap = 0 forces it)
+      // both physical shapes must agree with the definition: the
+      // default broadcast array verify, and the shuffled array joins
+      // (bcastDocsCap = 0 forces them)
       val shapes = Seq(
-        ("default", None, Dedup.ARRAY_VERIFY_MAX_DOCS),
-        ("plain", Some(false), Dedup.ARRAY_VERIFY_MAX_DOCS),
-        ("cand-arrays", Some(true), Dedup.ARRAY_VERIFY_MAX_DOCS),
-        ("cand-shuffle", Some(true), 0))
-      for ((label, forced, cap) <- shapes) {
-        val got = Dedup.containmentPairsTier(df, n = 3,
+        ("bcast-arrays", Dedup.ARRAY_VERIFY_MAX_DOCS),
+        ("shuffled-arrays", 0))
+      for ((label, cap) <- shapes) {
+        val got = Dedup.containmentPairsCapped(df, n = 3,
             thresholdNum = tn, thresholdDen = td, minSize = 3,
-            maxDf = Some(6), forceCandidate = forced, bcastDocsCap = cap)
+            maxDf = Some(6), bcastDocsCap = cap)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .toSet

@@ -90,23 +90,6 @@ class DedupTest extends AnyFunSuite {
     assert(kept.count() == inv.count() - 7)
   }
 
-  test("applyDfAnti keeps exactly the rows dfCeiling keeps (round-16 LSH form)") {
-    // The anti-join df ceiling is a physical-shape change only: over the
-    // same distinct (doc_id, s) universe, "df(s) <= cap" and "s not in
-    // {s : df(s) > cap}" are complements, so the kept multisets must be
-    // identical — at a cap that drops the hot shingle, at one that drops
-    // nothing, and at one that drops everything.
-    val inv = Dedup.shingleRows(hotDocs, n = 3)
-    for (cap <- Seq(1, 5, 7, 100)) {
-      val window = Dedup.dfCeiling(inv, cap)
-      val anti = Dedup.applyDfAnti(inv, Some(cap))
-      assert(window.exceptAll(anti).isEmpty && anti.exceptAll(window).isEmpty,
-        s"cap $cap")
-    }
-    // None = no ceiling: pass-through
-    assert(Dedup.applyDfAnti(inv, None).count() == inv.count())
-  }
-
   test("dfCeilingFraction scales the cap with corpus size") {
     val inv = Dedup.shingleRows(hotDocs, n = 3)
     // 9 docs; frac 0.6 -> cap ceil(5.4) = 6 < hot shingle's df 7
