@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: one JSON line with per-query seconds.
   *
   * Each query is fully materialized through the `noop` sink (count() would
@@ -12,32 +10,24 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Scale posture (round 16): above the 1 GiB corpus floor, derive
     // AQE's initialPartitionNum from measured input bytes; below it,
     // no-op — the driver's sf0.1/sf0.01 sessions are bit-identical to
     // round 15. The decision ships in the artifact.
-    val posture = ScalePosture.configure(spark, sfDir)
+    val (spark, posture) = LocalSession(sfDir)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    val allNames = SparkEntry.queries.keys.toSeq.sorted
     // Dev-only subset filter (comma-separated names); the driver sets
     // only SPARK_GRAFT_SF_DIR, so production runs always time everything.
-    val names = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(f => allNames.filter(f.split(",").map(_.trim).toSet))
-      .getOrElse(allNames)
+    // A filtered run (per-query A/B, scaling probe) skips the streaming
+    // surface and the state bench unless it names one of their entries.
+    val onlyFilter: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => onlyFilter.forall(_.contains(n)))
 
     // Per-query unit: one untimed warmup run, one timed run, then
     // clearCache. The warmup absorbs the one-off JVM costs — C2
@@ -66,15 +56,6 @@ object Bench {
     // strictly one-sided (one-off multi-second stalls), so min is the
     // variance-robust round-over-round signal the round-8 judge asked
     // for; the samples map makes the spread auditable.
-    // Cache-symmetry audit switch: with SPARK_GRAFT_COLD_TIMED=1 the
-    // query-local persists built during warmup are dropped before the
-    // timed samples, so sample 1 prices persist MATERIALIZATION (the
-    // cold path a first production run pays) and sample 2 prices the
-    // warm path — one run yields both, and their gap is the
-    // cache-carried share of the headline number. Default (unset) keeps
-    // the round-6+ semantics: timed runs reuse their own warmup's
-    // frames, symmetric across scales so ratios stay comparable.
-    val coldTimed = sys.env.get("SPARK_GRAFT_COLD_TIMED").contains("1")
     // Guard decisions per query: operators with data-dependent physical
     // plans (containment verify/keys, LPA argmax packing, embed vector
     // fetch, prefix-Jaccard index) register which regime actually ran
@@ -84,10 +65,9 @@ object Bench {
     // priced, not just how long it took.
     val guardsByQuery =
       scala.collection.mutable.Map[String, Map[String, String]]()
-    def timeOne(name: String, nTimed: Int = 2): Seq[Double] = {
+    def timeOne(name: String, nTimed: Int = 2): Seq[(Double, Layers.Record)] = {
       graft.operators.Guard.clear()
       try run(name) catch { case _: Throwable => () } // warm: cache + codegen
-      if (coldTimed) { spark.catalog.clearCache(); System.gc() }
       try {
         (1 to nTimed).flatMap { i =>
           // Nudge the ContextCleaner between samples: localCheckpoint
@@ -96,9 +76,16 @@ object Bench {
           // checkpoint-heavy queries the leftover blocks measurably
           // inflate the NEXT sample (memory pressure -> spills).
           if (i > 1) { System.gc(); Thread.sleep(200) }
-          val t0 = System.nanoTime()
-          try { run(name); Some((System.nanoTime() - t0) / 1e9) }
-          catch {
+          // Layers.record attributes the sample's jobs to call sites; its
+          // listener is added before the timer starts and drained after
+          // it stops. The artifact ships the headline (min) sample's.
+          try {
+            Some(Layers.record(spark) {
+              val t0 = System.nanoTime()
+              run(name)
+              (System.nanoTime() - t0) / 1e9
+            })
+          } catch {
             case t: Throwable =>
               System.err.println(
                 s"BENCH FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
@@ -254,12 +241,13 @@ object Bench {
     // Four entries ship: streaming_state_{hdfs,rocksdb}{,_restart}.
     // Input-row counts are asserted so a mislisted source dir fails the
     // entry loudly instead of timing a zero-row stream.
+    val stateProviders = Seq("hdfs", "rocksdb")
     def timeStateStore(): Seq[(String, Option[Double])] = {
       import org.apache.spark.sql.functions.{col, lit, timestamp_seconds}
       val nPerFile = 500000L
       val schema = new org.apache.spark.sql.types.StructType()
         .add("k", "long").add("ts", "timestamp")
-      Seq("hdfs", "rocksdb").flatMap { prov =>
+      stateProviders.flatMap { prov =>
         def scoped[T](f: => T): T =
           if (prov == "rocksdb")
             graft.streaming.StreamingOps.withRocksDbState(spark)(f)
@@ -308,49 +296,46 @@ object Bench {
       }
     }
 
+    val streamingNames = streamingEntries.map(_._1).toSet
+    val stateNames = stateProviders
+      .flatMap(p => Seq(s"streaming_state_$p", s"streaming_state_${p}_restart"))
+      .toSet
+    // Fail fast on names that match no entry: a misspelled filter would
+    // otherwise time nothing and print a zero total with no failures.
+    onlyFilter.foreach { f =>
+      val unknown = f -- SparkEntry.queries.keySet -- streamingNames -- stateNames
+      if (unknown.nonEmpty) {
+        System.err.println("[bench] unknown SPARK_GRAFT_ONLY names: " +
+          unknown.toSeq.sorted.mkString(", "))
+        spark.stop()
+        sys.exit(2)
+      }
+    }
+
     val p1 = names.map(n => n -> timeOne(n)).toMap
-    val okTimes = p1.values.flatten.toSeq.sorted
+    val okTimes = p1.values.flatten.map(_._1).toSeq.sorted
     val median = if (okTimes.isEmpty) 0.0 else okTimes(okTimes.size / 2)
     // Retry outliers AND pass-1 failures (empty sample list): a query
     // whose BEST sample is still far above the pass median gets one
     // more unit (a two-sample stall is rare but the host has produced
     // it), and a failed query a second chance.
     val suspects = names.filter(n =>
-      p1(n).isEmpty || p1(n).min > math.max(1.5, 3 * median))
+      p1(n).isEmpty || p1(n).map(_._1).min > math.max(1.5, 3 * median))
     val p2 = suspects.map(n => n -> timeOne(n)).toMap
-    // Same dev-subset rule as the state bench below: a filtered run
-    // (per-query A/B, scaling probe) skips the streaming surface unless
-    // it asked for it BY NAME; unfiltered production runs time
-    // everything. Names are matched exactly against the split filter set
-    // (as `names` is) — substring-matching the raw env string made a
-    // state-only run (SPARK_GRAFT_ONLY=streaming_state_hdfs) pay the
-    // full streaming-surface wall per arm (round-15 advisory).
-    val onlyFilter: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val streamingNames = Set("streaming_curate_mirror", "streaming_scd2_dim",
-      "streaming_coverage_mirror", "streaming_priority_sample",
-      "streaming_drift_counts", "streaming_target_encode")
-    val stateNames = Seq("hdfs", "rocksdb")
-      .flatMap(p => Seq(s"streaming_state_$p", s"streaming_state_${p}_restart"))
-      .toSet
     val (streamColds, streamEntries) =
       if (onlyFilter.forall(f => (f & streamingNames).nonEmpty))
         timeStreaming()
       else (Nil, Nil)
-    // Dev-subset runs (SPARK_GRAFT_ONLY) skip the state bench unless
-    // explicitly asked for — an A/B of one query must not pay the 2M-key
-    // state workload's wall time per arm. Production (unfiltered) runs
-    // always include it.
     val stateEntries =
       if (onlyFilter.forall(f => (f & stateNames).nonEmpty))
         timeStateStore()
       else Nil
-    val samples: Map[String, Seq[Double]] =
+    val samples: Map[String, Seq[(Double, Layers.Record)]] =
       names.map(n => n -> (p1(n) ++ p2.getOrElse(n, Nil))).toMap
-    val results = names.map { n =>
-      val runs = samples(n)
-      n -> (if (runs.isEmpty) None else Some(runs.min))
-    } ++ streamEntries ++ stateEntries
+    val headline = samples.collect { case (n, runs) if runs.nonEmpty =>
+      n -> runs.minBy(_._1) }
+    val results = names.map(n => n -> headline.get(n).map(_._1)) ++
+      streamEntries ++ stateEntries
     // 3-decimal seconds (1 ms granularity — an order below the shared
     // host's jitter) keep the one-line JSON as short as possible; full
     // 17-digit doubles overflowed the driver's log-tail capture in
@@ -370,17 +355,20 @@ object Bench {
     // the spread the round-8 judge asked the artifact to carry, so
     // round-over-round comparisons can use a variance-robust statistic.
     val samplesJson = names.map { n =>
-      "\"" + n + "\":[" + samples(n).map(fmt).mkString(",") + "]"
+      "\"" + n + "\":[" + samples(n).map(r => fmt(r._1)).mkString(",") + "]"
     }.mkString("{", ",", "}")
     // Guard decisions (only queries that recorded any): the physical
     // regime each entry actually exercised, committed with its timing.
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
+    import Verify.jsonStr
     val guardsJson = guardsByQuery.toSeq.sortBy(_._1).map { case (q, g) =>
-      jstr(q) + ":" + g.toSeq.sorted.map { case (k, v) =>
-        jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+      jsonStr(q) + ":" + g.toSeq.sorted.map { case (k, v) =>
+        jsonStr(k) + ":" + jsonStr(v) }.mkString("{", ",", "}")
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$samplesJson,"guards":$guardsJson,"posture":"$posture","streaming_cold":$coldJson,"failed":$failedJson,"sf":"$sfDir"}""")
+    // Where each query's headline sample spent its Spark work, by call site.
+    val layersJson = headline.toSeq.sortBy(_._1).map { case (q, (_, rec)) =>
+      jsonStr(q) + ":" + rec.json
+    }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$samplesJson,"guards":$guardsJson,"layers":$layersJson,"posture":"$posture","streaming_cold":$coldJson,"failed":$failedJson,"sf":"$sfDir"}""")
     // The full line above has outgrown the driver's 2000-char log-tail
     // window (90+ queries x ~27 chars), which cuts its leading
     // "metric"/"value" fields — so ALSO emit a compact summary line,

@@ -1,70 +1,53 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan-inspection tool: execute one declared query at a given SF dir
-  * and print its executed (post-AQE) physical plan — the feedback loop
-  * for the scale audits in PlanShapeTest and SURVEY §4.
+/** Plan-inspection tool: execute declared queries at a given SF dir on
+  * the session Bench uses and print each executed (post-AQE) physical
+  * plan — the feedback loop for the scale audits in PlanShapeTest and
+  * SURVEY §4.
   *
-  * usage: runMain graft.ExplainQuery <query_name> [sfDir]
+  * usage: runMain graft.ExplainQuery <name>[,<name>...] [sfDir]
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(",").map(_.trim).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val (spark, _) = LocalSession(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
     // Pseudo-names: subtrees that the FINAL executed plan of a declared
     // query cannot show because they sit upstream of a checkpoint /
     // driver-action boundary (the round-15 evidence lesson).
-    //  _er_pairs         ER chain's pre-CC survivor pair subtree
-    //  _lpa_edges        communitiesDistinct's fused edge build (r16)
-    //  _lpa_edges_old    the r15 build it replaced (distinct + symmetrize
-    //                    + repartition + nodes-distinct), reconstructed
-    //                    WITHOUT its checkpoints so the exchanges of all
-    //                    three materialized pieces appear in one plan
-    //  _contain_cert     the single-pass injectivity certificate (r16)
-    //  _contain_cert_old the two-countDistinct certificate it replaced
+    //  _er_pairs     ER chain's pre-CC survivor pair subtree
+    //  _lpa_edges    communitiesDistinct's fused edge build (r16)
+    //  _contain_cert the single-pass injectivity certificate (r16)
     import org.apache.spark.sql.functions._
-    def lpaRaw = Tables.lineitem(spark, sfDir)
-      .select((col("l_partkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
-    def lpaSym(p: org.apache.spark.sql.DataFrame) =
-      p.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(p.select(col("b").as("u"), col("a").as("v")))
-    def containPostings = {
-      val docs = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      graft.operators.Dedup.shingleRows(docs, 3)
+    names.foreach { name =>
+      val df = name match {
+        case "_er_pairs" => queries.Extended.erPairs(spark, sfDir)._1
+        case "_lpa_edges" =>
+          val p = Tables.lineitem(spark, sfDir).select(
+            (col("l_partkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
+          p.select(col("a").as("u"), col("b").as("v"))
+            .unionByName(p.select(col("b").as("u"), col("a").as("v")))
+            .repartition(col("u")).dropDuplicates(Seq("u", "v"))
+        case "_contain_cert" =>
+          val docs = Tables.documents(spark, sfDir)
+            .select(col("doc_id"), col("text"))
+          graft.operators.Dedup.shingleRows(docs, 3)
+            .groupBy(xxhash64(col("s")).as("h"))
+            .agg((min(col("s")) =!= max(col("s"))).as("c"))
+            .agg(max(col("c")))
+        case _ => SparkEntry.queries(name)(spark, sfDir)
+      }
+      df.collect()
+      println(s"=====PLAN $name=====")
+      println(df.queryExecution.executedPlan.toString)
+      // Post-execution formatted plan (AQE-final): operator list with
+      // PushedFilters / ReadSchema / join build sides — the round-15
+      // optimization deliverable's plan-evidence format.
+      println(s"=====FORMATTED $name=====")
+      println(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
     }
-    val df = name match {
-      case "_er_pairs" => queries.Extended.erPairs(spark, sfDir)._1
-      case "_lpa_edges" =>
-        lpaSym(lpaRaw).repartition(col("u")).dropDuplicates(Seq("u", "v"))
-      case "_lpa_edges_old" =>
-        val p0 = lpaRaw.distinct()
-        lpaSym(p0).repartition(col("v"))
-          .unionByName(lpaSym(p0).select(col("u")).distinct()
-            .withColumn("v", col("u")))
-      case "_contain_cert" =>
-        containPostings.groupBy(xxhash64(col("s")).as("h"))
-          .agg((min(col("s")) =!= max(col("s"))).as("c"))
-          .agg(max(col("c")))
-      case "_contain_cert_old" =>
-        containPostings.agg(countDistinct(col("s")).as("ns"),
-          countDistinct(xxhash64(col("s"))).as("nh"))
-      case _ => SparkEntry.queries(name)(spark, sfDir)
-    }
-    df.collect()
-    println("=====PLAN=====")
-    println(df.queryExecution.executedPlan.toString)
-    // Post-execution formatted plan (AQE-final): operator list with
-    // PushedFilters / ReadSchema / join build sides — the round-15
-    // optimization deliverable's plan-evidence format.
-    println("=====FORMATTED=====")
-    println(df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
     spark.stop()
   }
 }

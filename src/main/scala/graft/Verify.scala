@@ -1,26 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Same scale posture as Bench (round 16): verifying a big corpus
     // under the SAME initialPartitionNum the bench runs with is the
     // point — the gate then hash-proves the regime that was priced.
     // Below the 1 GiB floor (every driver SF) this is a no-op.
-    val posture = ScalePosture.configure(spark, sfDir)
+    val (spark, posture) = LocalSession(sfDir)
     System.err.println(s"[verify] posture: $posture")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset: comma-separated query names. Driver sets nothing,

@@ -68,7 +68,7 @@ object Dedup {
     * within-doc frequencies (repetition signals) read this; set-semantics
     * consumers (Jaccard, MinHash) read the distinct form.
     */
-  def shingleOccurrences(docs: DataFrame, n: Int): DataFrame = {
+  private def shingleOccurrences(docs: DataFrame, n: Int): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val gram = concat_ws(" ",
       col("tok") +: (1 until n).map(j => lead(col("tok"), j).over(w)): _*)

@@ -81,7 +81,7 @@ object LabelProp {
     * symmetry), instead of an |E|-row shuffle.
     *
     * Vote regime (round 16, guide §3.1): when the node set fits a
-    * byte budget (GRAFT_LPA_BCAST_MB, default 256, ~16 B/label row),
+    * byte budget ([[BCAST_BUDGET_MB]], ~16 B/label row),
     * edges are partitioned by u and each round joins the BROADCAST
     * label table — the per-round |E|-row vote exchange disappears
     * entirely: the vote count and argmax are partition-local on the
@@ -93,7 +93,18 @@ object LabelProp {
     * decision is recorded in the Guard registry.
     */
   def communitiesDistinct(rawPairs: DataFrame, iters: Int,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          checkpointDir: Option[String] = None): DataFrame =
+    communitiesDistinctBudget(rawPairs, iters, checkpointDir, BCAST_BUDGET_MB)
+
+  private[operators] val BCAST_BUDGET_MB = 256L
+
+  /** [[communitiesDistinct]] with the label-table broadcast budget as a
+    * parameter (the test seam: budgetMB = 0 plans the shuffle rounds on
+    * any graph). Results never depend on it.
+    */
+  private[operators] def communitiesDistinctBudget(rawPairs: DataFrame,
+      iters: Int, checkpointDir: Option[String],
+      budgetMB: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     withCheckpointDir(rawPairs, checkpointDir) { save =>
       val sym = rawPairs.select(col("a").as("u"), col("b").as("v"))
@@ -111,10 +122,6 @@ object LabelProp {
       val nodes = edges.select(col("u")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nV = nodes.count()
-      // env for deployments, -D property so tests can pin the regime
-      val budgetMB = sys.props.get("graft.lpa.bcast.mb")
-        .orElse(sys.env.get("GRAFT_LPA_BCAST_MB")).map(_.toLong)
-        .getOrElse(256L)
       if (nV * 16L <= (budgetMB << 20)) {
         Guard.record("lpa_votes", f"votes=broadcast nV=$nV " +
           f"bcastMB=${nV * 16L / (1 << 20)}")

@@ -35,22 +35,15 @@ object SyncPipeline {
     }.toMap
 
   /** Full run: updates → ordered sinks → report rows. Returns the sunk
-    * dataset names (in order) and the change report.
-    */
-  def run(entities: Seq[Entity], order: Seq[String])
-         (sink: (String, DataFrame) => Unit): (Seq[String], DataFrame) = {
-    val updates = computeUpdates(entities)
-    val sunk = SyncSink.uploadAll(updates, order)(sink)
-    (sunk, SyncSink.changeReport(updates))
-  }
-
-  /** [[run]] with in-flight telemetry: each entity's update set carries a
-    * Spark [[Observation]], so per-entity row and null-key counts are
-    * collected DURING the sink write — no second pass over the data (a
-    * separate count() would re-execute the whole diff per entity, and at
-    * 100 TB the re-scan costs more than the sync itself). Returned
-    * metrics cover exactly the sunk entities (an observation only
-    * resolves after an action has run on its dataset).
+    * dataset names (in order), the change report and per-entity metrics.
+    *
+    * Each entity's update set carries a Spark [[Observation]], so
+    * per-entity row and null-key counts are collected DURING the sink
+    * write — no second pass over the data (a separate count() would
+    * re-execute the whole diff per entity, and at 100 TB the re-scan
+    * costs more than the sync itself). Returned metrics cover exactly
+    * the sunk entities (an observation only resolves after an action has
+    * run on its dataset, so the sink must run one).
     */
   def runObserved(entities: Seq[Entity], order: Seq[String])
                  (sink: (String, DataFrame) => Unit)

@@ -80,8 +80,8 @@ object Media {
     // lossless, so the oracle's closed-form recompute is bit-exact.
     "audio_sample_stats" -> ((s, dir) => {
       // persisted before the sort for the same sampling-pass reason as
-      // image_pixel_stats (ProfileMedia measured the sort DOUBLING the
-      // query: 3.7 s decode → 8.3 s with the unpersisted sort at 10x)
+      // image_pixel_stats (a stage profile measured the sort DOUBLING
+      // the query: 3.7 s decode → 8.3 s with the unpersisted sort at 10x)
       Multimodal.decodeAudioStats(
           Multimodal.encodeWavPayload(documents(s, dir)))
         .toDF()

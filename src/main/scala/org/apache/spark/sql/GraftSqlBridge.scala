@@ -22,4 +22,10 @@ object GraftSqlBridge {
   def overflowError(): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors
       .arithmeticOverflowError("long overflow")
+
+  /** Waits until the listener bus has delivered every posted event, so a
+    * listener's counters are complete before they are read.
+    */
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -73,8 +73,8 @@ class LabelPropTest extends AnyFunSuite {
     // node whose own label got no edge vote must still be a candidate
     // with count 1), plus an isolated-pair edge. Run the same corpus
     // through the broadcast regime (default budget) and the shuffle
-    // fallback (budget pinned to 0 via the -D property) and require
-    // both to equal the multiset reference on the distinct pair list.
+    // fallback (budget 0) and require both to equal the multiset
+    // reference on the distinct pair list.
     val raw = Seq((2L, 3L), (2L, 5L), (2L, 7L), (4L, 3L), (4L, 5L),
       (6L, 3L), (8L, 9L), (10L, 11L), (10L, 13L), (12L, 11L))
     val rawBig = raw.map { case (a, b) => (a + (1L << 40), b + (1L << 40)) }
@@ -85,12 +85,10 @@ class LabelPropTest extends AnyFunSuite {
       val bc = LabelProp.communitiesDistinct(data.toDF("a", "b"), iters)
         .as[(Long, Long)].collect().toMap
       assert(bc == ref, s"broadcast regime, $tag, iters=$iters")
-      System.setProperty("graft.lpa.bcast.mb", "0")
-      try {
-        val sh = LabelProp.communitiesDistinct(data.toDF("a", "b"), iters)
-          .as[(Long, Long)].collect().toMap
-        assert(sh == ref, s"shuffle regime, $tag, iters=$iters")
-      } finally System.clearProperty("graft.lpa.bcast.mb")
+      val sh = LabelProp.communitiesDistinctBudget(data.toDF("a", "b"), iters,
+          checkpointDir = None, budgetMB = 0)
+        .as[(Long, Long)].collect().toMap
+      assert(sh == ref, s"shuffle regime, $tag, iters=$iters")
     }
   }
 

@@ -31,7 +31,7 @@ class SyncPipelineTest extends AnyFunSuite {
         Seq("crs_cde", "id_num"), symmetric = true))
 
     val sunk = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val (order, report) = SyncPipeline.run(entities, SyncSink.FK_ORDER) {
+    val (order, report, _) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
       (name, df) => sunk(name) = df.collect().map(_.toString).sorted.toSeq
     }
 
@@ -89,8 +89,9 @@ class SyncPipelineTest extends AnyFunSuite {
         symmetric = name == "daily_enrollment")
     }
     val sunk = scala.collection.mutable.ArrayBuffer.empty[String]
-    val (order, report) = SyncPipeline.run(entities, SyncSink.FK_ORDER) {
-      (name, _) => sunk += name
+    val (order, report, _) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
+      // an action per entity resolves its Observation
+      (name, df) => sunk += name; df.collect(); ()
     }
     assert(order == SyncSink.FK_ORDER)
     assert(sunk.toSeq == SyncSink.FK_ORDER)

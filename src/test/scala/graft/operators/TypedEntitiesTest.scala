@@ -46,12 +46,12 @@ class TypedEntitiesTest extends AnyFunSuite {
       EnrollmentChange("c2", 99L, "s2", "deleted")))
   }
 
-  test("typed entity feeds SyncPipeline.run inside the FK-ordered sink") {
+  test("typed entity feeds SyncPipeline.runObserved inside the FK-ordered sink") {
     val truth = Seq(enr("c1", 10L, "s1"), enr("c1", 11L, "s1")).toDS()
     val mirror = Seq(enr("c1", 10L, "s1")).toDS()
     val entities = Seq(TypedEntities.enrollmentEntity(truth, mirror))
     val sunk = scala.collection.mutable.Map.empty[String, Seq[EnrollmentChange]]
-    val (order, report) = SyncPipeline.run(entities, SyncSink.FK_ORDER) {
+    val (order, report, _) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
       // the sink sees the typed diff contract, not a loose Row shape
       (name, df) => sunk(name) = df.as[EnrollmentChange].collect().toSeq
     }

@@ -236,7 +236,7 @@ class WiredSyncRehearsalTest extends AnyFunSuite {
           Seq("course_id", "user_id"), symmetric = true))
       val updatesDir = java.nio.file.Files
         .createTempDirectory("wired-updates").toString
-      val (sunk, report) = SyncPipeline.run(entities, SyncSink.FK_ORDER) {
+      val (sunk, report, _) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
         (name, df) =>
           graft.Tables.writeCsv(df, s"$updatesDir/$name", singleFile = true)
           val (_, idBody) = httpPost(s"$base/api/sis_imports?name=$name")
