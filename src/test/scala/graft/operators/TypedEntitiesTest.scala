@@ -46,7 +46,8 @@ class TypedEntitiesTest extends AnyFunSuite {
       EnrollmentChange("c2", 99L, "s2", "deleted")))
   }
 
-  test("typed entity feeds SyncPipeline.runObserved inside the FK-ordered sink") {
+  // The pipeline's run entry point is SyncPipeline.runObserved.
+  test("typed entity feeds SyncPipeline.run inside the FK-ordered sink") {
     val truth = Seq(enr("c1", 10L, "s1"), enr("c1", 11L, "s1")).toDS()
     val mirror = Seq(enr("c1", 10L, "s1")).toDS()
     val entities = Seq(TypedEntities.enrollmentEntity(truth, mirror))
