@@ -3,10 +3,20 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Lifecycle management for the local checkpoints the iterative graph
-  * operators create (CC, LPA, BFS, k-core, shortest path).
+/** The one checkpoint path of the iterative graph operators (CC, LPA,
+  * BFS, k-core, PageRank, shortest path), and the lifecycle of what it
+  * creates.
   *
-  * Each round's `localCheckpoint(eager = true)` materializes into its
+  * Policy: [[save]] checkpoints RELIABLY exactly when the context has a
+  * checkpoint dir (`spark.checkpoint.dir`, or `setCheckpointDir`), and
+  * locally otherwise. No operator takes a dir or writes one: the
+  * SparkContext-global dir is the deployment's choice, and a run that
+  * switched it mid-flight would redirect a concurrent operator's
+  * checkpoints. Reliable checkpoints are files, not blocks: [[release]]
+  * and [[releaseAll]] free nothing there, and
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` governs removal.
+  *
+  * Each round's eager local checkpoint materializes into its
   * own cached blocks and truncates lineage, so once a LATER eager
   * checkpoint (or the operator's return value) no longer reads those
   * blocks they are dead weight on the executors. Spark reclaims them
@@ -91,6 +101,35 @@ object Ckpt {
       s.open = false
     }
   }
+
+  /** Eager checkpoint of `df` under the policy above, [[track]]ed.
+    *
+    * Spark labels a job with the first stack frame outside Spark, which
+    * here would be this method for every operator. For the action's
+    * duration the call site is set to the caller's frame instead, so
+    * `graft.Layers` and the UI show `localCheckpoint at Dedup.scala:N`.
+    */
+  private[graft] def save(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val reliable = sc.getCheckpointDir.isDefined
+    val self = getClass.getName
+    val caller = Thread.currentThread.getStackTrace.find { f =>
+      val c = f.getClassName
+      !c.startsWith("java.") && !c.startsWith(self)
+    }
+    val prev = sc.getLocalProperty(CallSiteShort)
+    caller.foreach { f =>
+      val action = if (reliable) "checkpoint" else "localCheckpoint"
+      sc.setLocalProperty(CallSiteShort,
+        s"$action at ${f.getFileName}:${f.getLineNumber}")
+    }
+    try track(if (reliable) df.checkpoint(eager = true)
+              else df.localCheckpoint(eager = true))
+    finally sc.setLocalProperty(CallSiteShort, prev)
+  }
+
+  /** SparkContext's local-property key for a job's short call site. */
+  private val CallSiteShort = "callSite.short"
 
   /** Register `df`'s checkpoint RDD (weakly — the ContextCleaner GC
     * path stays usable) so [[releaseAll]] can drop it deterministically.

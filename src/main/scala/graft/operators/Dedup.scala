@@ -833,14 +833,7 @@ object Dedup {
     * changed-label count.
     *
     * Checkpointing: every round's label table is checkpointed to cut the
-    * growing lineage. `checkpointDir = None` uses localCheckpoint —
-    * right for local[n], but executor-loss-fragile on a cluster; pass a
-    * reliable dir (HDFS/S3) there and the same loop survives executor
-    * loss. A passed dir is set on the SparkContext for the duration of
-    * the call and the previous checkpoint dir (if any) is restored
-    * afterwards, so other jobs' checkpoints are not silently redirected;
-    * if no dir was set before, the passed one remains (SparkContext has
-    * no unset).
+    * growing lineage, reliable or local per [[Ckpt]]'s policy.
     *
     * Throws IllegalStateException if maxIters rounds don't converge —
     * a partially-propagated labeling is WRONG, never silently returned.
@@ -850,16 +843,9 @@ object Dedup {
     * Input: (a, b) pairs with a < b. Output: (doc_id, rep_doc_id) for
     * every doc that appears in at least one pair.
     */
-  def componentsFromPairs(pairs: DataFrame, maxIters: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = Ckpt.scoped {
+  def componentsFromPairs(pairs: DataFrame,
+                          maxIters: Int = 20): DataFrame = Ckpt.scoped {
     val spark = pairs.sparkSession
-    val prevCheckpointDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def save(df: DataFrame): DataFrame =
-      Ckpt.track(
-        if (checkpointDir.isDefined) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true))
-    try {
     // Materialize the edge list once: the iteration below references it
     // every round (neighbor join + convergence check), and without the
     // checkpoint the full upstream pair pipeline (e.g. MinHash LSH)
@@ -928,9 +914,9 @@ object Dedup {
     val p0 =
       if (p0raw.schema.fields.forall(_.dataType ==
           org.apache.spark.sql.types.LongType))
-        save(ufPass(ufPass(ufPass(p0raw).repartition(col("b")))
+        Ckpt.save(ufPass(ufPass(ufPass(p0raw).repartition(col("b")))
           .repartition(col("b"))))
-      else save(p0raw)
+      else Ckpt.save(p0raw)
     // Self-loops (u,u) are unioned in so that the per-round neighbor
     // aggregate min(lbl) OVER neighbors∪self IS least(own, neighbor
     // min) directly — the label table is then referenced exactly once
@@ -939,7 +925,7 @@ object Dedup {
     // propagation in the same job without its subtree re-executing.
     val sym = p0.select(col("a").as("u"), col("b").as("v"))
       .unionByName(p0.select(col("b").as("u"), col("a").as("v")))
-    val edges = save(sym
+    val edges = Ckpt.save(sym
       .unionByName(sym.select(col("u"), col("u").as("v")).distinct())
       .repartition(col("v")))
     Ckpt.release(p0) // superseded: every later plan reads `edges` only
@@ -1000,7 +986,7 @@ object Dedup {
       // ~7x — a diameter-d chain converges in ~log7(d) rounds).
       val once = unit(labels, labels)
       val prevLabels = labels
-      labels = save(unit(once, labels)) // cut the growing lineage
+      labels = Ckpt.save(unit(once, labels)) // cut the growing lineage
       // the new eager checkpoint is self-contained; round N-1's blocks
       // are dead now (round 1's `prevLabels` is lazy — release no-ops)
       Ckpt.release(prevLabels)
@@ -1018,12 +1004,6 @@ object Dedup {
           "a partial labeling would be wrong — raise maxIters")
     Ckpt.release(edges) // returned plan reads only the final labels
     labels.select(col("node").as("doc_id"), col("lbl").as("rep_doc_id"))
-    } finally {
-      // every checkpoint is eager, so restoring the dir here is safe —
-      // no lazy checkpoint of ours can fire after the call returns
-      if (checkpointDir.isDefined)
-        prevCheckpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    }
   }
 
   /** Multi-source BFS layers over an undirected pair graph: each node's
@@ -1043,35 +1023,23 @@ object Dedup {
     * frontier — a partial layering is wrong, never silently returned.
     *
     * Input: (a, b) pairs with a < b. Output: (doc_id, layer) for every
-    * node in the pair graph; representatives are layer 0.
-    *
-    * `checkpointDir` switches localCheckpoint (fast, but lineage dies
-    * with an executor) to reliable checkpointing — same contract as
-    * [[componentsFromPairs]]; set it on a real cluster.
+    * node in the pair graph; representatives are layer 0. Checkpoints
+    * are reliable or local per [[Ckpt]]'s policy.
     */
-  def bfsLayers(pairs: DataFrame, maxIters: Int = 20,
-                checkpointDir: Option[String] = None): DataFrame = Ckpt.scoped {
-    val spark = pairs.sparkSession
-    val prevCheckpointDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def save(df: DataFrame): DataFrame =
-      Ckpt.track(
-        if (checkpointDir.isDefined) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true))
-    try {
-    val p0 = save(pairs.select(col("a"), col("b")))
-    val edges = save(p0.select(col("a").as("u"), col("b").as("v"))
+  def bfsLayers(pairs: DataFrame, maxIters: Int = 20): DataFrame = Ckpt.scoped {
+    val p0 = Ckpt.save(pairs.select(col("a"), col("b")))
+    val edges = Ckpt.save(p0.select(col("a").as("u"), col("b").as("v"))
       .unionByName(p0.select(col("b").as("u"), col("a").as("v")))
       .repartition(col("u")))
-    val comp = componentsFromPairs(p0, checkpointDir = checkpointDir)
-    var visited = save(comp.filter(col("doc_id") === col("rep_doc_id"))
+    val comp = componentsFromPairs(p0)
+    var visited = Ckpt.save(comp.filter(col("doc_id") === col("rep_doc_id"))
       .select(col("doc_id").as("node"), lit(0L).as("layer")))
     Ckpt.release(p0) // superseded: edges + the initial visited are saved
     var frontier = visited
     var layer = 1
     var done = false
     while (!done && layer <= maxIters) {
-      val next = save(edges
+      val next = Ckpt.save(edges
         .join(frontier.select(col("node").as("u")), Seq("u"))
         .select(col("v").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
@@ -1082,7 +1050,7 @@ object Dedup {
         done = true
       } else {
         val prevVisited = visited
-        visited = save(visited.unionByName(next))
+        visited = Ckpt.save(visited.unionByName(next))
         Ckpt.release(prevVisited) // new visited checkpoint supersedes it
         frontier = next
         layer += 1
@@ -1099,11 +1067,6 @@ object Dedup {
     Ckpt.release(edges) // returned plan reads only the final visited
     if (!(frontier eq visited)) Ckpt.release(frontier)
     visited.select(col("node").as("doc_id"), col("layer"))
-    } finally {
-      // every checkpoint is eager, so restoring the dir here is safe
-      if (checkpointDir.isDefined)
-        prevCheckpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    }
   }
 
   /** Neighborhood-Jaccard link prediction over an undirected pair

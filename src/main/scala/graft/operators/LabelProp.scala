@@ -23,10 +23,8 @@ import org.apache.spark.sql.functions._
   * the label table against the pre-partitioned frozen edge table plus
   * two hash aggregates — (node, lbl) counts, then per-node argmax as
   * min(struct(-n, lbl)) (the mode_event_cents trick: map-side
-  * combinable, no ranking window, no skewable single partition). Each
-  * round's label table is checkpointed to cut lineage; pass a reliable
-  * `checkpointDir` (HDFS/S3) on a cluster, localCheckpoint otherwise —
-  * same contract as componentsFromPairs.
+  * combinable, no ranking window, no skewable single partition).
+  * Checkpoints are reliable or local per [[Ckpt]]'s policy.
   */
 object LabelProp {
 
@@ -35,15 +33,14 @@ object LabelProp {
     * pair MULTISET exactly as shipped (each (a,b) row contributes one
     * vote in each direction every round).
     */
-  def communities(pairs: DataFrame, iters: Int,
-                  checkpointDir: Option[String] = None): DataFrame = {
+  def communities(pairs: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    withCheckpointDir(pairs, checkpointDir) { save =>
+    Ckpt.scoped {
       // Materialize the caller's pair pipeline once, then the symmetric
       // + self-loop edge table pre-partitioned on the per-round join
       // key, so every round shuffles only the (small, changing) label
       // table — the componentsFromPairs layout, for the same reason.
-      val p0 = save(pairs.select(col("a"), col("b")))
+      val p0 = Ckpt.save(pairs.select(col("a"), col("b")))
       val sym = p0.select(col("a").as("u"), col("b").as("v"))
         .unionByName(p0.select(col("b").as("u"), col("a").as("v")))
       // Self-votes do NOT ride the edge table: a self-loop row would
@@ -51,10 +48,10 @@ object LabelProp {
       // of the labels table — every round. Unioning labels in directly
       // keeps the distinct-self-loop rows out of the checkpointed edge
       // table and out of every per-round join probe.
-      val edges = save(sym.repartition(col("v")))
+      val edges = Ckpt.save(sym.repartition(col("v")))
       // Labels start as node ids, so round 1's self-votes are the node
       // set itself — the only place the nodes-distinct is still needed.
-      val nodes = save(sym.select(col("u")).distinct())
+      val nodes = Ckpt.save(sym.select(col("u")).distinct())
       Ckpt.release(p0) // superseded: later plans read edges/nodes only
       propagate(edges, nodes, iters)
     }
@@ -92,9 +89,8 @@ object LabelProp {
     * per round, the round-15 shape. Both regimes are exact and the
     * decision is recorded in the Guard registry.
     */
-  def communitiesDistinct(rawPairs: DataFrame, iters: Int,
-                          checkpointDir: Option[String] = None): DataFrame =
-    communitiesDistinctBudget(rawPairs, iters, checkpointDir, BCAST_BUDGET_MB)
+  def communitiesDistinct(rawPairs: DataFrame, iters: Int): DataFrame =
+    communitiesDistinctBudget(rawPairs, iters, BCAST_BUDGET_MB)
 
   private[operators] val BCAST_BUDGET_MB = 256L
 
@@ -103,10 +99,9 @@ object LabelProp {
     * any graph). Results never depend on it.
     */
   private[operators] def communitiesDistinctBudget(rawPairs: DataFrame,
-      iters: Int, checkpointDir: Option[String],
-      budgetMB: Long): DataFrame = {
+      iters: Int, budgetMB: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    withCheckpointDir(rawPairs, checkpointDir) { save =>
+    Ckpt.scoped {
       val sym = rawPairs.select(col("a").as("u"), col("b").as("v"))
         .unionByName(rawPairs.select(col("b").as("u"), col("a").as("v")))
       // PERSISTED, not checkpointed: a checkpoint's LogicalRDD drops
@@ -134,8 +129,8 @@ object LabelProp {
         // cost, and only in the giant-|V| regime where the per-round
         // shuffles dominate it anyway.
         Guard.record("lpa_votes", s"votes=shuffle nV=$nV budgetMB=$budgetMB")
-        val edgesByV = save(edges.repartition(col("v")))
-        val nodesCk = save(nodes)
+        val edgesByV = Ckpt.save(edges.repartition(col("v")))
+        val nodesCk = Ckpt.save(nodes)
         edges.unpersist()
         nodes.unpersist()
         propagate(edgesByV, nodesCk, iters)
@@ -218,25 +213,6 @@ object LabelProp {
     }
     labels
   }
-
-  /** Shared scope/checkpoint plumbing: runs `body` under a Ckpt scope
-    * with the session checkpoint dir swapped in (and restored), handing
-    * it the tracked eager-checkpoint function.
-    */
-  private def withCheckpointDir(df: DataFrame,
-      checkpointDir: Option[String])(
-      body: (DataFrame => DataFrame) => DataFrame): DataFrame =
-    Ckpt.scoped {
-      val spark = df.sparkSession
-      val prevCheckpointDir = spark.sparkContext.getCheckpointDir
-      checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-      def save(d: DataFrame): DataFrame =
-        Ckpt.track(
-          if (checkpointDir.isDefined) d.checkpoint(eager = true)
-          else d.localCheckpoint(eager = true))
-      try body(save)
-      finally prevCheckpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    }
 
   /** The `iters` synchronous rounds over a frozen edge table
     * (pre-partitioned by v) and the node set.

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * the degree-annotated edge list on src, one hash aggregate keyed by
   * dst with map-side partial sums. The edge list is the big side and is
   * scanned once per iteration; ranks are |V| rows. Nothing collects to
-  * the driver, and the rank lineage is CUT every `checkpointEvery`
-  * iterations (eager checkpoint, the [[Dedup.componentsFromPairs]]
+  * the driver, and the rank lineage is CUT every [[CHECKPOINT_EVERY]]
+  * iterations (eager [[Ckpt.save]], the [[Dedup.componentsFromPairs]]
   * pattern) — without the cut the plan tree nests one join + aggregate
   * per iteration and analysis/optimization cost explodes at tens of
   * iterations even though each executed stage is cheap.
@@ -40,73 +40,13 @@ object PageRank {
 
   /** `edges`: (src: long, dst: long), pre-deduplicated. Returns
     * (node: long, rank: long) after `iters` damped updates from a
-    * uniform start of `scale` per node.
-    *
-    * `checkpointEvery`: cut the rank lineage after this many iterations
-    * (eager; `checkpointDir` selects a reliable checkpoint for real
-    * clusters, otherwise localCheckpoint). Checkpoints change no values
-    * — only the plan depth — so any cadence yields identical ranks.
+    * uniform start of `scale` per node: [[personalizedRanks]] with every
+    * node a seed. Checkpoints are reliable or local per [[Ckpt]]'s
+    * policy, and change no values, only the plan depth.
     */
-  def ranks(edges: DataFrame, iters: Int, scale: Long = 1000000L,
-            checkpointEvery: Int = 8,
-            checkpointDir: Option[String] = None): DataFrame = Ckpt.scoped {
-    require(iters >= 1, "PageRank needs at least one iteration")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val spark = edges.sparkSession
-    val prevCheckpointDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def save(df: DataFrame): DataFrame =
-      Ckpt.track(
-        if (checkpointDir.isDefined) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true))
-    try {
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // Persist the degree-annotated edge list: iteration i's lineage
-    // nests iterations 1..i-1, so the final plan otherwise embeds (and
-    // recomputes) this subtree once per iteration — ReuseExchange does
-    // not dedupe it because per-consumer pruning makes the copies
-    // structurally different. Many consumers, narrow columns: the
-    // persist profile. At sf0.1 the effect is small (~5%, the edge
-    // build is one distinct over the fact table) but it grows linearly
-    // with iteration count and scan cost.
-    val ed = edges.join(deg, Seq("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // nodes is consumed by EVERY iteration's rank rebuild (and the
-    // initial ranks) — unpersisted, each round re-runs the degree
-    // aggregate over the raw edge lineage (ScanAudit: lineitem x8 for
-    // 6 iterations in pagerank_bipartite). personalizedRanks already
-    // persisted its node table; same treatment here.
-    val nodes = deg.select(col("src").as("node"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.withColumn("rank", lit(scale))
-    var lastCkpt: DataFrame = null
-    for (i <- 1 to iters) {
-      val contrib = ed.join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr("rank div deg").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("s"))
-      ranks = nodes.join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          expr(s"(15 * cast($scale as bigint) + 85 * coalesce(s, 0)) div 100")
-            .as("rank"))
-      // Cut the growing lineage; the LAST iteration stays lazy so the
-      // caller's downstream plan composes with it as usual. Each new
-      // eager periodic checkpoint supersedes the previous one.
-      if (i % checkpointEvery == 0 && i < iters) {
-        val prevCkpt = lastCkpt
-        ranks = save(ranks)
-        lastCkpt = ranks
-        if (prevCkpt != null) Ckpt.release(prevCkpt)
-      }
-    }
-    ranks
-    } finally {
-      // every checkpoint is eager, so restoring the dir here is safe —
-      // no lazy checkpoint of ours can fire after the call returns
-      if (checkpointDir.isDefined)
-        prevCheckpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    }
-  }
+  def ranks(edges: DataFrame, iters: Int,
+            scale: Long = 1000000L): DataFrame =
+    walk(edges, None, iters, scale, CHECKPOINT_EVERY)
 
   /** Personalized PageRank: the damped walk teleports to the SEED SET
     * instead of everywhere, so rank measures proximity to the seeds —
@@ -128,53 +68,64 @@ object PageRank {
     * reused every round). Same src-coverage contract as [[ranks]].
     */
   def personalizedRanks(edges: DataFrame, seeds: DataFrame, iters: Int,
-                        scale: Long = 1000000L, checkpointEvery: Int = 8,
-                        checkpointDir: Option[String] = None): DataFrame = Ckpt.scoped {
-    require(iters >= 1, "personalizedRanks needs at least one iteration")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val spark = edges.sparkSession
-    val prevCheckpointDir = spark.sparkContext.getCheckpointDir
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def save(df: DataFrame): DataFrame =
-      Ckpt.track(
-        if (checkpointDir.isDefined) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true))
-    try {
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val ed = edges.join(deg, Seq("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // node table with its seed flag: consumed by every iteration's
-      // rebuild (and the initial ranks), so persist — without it the
-      // degree aggregate + broadcast join re-run once per round.
-      val nodes = deg.select(col("src").as("node"))
-        .join(broadcast(seeds.select(col("node")).distinct()
+                        scale: Long = 1000000L): DataFrame =
+    walk(edges, Some(seeds), iters, scale, CHECKPOINT_EVERY)
+
+  /** Iterations between lineage cuts. */
+  private[operators] val CHECKPOINT_EVERY = 8
+
+  /** The walk over (node, is_seed), `seeds = None` flagging every node,
+    * with the checkpoint cadence as a parameter (the test seam: any
+    * cadence yields identical ranks).
+    */
+  private[operators] def walk(edges: DataFrame, seeds: Option[DataFrame],
+      iters: Int, scale: Long, checkpointEvery: Int): DataFrame = Ckpt.scoped {
+    require(iters >= 1, "PageRank needs at least one iteration")
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    // Persist the degree-annotated edge list: iteration i's lineage
+    // nests iterations 1..i-1, so the final plan otherwise embeds (and
+    // recomputes) this subtree once per iteration — ReuseExchange does
+    // not dedupe it because per-consumer pruning makes the copies
+    // structurally different. Many consumers, narrow columns: the
+    // persist profile. At sf0.1 the effect is small (~5%, the edge
+    // build is one distinct over the fact table) but it grows linearly
+    // with iteration count and scan cost.
+    val ed = edges.join(deg, Seq("src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The node table with its seed flag is consumed by EVERY
+    // iteration's rank rebuild (and the initial ranks) — unpersisted,
+    // each round re-runs the degree aggregate (and the seed join) over
+    // the raw edge lineage (ScanAudit: lineitem x8 for 6 iterations in
+    // pagerank_bipartite).
+    val node = deg.select(col("src").as("node"))
+    val nodes = (seeds match {
+      case None => node.withColumn("is_seed", lit(1L))
+      case Some(s) => node
+        .join(broadcast(s.select(col("node")).distinct()
           .withColumn("is_seed", lit(1L))), Seq("node"), "left")
         .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var ranks = nodes.select(col("node"),
-        (col("is_seed") * scale).as("rank"))
-      var lastCkpt: DataFrame = null
-      for (i <- 1 to iters) {
-        val contrib = ed.join(ranks, col("src") === col("node"))
-          .select(col("dst"), expr("rank div deg").as("c"))
-          .groupBy(col("dst"))
-          .agg(sum(col("c")).as("s"))
-        ranks = nodes.join(contrib, col("node") === col("dst"), "left")
-          .select(col("node"),
-            expr(s"(15 * cast($scale as bigint) * is_seed " +
-              "+ 85 * coalesce(s, 0)) div 100").as("rank"))
-        // each new eager periodic checkpoint supersedes the previous
-        if (i % checkpointEvery == 0 && i < iters) {
-          val prevCkpt = lastCkpt
-          ranks = save(ranks)
-          lastCkpt = ranks
-          if (prevCkpt != null) Ckpt.release(prevCkpt)
-        }
+    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var ranks = nodes.select(col("node"), (col("is_seed") * scale).as("rank"))
+    var lastCkpt: DataFrame = null
+    for (i <- 1 to iters) {
+      val contrib = ed.join(ranks, col("src") === col("node"))
+        .select(col("dst"), expr("rank div deg").as("c"))
+        .groupBy(col("dst"))
+        .agg(sum(col("c")).as("s"))
+      ranks = nodes.join(contrib, col("node") === col("dst"), "left")
+        .select(col("node"),
+          expr(s"(15 * cast($scale as bigint) * is_seed " +
+            "+ 85 * coalesce(s, 0)) div 100").as("rank"))
+      // Cut the growing lineage; the LAST iteration stays lazy so the
+      // caller's downstream plan composes with it as usual. Each new
+      // eager periodic checkpoint supersedes the previous one.
+      if (i % checkpointEvery == 0 && i < iters) {
+        val prevCkpt = lastCkpt
+        ranks = Ckpt.save(ranks)
+        lastCkpt = ranks
+        if (prevCkpt != null) Ckpt.release(prevCkpt)
       }
-      ranks
-    } finally {
-      if (checkpointDir.isDefined)
-        prevCheckpointDir.foreach(spark.sparkContext.setCheckpointDir)
     }
+    ranks
   }
 }

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * distance table against the edge list (keyed by source node) plus a
   * min-aggregate — both map-side combinable, no driver-side graph. The
   * edge table is materialized once up front and every round's distance
-  * table is eagerly local-checkpointed, so lineage stays flat and the
-  * (potentially expensive) edge-building pipeline upstream runs exactly
-  * once. H is small by construction; the frontier table is bounded by
-  * |V|, never by |paths|.
+  * table is eagerly checkpointed ([[Ckpt.save]]), so lineage stays
+  * flat and the (potentially expensive) edge-building pipeline upstream
+  * runs exactly once. H is small by construction; the frontier table is
+  * bounded by |V|, never by |paths|.
   */
 object ShortestPath {
 
@@ -30,11 +30,9 @@ object ShortestPath {
     */
   def boundedCheapestPaths(edges: DataFrame, source: Long,
                            maxHops: Int): DataFrame = Ckpt.scoped {
-    def save(df: DataFrame): DataFrame =
-      Ckpt.track(df.localCheckpoint(eager = true))
-    val e = save(edges.select(col("src"), col("dst"),
+    val e = Ckpt.save(edges.select(col("src"), col("dst"),
       col("cost").cast("long").as("cost")))
-    var dist = save(e.sparkSession.range(1)
+    var dist = Ckpt.save(e.sparkSession.range(1)
       .select(lit(source).cast("long").as("node"),
         lit(0L).as("min_cost")))
     var hop = 0
@@ -44,7 +42,7 @@ object ShortestPath {
         .select(e("dst").as("node"),
           (dist("min_cost") + e("cost")).as("min_cost"))
       val prevDist = dist
-      dist = save(dist.unionByName(relaxed)
+      dist = Ckpt.save(dist.unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("min_cost")).as("min_cost")))
       Ckpt.release(prevDist) // new eager checkpoint supersedes it
       hop += 1

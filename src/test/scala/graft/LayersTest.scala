@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.LabelProp
+import graft.operators.{Dedup, LabelProp}
 
 /** [[Layers.record]] attributes every job of its body to the call site
   * that started it, and sees only the jobs of its own body.
@@ -32,5 +32,17 @@ class LayersTest extends AnyFunSuite {
       second.sites.keys)
     assert(second.total.jobs > 0 && second.total.jobs < first.total.jobs)
     assert(Layers.record(spark)(())._2.sites.isEmpty)
+  }
+
+  test("operator checkpoints are attributed to the operator's line, not Ckpt") {
+    val chain = (1L to 6L).map(i => (i, i + 1)).toDF("a", "b")
+    val (_, rec) = Layers.record(spark) {
+      Dedup.componentsFromPairs(chain)
+        .write.format("noop").mode("overwrite").save()
+    }
+    val sites = rec.sites.keys
+    assert(sites.exists(_.startsWith("localCheckpoint at Dedup.scala")), sites)
+    assert(!sites.exists(_.contains("Ckpt.scala")), sites)
+    assert(rec.sites.values.map(_.jobs).sum == rec.total.jobs)
   }
 }

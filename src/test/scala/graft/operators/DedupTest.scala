@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.CheckpointDirs.{filesUnder, withCheckpointDir}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -204,9 +205,26 @@ class DedupTest extends AnyFunSuite {
   test("componentsFromPairs: reliable checkpoint dir mode matches local mode") {
     val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
-    val got = Dedup.componentsFromPairs(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
+    val got = withCheckpointDir(dir) {
+      Dedup.componentsFromPairs(pairs).as[(Long, Long)].collect().toMap
+    }
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    assert(filesUnder(dir) > 0, "no reliable checkpoint was written")
+  }
+
+  test("componentsFromPairs leaves the context's checkpoint dir unchanged") {
+    val sc = spark.sparkContext
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    assert(sc.getCheckpointDir.isEmpty)
+    Dedup.componentsFromPairs(pairs).collect()
+    assert(sc.getCheckpointDir.isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("cc_keep").toString
+    withCheckpointDir(dir) {
+      val set = sc.getCheckpointDir
+      Dedup.componentsFromPairs(pairs).collect()
+      assert(sc.getCheckpointDir == set)
+    }
+    assert(sc.getCheckpointDir.isEmpty)
   }
 
   test("componentsFromPairs throws (not silently wrong) when maxIters too low") {
@@ -246,10 +264,12 @@ class DedupTest extends AnyFunSuite {
   test("bfsLayers: reliable checkpoint dir mode matches local mode") {
     val dir = java.nio.file.Files.createTempDirectory("bfs_ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
-    val got = Dedup.bfsLayers(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
+    val got = withCheckpointDir(dir) {
+      Dedup.bfsLayers(pairs).as[(Long, Long)].collect().toMap
+    }
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L,
       10L -> 0L, 11L -> 1L))
+    assert(filesUnder(dir) > 0, "no reliable checkpoint was written")
   }
 
   test("bfsLayers throws (not silently partial) when maxIters < diameter") {

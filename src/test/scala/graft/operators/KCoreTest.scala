@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.CheckpointDirs.{filesUnder, withCheckpointDir}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -104,5 +105,14 @@ class KCoreTest extends AnyFunSuite {
     val h2 = KCore.corenessHIndex(g.toDF("a", "b"), rounds = 2)
       .as[(Long, Long)].collect().toMap
     assert(h2 == exact)
+  }
+
+  test("h-index: reliable checkpoint dir mode matches local mode") {
+    val dir = java.nio.file.Files.createTempDirectory("kcore_ckpt").toString
+    val g = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("a", "b")
+    def run() = KCore.corenessHIndex(g, rounds = 2)
+      .as[(Long, Long)].collect().toMap
+    assert(withCheckpointDir(dir)(run()) == run())
+    assert(filesUnder(dir) > 0, "no reliable checkpoint was written")
   }
 }

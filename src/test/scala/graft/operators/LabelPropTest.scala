@@ -86,7 +86,7 @@ class LabelPropTest extends AnyFunSuite {
         .as[(Long, Long)].collect().toMap
       assert(bc == ref, s"broadcast regime, $tag, iters=$iters")
       val sh = LabelProp.communitiesDistinctBudget(data.toDF("a", "b"), iters,
-          checkpointDir = None, budgetMB = 0)
+          budgetMB = 0)
         .as[(Long, Long)].collect().toMap
       assert(sh == ref, s"shuffle regime, $tag, iters=$iters")
     }

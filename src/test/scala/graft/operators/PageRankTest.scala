@@ -54,10 +54,10 @@ class PageRankTest extends AnyFunSuite {
   test("checkpoint cadence changes no values (8 vs never)") {
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 1L), (1L, 3L))
       .toDF("src", "dst")
-    val cut = PageRank.ranks(edges, iters = 10, checkpointEvery = 3)
-      .orderBy("node").as[(Long, Long)].collect().toSeq
-    val plain = PageRank.ranks(edges, iters = 10, checkpointEvery = 1000)
-      .orderBy("node").as[(Long, Long)].collect().toSeq
+    val cut = PageRank.walk(edges, None, iters = 10, scale = 1000000L,
+      checkpointEvery = 3).orderBy("node").as[(Long, Long)].collect().toSeq
+    val plain = PageRank.walk(edges, None, iters = 10, scale = 1000000L,
+      checkpointEvery = 1000).orderBy("node").as[(Long, Long)].collect().toSeq
     assert(cut == plain)
   }
 
@@ -118,10 +118,11 @@ class PageRankTest extends AnyFunSuite {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     val seeds = Seq(2L, 4L).toDF("node")
-    val cut = PageRank.personalizedRanks(edges, seeds, iters = 9,
+    val cut = PageRank.walk(edges, Some(seeds), iters = 9, scale = 1000000L,
       checkpointEvery = 2).orderBy("node").as[(Long, Long)].collect().toSeq
-    val plain = PageRank.personalizedRanks(edges, seeds, iters = 9,
-      checkpointEvery = 1000).orderBy("node").as[(Long, Long)].collect().toSeq
+    val plain = PageRank.walk(edges, Some(seeds), iters = 9,
+      scale = 1000000L, checkpointEvery = 1000)
+      .orderBy("node").as[(Long, Long)].collect().toSeq
     assert(cut == plain)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.CheckpointDirs.{filesUnder, withCheckpointDir}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -23,6 +24,12 @@ class ShortestPathTest extends AnyFunSuite {
     assert(run(3) == Map(0L -> 0L, 1L -> 10L, 2L -> 20L, 3L -> 30L))
     // extra hops beyond the diameter change nothing
     assert(run(5) == run(3))
+  }
+
+  test("reliable checkpoint dir mode matches local mode") {
+    val dir = java.nio.file.Files.createTempDirectory("sp_ckpt").toString
+    assert(withCheckpointDir(dir)(run(3)) == run(3))
+    assert(filesUnder(dir) > 0, "no reliable checkpoint was written")
   }
 
   test("unreachable nodes are absent; source costs zero") {
