@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The reference's full sync run as one composable pipeline
   * (SURVEY §3.3): ERP truth vs Canvas mirror per entity → missing-row
@@ -38,25 +43,68 @@ object SyncPipeline {
     * dataset names (in order), the change report and per-entity metrics.
     *
     * Each entity's update set carries a Spark [[Observation]], so
-    * per-entity row and null-key counts are collected DURING the sink
-    * write — no second pass over the data (a separate count() would
-    * re-execute the whole diff per entity, and at 100 TB the re-scan
-    * costs more than the sync itself). Returned metrics cover exactly
-    * the sunk entities (an observation only resolves after an action has
-    * run on its dataset, so the sink must run one).
+    * per-entity row, null-key and per-status counts are collected DURING
+    * the sink write — no second pass over the data (a separate count()
+    * would re-execute the whole diff per entity, and at 100 TB the
+    * re-scan costs more than the sync itself). A row has a null key when
+    * any of its key columns is null: such a row can never match. The
+    * change report is built from those per-status counts as a local
+    * frame (dataset, status, n), one row per sunk entity and non-zero
+    * status; reading it runs no Spark job, and it describes exactly the
+    * rows that were uploaded, even when the sink applies them to the
+    * mirror. Returned metrics cover exactly the sunk entities (an
+    * observation only resolves after an action has run on its dataset,
+    * so the sink must run one).
     */
   def runObserved(entities: Seq[Entity], order: Seq[String])
                  (sink: (String, DataFrame) => Unit)
       : (Seq[String], DataFrame, Map[String, Map[String, Any]]) = {
     val obs = entities.map(e => e.name -> Observation(s"sync_${e.name}")).toMap
-    val keyOf = entities.map(e => e.name -> e.keys.head).toMap
+    val keysOf = entities.map(e => e.name -> e.keys).toMap
+    val byStatus = udaf(StatusCounts, Encoders.STRING)
     val updates = computeUpdates(entities).map { case (name, df) =>
+      val nullKey = keysOf(name).map(col(_).isNull).reduce(_ || _)
       name -> df.observe(obs(name),
         count(lit(1)).as("n_rows"),
-        sum(when(col(keyOf(name)).isNull, 1L).otherwise(0L)).as("n_null_key"))
+        sum(when(nullKey, 1L).otherwise(0L)).as("n_null_key"),
+        byStatus(SyncSink.reportStatus(df)).as("n_by_status"))
     }
     val sunk = SyncSink.uploadAll(updates, order)(sink)
     val metrics = sunk.map(n => n -> obs(n).get).toMap
-    (sunk, SyncSink.changeReport(updates), metrics)
+    val lines = for {
+      n <- sunk
+      s <- metrics(n)("n_by_status").asInstanceOf[Seq[Row]]
+    } yield Row(n, s.getString(0), s.getLong(1))
+    val report = SparkSession.active.createDataFrame(lines.asJava, ReportSchema)
+    (sunk, report, metrics)
+  }
+
+  private val ReportSchema = StructType(Seq(
+    StructField("dataset", StringType, nullable = false),
+    StructField("status", StringType),
+    StructField("n", LongType, nullable = false)))
+
+  /** Rows per report status. The state is one counter per distinct
+    * status (a null status is counted as its own), and every counter it
+    * emits is non-zero.
+    */
+  private object StatusCounts
+      extends Aggregator[String, Seq[(String, Long)], Seq[(String, Long)]] {
+    def zero: Seq[(String, Long)] = Vector.empty
+    def reduce(b: Seq[(String, Long)], status: String): Seq[(String, Long)] =
+      add(b, status, 1L)
+    def merge(a: Seq[(String, Long)], b: Seq[(String, Long)]): Seq[(String, Long)] =
+      b.foldLeft(a) { case (acc, (status, n)) => add(acc, status, n) }
+    def finish(r: Seq[(String, Long)]): Seq[(String, Long)] = r
+
+    private def add(b: Seq[(String, Long)], status: String, n: Long) =
+      b.indexWhere(_._1 == status) match {
+        case -1 => b :+ (status -> n)
+        case i => b.updated(i, status -> (b(i)._2 + n))
+      }
+
+    // Derived once: every observed upload plans the aggregate anew.
+    lazy val bufferEncoder: Encoder[Seq[(String, Long)]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Seq[(String, Long)]] = bufferEncoder
   }
 }

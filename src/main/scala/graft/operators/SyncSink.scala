@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ordered multi-sink + sync report (SURVEY §2.1 K3/K4, §2.4 A3).
@@ -36,20 +36,27 @@ object SyncSink {
     }
   }
 
+  /** A row's report status: the update frame's `status` column, or
+    * "created" when the frame has none (anti-join entities without one).
+    */
+  def reportStatus(df: DataFrame): Column =
+    if (df.columns.contains("status")) col("status") else lit("created")
+
   /** Per-entity change statistics across all updates (A3): the counts the
     * Canvas side computes and the reference consumes
-    * (src/canvas.py:137-150). One union + one aggregation.
+    * (src/canvas.py:137-150), recomputed from the update frames. It
+    * re-executes every diff (one union + one aggregation over all of
+    * them), so it counts what the diffs yield now, not what was uploaded.
+    * `SyncPipeline.runObserved` does not call it: it builds the same
+    * report from the counts its uploads observed. Kept as the reference
+    * that report is tested against.
     */
-  def changeReport(updates: Map[String, DataFrame]): DataFrame = {
-    val tagged = updates.map { case (name, df) =>
-      val status =
-        if (df.columns.contains("status")) col("status") else lit("created")
-      df.select(lit(name).as("dataset"), status.as("status"))
-    }
-    tagged.reduce(_ unionByName _)
+  def changeReport(updates: Map[String, DataFrame]): DataFrame =
+    updates.map { case (name, df) =>
+      df.select(lit(name).as("dataset"), reportStatus(df).as("status"))
+    }.reduce(_ unionByName _)
       .groupBy(col("dataset"), col("status"))
       .agg(count(lit(1)).as("n"))
-  }
 
   /** Write the sync report as text lines (K4, report.txt shape:
     * per-dataset counts then warnings; src/canvas.py:136-162).

@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Layers, TestSpark}
+import graft.sources.Jdbc
 
 /** Golden end-to-end test of the reference's sync semantics
   * (SURVEY §3.3, §5 item 5): ERP truth vs mirror → updates → FK-ordered
@@ -100,5 +102,88 @@ class SyncPipelineTest extends AnyFunSuite {
     val rep = report.as[(String, String, Long)].collect()
     assert(rep.map(_._1).toSet == SyncSink.FK_ORDER.toSet)
     assert(rep.collect { case (_, "created", n) => n }.sum == 6L)
+  }
+
+  test("n_null_key counts a null in any key column, not only the first") {
+    // (11, null) has a non-null user_id but can never match on course_id.
+    val truth = Seq((10L, Some("c1")), (11L, None: Option[String]))
+      .toDF("user_id", "course_id")
+    val mirror = Seq((10L, "c1")).toDF("user_id", "course_id")
+    val entities = Seq(SyncPipeline.Entity("daily_enrollment", truth, mirror,
+      Seq("user_id", "course_id"), symmetric = true))
+    val (_, _, metrics) =
+      SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) { (_, df) =>
+        df.collect(); ()
+      }
+    assert(metrics("daily_enrollment")("n_rows") == 1L)
+    assert(metrics("daily_enrollment")("n_null_key") == 1L)
+  }
+
+  test("the report counts what was uploaded, even when the sink applies it to the mirror") {
+    // Derby mirror; the sink appends each upload to its mirror table, as
+    // applying the SIS import would. A report that re-ran the diffs after
+    // the uploads would find nothing missing.
+    val dir = java.nio.file.Files.createTempDirectory("derby").toString
+    val conn = Jdbc.Conn(s"jdbc:derby:$dir/syncdb;create=true")
+    val tables = Map("faculty_users" -> "MIRROR_USERS", "courses" -> "MIRROR_COURSES")
+    Jdbc.overwriteMirror(Seq((1L, "prof.a")).toDF("id_num", "login_id"),
+      conn, tables("faculty_users"), tables.values.toSet)
+    Jdbc.overwriteMirror(Seq(("c1", "Intro")).toDF("crs_cde", "title"),
+      conn, tables("courses"), tables.values.toSet)
+    val entities = Seq(
+      SyncPipeline.Entity("faculty_users",
+        Seq((1L, "prof.a"), (2L, "prof.b"), (3L, "prof.c")).toDF("id_num", "login_id"),
+        Jdbc.readTable(spark, conn, tables("faculty_users")), Seq("id_num")),
+      SyncPipeline.Entity("courses",
+        Seq(("c1", "Intro"), ("c2", "Algo")).toDF("crs_cde", "title"),
+        Jdbc.readTable(spark, conn, tables("courses")), Seq("crs_cde")))
+
+    val (_, report, _) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
+      (name, df) => Jdbc.append(df, conn, tables(name))
+    }
+    assert(Jdbc.readTable(spark, conn, tables("faculty_users")).count() == 3)
+    val (rows, rec) = Layers.record(spark)(report.collect())
+    assert(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet == Set(
+      ("faculty_users", "created", 2L),
+      ("courses", "created", 1L)))
+    assert(rec.total.jobs == 0, rec.sites)
+  }
+
+  test("the observed report equals the recomputed changeReport") {
+    // A null status and statuses carried on the truth side of anti-join
+    // entities, a plain entity (created), an empty update set (no line)
+    // and the symmetric add/drop entity.
+    val faculty = Seq((1L, Some("active")), (2L, None: Option[String]), (3L, None))
+      .toDF("id_num", "status")
+    val students = Seq((4L, "active"), (5L, "inactive"), (6L, "active"))
+      .toDF("id_num", "status")
+    val users = Seq((1L, "active")).toDF("id_num", "status")
+    val courses = Seq(("c1", "Intro"), ("c2", "Algo")).toDF("crs_cde", "title")
+    val sections = Seq(("s1", "c1")).toDF("section_id", "crs_cde")
+    val enrTruth = Seq((10L, "c1"), (11L, "c1")).toDF("user_id", "course_id")
+    val enrMirror = Seq((10L, "c1"), (12L, "c2")).toDF("user_id", "course_id")
+    val entities = Seq(
+      SyncPipeline.Entity("faculty_users", faculty, users, Seq("id_num")),
+      SyncPipeline.Entity("student_users", students, users, Seq("id_num")),
+      SyncPipeline.Entity("courses", courses,
+        Seq(("c1", "Intro")).toDF("crs_cde", "title"), Seq("crs_cde")),
+      SyncPipeline.Entity("sections", sections, sections, Seq("section_id")),
+      SyncPipeline.Entity("daily_enrollment", enrTruth, enrMirror,
+        Seq("user_id", "course_id"), symmetric = true))
+
+    val (_, report, _) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
+      (_, df) => df.collect(); ()
+    }
+    val observed = report.collect().toSet
+    val recomputed =
+      SyncSink.changeReport(SyncPipeline.computeUpdates(entities)).collect().toSet
+    assert(observed == recomputed)
+    assert(observed == Set(
+      Row("faculty_users", null, 2L),
+      Row("student_users", "active", 2L),
+      Row("student_users", "inactive", 1L),
+      Row("courses", "created", 1L),
+      Row("daily_enrollment", "active", 1L),
+      Row("daily_enrollment", "deleted", 1L)))
   }
 }
