@@ -423,11 +423,7 @@ object Dedup {
         // NOT candidates + re-verification, which would pay the join
         // fan-out twice and make the fallback slower than the tier it
         // falls back to
-        inv.select(col("s"), col("doc_id").as("a"))
-          .join(inv.select(col("s"), col("doc_id").as("b")), Seq("s"))
-          .filter(col("a") < col("b"))
-          .groupBy(col("a"), col("b"))
-          .agg(count(lit(1)).as("inter"))
+        selfJoinInterCounts(inv)
     jaccardFromCounts(inter, shingleSizes(inv), threshold)
   }
 
@@ -445,13 +441,18 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
                         maxDf: Option[Int] = None): DataFrame = {
     val inv = materialized(applyDf(shingleRows(docs, n), maxDf))
-    val inter = inv.select(col("s"), col("doc_id").as("a"))
+    jaccardFromCounts(selfJoinInterCounts(inv), shingleSizes(inv), threshold)
+  }
+
+  /** Intersection counts (a, b, inter), a < b, straight off the
+    * inverted index's self-join (see [[ngramJaccardPairs]]).
+    */
+  private def selfJoinInterCounts(inv: DataFrame): DataFrame =
+    inv.select(col("s"), col("doc_id").as("a"))
       .join(inv.select(col("s"), col("doc_id").as("b")), Seq("s"))
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(inter, shingleSizes(inv), threshold)
-  }
 
   /** Rep-doc count up to which [[containmentPairs]]' verify broadcasts
     * its per-doc shingle arrays: at ~1.2 KB of array per doc the

@@ -33,14 +33,17 @@ object Ivm {
       .unionByName(da.join(db, key))
 
   /** Merge an old grouped-SUM state with delta contributions: union on
-    * (groupCols, measure) and re-aggregate. Additive-exact; both inputs
-    * must already be aggregated to one row per group.
+    * (groupCols, measures) and re-aggregate, summing each measure.
+    * Additive-exact; both inputs must already be aggregated to one row
+    * per group.
     */
   def mergeAggState(oldState: DataFrame, delta: DataFrame,
-                    groupCols: Seq[String], measure: String): DataFrame =
+                    groupCols: Seq[String], measures: String*): DataFrame = {
+    val sums = measures.map(m => sum(col(m)).as(m))
     oldState.unionByName(delta)
       .groupBy(groupCols.map(col): _*)
-      .agg(sum(col(measure)).as(measure))
+      .agg(sums.head, sums.tail: _*)
+  }
 
   /** Convenience: maintain SUM(measureExpr) grouped by groupCols over
     * A ⋈ B where both sides receive insert-only deltas. Returns the
@@ -99,9 +102,7 @@ object Ivm {
       .groupBy(gc: _*)
       .agg(sum(col("sign") * col(measure)).as(measure),
         sum(col("sign")).as("n_rows"))
-    oldView.unionByName(deltaView)
-      .groupBy(gc: _*)
-      .agg(sum(col(measure)).as(measure), sum(col("n_rows")).as("n_rows"))
+    mergeAggState(oldView, deltaView, groupCols, measure, "n_rows")
       .filter(col("n_rows") > 0)
       .drop("n_rows")
   }

@@ -153,13 +153,7 @@ object LabelProp {
     */
   private def propagateBroadcast(edges: DataFrame, nodes: DataFrame,
                                  iters: Int): DataFrame = {
-    val idBounds = nodes.agg(min(col("u")), max(col("u"))).first()
-    val packable = !idBounds.isNullAt(0) && idBounds.getLong(0) >= 0L &&
-      idBounds.getLong(1) < (1L << 31)
-    Guard.record("lpa", s"argmax=" +
-      s"${if (packable) "packed-long" else "struct"} " +
-      s"minId=${if (idBounds.isNullAt(0)) "-" else idBounds.getLong(0)} " +
-      s"maxId=${if (idBounds.isNullAt(1)) "-" else idBounds.getLong(1)}")
+    val packable = packableIds(nodes)
     var labels: DataFrame = nodes
       .select(col("u").as("node"), col("u").as("lbl"))
     for (round <- 1 to iters) {
@@ -214,18 +208,16 @@ object LabelProp {
     labels
   }
 
-  /** The `iters` synchronous rounds over a frozen edge table
-    * (pre-partitioned by v) and the node set.
+  /** Packed argmax guard, recorded as the `lpa` Guard line: when every
+    * node id fits in [0, 2^31) the per-(u,lbl) count n (<= |V|+1 <=
+    * 2^31) and the label pack into ONE non-negative long,
+    * (n << 31) + (2^31 - 1 - lbl), whose max IS "most votes, then
+    * smallest label" — a primitive max the hash aggregate runs entirely
+    * in codegen, vs the two-field struct ordering of
+    * min(struct(-n, lbl)). Ids outside the range (or negative) keep the
+    * struct path; both are exact.
     */
-  private def propagate(edges: DataFrame, nodes: DataFrame,
-                        iters: Int): DataFrame = {
-    // Packed argmax guard: when every node id fits in [0, 2^31) the
-    // per-(u,lbl) count n (<= |V|+1 <= 2^31) and the label pack into
-    // ONE non-negative long, (n << 31) + (2^31 - 1 - lbl), whose max
-    // IS "most votes, then smallest label" — a primitive max the
-    // hash aggregate runs entirely in codegen, vs the two-field
-    // struct ordering of min(struct(-n, lbl)). Ids outside the range
-    // (or negative) keep the struct path; both are exact.
+  private def packableIds(nodes: DataFrame): Boolean = {
     val idBounds = nodes.agg(min(col("u")), max(col("u"))).first()
     val packable = !idBounds.isNullAt(0) && idBounds.getLong(0) >= 0L &&
       idBounds.getLong(1) < (1L << 31)
@@ -233,6 +225,15 @@ object LabelProp {
       s"${if (packable) "packed-long" else "struct"} " +
       s"minId=${if (idBounds.isNullAt(0)) "-" else idBounds.getLong(0)} " +
       s"maxId=${if (idBounds.isNullAt(1)) "-" else idBounds.getLong(1)}")
+    packable
+  }
+
+  /** The `iters` synchronous rounds over a frozen edge table
+    * (pre-partitioned by v) and the node set.
+    */
+  private def propagate(edges: DataFrame, nodes: DataFrame,
+                        iters: Int): DataFrame = {
+    val packable = packableIds(nodes)
     var labels: DataFrame = nodes
       .select(col("u").as("node"), col("u").as("lbl"))
     for (round <- 1 to iters) {

@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,16 +62,23 @@ object SyncSink {
       .agg(count(lit(1)).as("n"))
 
   /** Write the sync report as text lines (K4, report.txt shape:
-    * per-dataset counts then warnings; src/canvas.py:136-162).
+    * per-dataset counts in (dataset, status) order, then warnings;
+    * src/canvas.py:136-162) to one `part-00000` file under `path`,
+    * replacing any earlier output. The report is a handful of rows, so
+    * it is sorted on the driver and written through the session's
+    * Hadoop FileSystem: a local report costs no Spark job.
     */
   def writeReport(spark: SparkSession, report: DataFrame, path: String,
                   warnings: Seq[String] = Nil): Unit = {
-    import spark.implicits._
-    val lines = report
-      .orderBy(col("dataset"), col("status"))
-      .collect()
+    val lines = report.collect()
+      .sortBy(r => (r.getString(0), Option(r.getString(1))))
       .map(r => s"${r.getString(0)}: ${r.getString(1)} = ${r.getLong(2)}")
       .toSeq ++ warnings.map(w => s"WARNING: $w")
-    lines.toDF("line").coalesce(1).write.mode("overwrite").text(path)
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir)) require(fs.delete(dir, true), s"delete $dir failed")
+    val out = fs.create(new Path(dir, "part-00000"))
+    try out.write(lines.map(_ + "\n").mkString.getBytes(UTF_8))
+    finally out.close()
   }
 }

@@ -366,12 +366,14 @@ object StreamingOps {
   }
 
   /** Idempotent micro-batch sink preserving the reference's
-    * truncate-reload mirror semantics: every batch fully overwrites the
+    * truncate-reload mirror semantics: every batch fully replaces the
     * target (same result on replay — exactly-once effective semantics).
+    * The batch never reads the old mirror, and a batch that fails
+    * mid-write leaves the previous mirror in place.
     */
   def overwriteMirrorEachBatch(stream: DataFrame, path: String) =
     stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      batch.write.mode("overwrite").parquet(path)
+      commitSnapshot(batch.sparkSession, path)(_ => batch)
     }
 
   /** Incremental keyed mirror maintenance — the streaming end of
@@ -402,25 +404,10 @@ object StreamingOps {
     */
   def upsertMirrorEachBatch(changes: DataFrame, keys: Seq[String], path: String) =
     changes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val s = batch.sparkSession
-      // Staged-rename swap (round 11, unified with the scd2/coverage/
-      // drift sinks): the next snapshot is written to a side directory
-      // and promoted with directory renames, so a crash mid-write
-      // leaves the live snapshot intact — the previous in-place
-      // overwrite had a window where the mirror was half-replaced. No
-      // (queryTag, batchId) marker is needed here: keyed upserts and
-      // deletes are replay-idempotent, so re-applying the batch after
-      // any crash converges to the same snapshot. Writing to staging
-      // also removes the localCheckpoint the in-place overwrite forced
-      // (the plan may now lazily read `path` while writing elsewhere).
-      val (dir, old, staging) = healSwap(path)
-      val mirror =
-        if (dir.exists()) s.read.parquet(path)
-        else batch.drop("op").limit(0)
-      graft.operators.Diff.applyChanges(mirror, batch, keys)
-        .write.mode("overwrite").parquet(staging.getPath)
-      commitSwap(dir, old, staging)
-      ()
+      commitSnapshot(batch.sparkSession, path) { existing =>
+        graft.operators.Diff.applyChanges(
+          existing.getOrElse(batch.drop("op").limit(0)), batch, keys)
+      }
     }
 
   /** Streaming incremental JOIN-view maintenance — the streaming end of
@@ -432,16 +419,10 @@ object StreamingOps {
     * sink).
     *
     * Additive merges are NOT replay-idempotent the way keyed upserts
-    * are, so exactly-once is enforced explicitly with the standard
-    * transactional-sink recipe, id COMMITTED WITH the data: the new
-    * snapshot is staged to a side directory together with a
-    * `_graft_commit` marker (underscore-prefixed, so parquet readers
-    * skip it) holding `queryTag:batchId`, then swapped into place with
-    * directory renames — a crash at any point leaves either the old
-    * snapshot+old id or the new snapshot+new id, never a snapshot whose
-    * id lags its data (the round-8 advisory's double-count window).
-    * Interrupted swaps are healed at the next batch (path.old rollback /
-    * cleanup).
+    * are, so exactly-once is enforced explicitly: the (queryTag,
+    * batchId) marker commits WITH the data ([[commitSnapshot]]), so a
+    * crash at any point leaves either the old snapshot+old id or the
+    * new snapshot+new id, never a snapshot whose id lags its data.
     *
     * `queryTag` names the logical feed: replays keyed on the SAME tag
     * with an already-applied batch id are skipped (restart-from-
@@ -458,14 +439,13 @@ object StreamingOps {
                           groupCols: Seq[String], measureCol: String,
                           path: String, queryTag: String = "default") =
     facts.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyOnceAtomically(batch.sparkSession, path, queryTag, batchId) { existing =>
+      commitSnapshot(batch.sparkSession, path, Some(queryTag -> batchId)) { existing =>
         val delta = batch.join(dim, key)
           .groupBy(groupCols.map(col): _*)
           .agg(sum(col(measureCol)).as(measureCol))
         graft.operators.Ivm.mergeAggState(
           existing.getOrElse(delta.limit(0)), delta, groupCols, measureCol)
       }
-      ()
     }
 
   /** CDC variant of [[ivmJoinAggEachBatch]]: the change feed carries a
@@ -482,19 +462,15 @@ object StreamingOps {
                       groupCols: Seq[String], measureCol: String,
                       path: String, queryTag: String = "default") =
     changes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyOnceAtomically(batch.sparkSession, path, queryTag, batchId) { existing =>
-        val gc = groupCols.map(col)
+      commitSnapshot(batch.sparkSession, path, Some(queryTag -> batchId)) { existing =>
         val delta = batch.join(dim, key)
-          .groupBy(gc: _*)
+          .groupBy(groupCols.map(col): _*)
           .agg(sum(col("sign") * col(measureCol)).as(measureCol),
             sum(col("sign")).as("n_rows"))
-        existing.getOrElse(delta.limit(0)).unionByName(delta)
-          .groupBy(gc: _*)
-          .agg(sum(col(measureCol)).as(measureCol),
-            sum(col("n_rows")).as("n_rows"))
+        graft.operators.Ivm.mergeAggState(existing.getOrElse(delta.limit(0)),
+            delta, groupCols, measureCol, "n_rows")
           .filter(col("n_rows") > 0)
       }
-      ()
     }
 
   /** Streaming SCD TYPE 2 dimension maintenance: each micro-batch
@@ -518,15 +494,15 @@ object StreamingOps {
     * the batch recompute; `seq` breaks equal-timestamp ties within a
     * batch.
     *
-    * Exactly-once via the same (queryTag, batchId) staged-rename commit
-    * as the IVM sinks — interval closing is not replay-idempotent, so
-    * the id commits with the data.
+    * Exactly-once via the same (queryTag, batchId) marker as the IVM
+    * sinks ([[commitSnapshot]]) — interval closing is not
+    * replay-idempotent, so the id commits with the data.
     */
   def scd2EachBatch(changes: DataFrame, keyCol: String, attrCol: String,
                     tsUsCol: String, seqCol: String,
                     path: String, queryTag: String = "default") =
     changes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyOnceAtomically(batch.sparkSession, path, queryTag, batchId) { existing =>
+      commitSnapshot(batch.sparkSession, path, Some(queryTag -> batchId)) { existing =>
         val w = Window.partitionBy(col("k")).orderBy(col("vf"), col("seq"))
         // seq rides along past compression: two runs with EQUAL vf
         // (same-timestamp observations of different attrs) are ordered
@@ -575,7 +551,6 @@ object StreamingOps {
             col("valid_to_us"))
         closedKept.unionByName(openUntouched).unionByName(tail)
       }
-      ()
     }
 
   /** Incremental interval-COVERAGE mirror: each micro-batch of keyed
@@ -588,9 +563,9 @@ object StreamingOps {
     * overwrite is exactly-once effective, the same argument as the
     * keyed-upsert mirror. CRASH safety is separate from replay safety —
     * idempotence cannot recover state a mid-overwrite crash deleted —
-    * so the snapshot goes through the same staged-rename swap as the
-    * batch-id sinks (minus the marker): a crash at any point leaves
-    * either the previous or the new mirror on disk, never a hole. Per
+    * so the snapshot commits through [[commitSnapshot]] without a
+    * marker: a crash at any point leaves either the previous or the new
+    * mirror on disk, never a hole. Per
     * batch only affected keys' islands rebuild (the batch-sized key set
     * broadcasts); a reader gets per-key coverage with one sum over the
     * mirror.
@@ -599,27 +574,20 @@ object StreamingOps {
                               stCol: String, enCol: String, tieCol: String,
                               path: String) =
     intervals.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val s = batch.sparkSession
-      val (dir, old, staging) = healSwap(path)
-      val b = graft.operators.Intervals
-        .mergedIslands(batch, col(keyCol), col(stCol), col(enCol), col(tieCol))
-        .select(col("k"), col("ist"), col("ien"))
-      val mirror =
-        if (dir.exists()) s.read.parquet(path)
-        else b.limit(0)
-      val affected = b.select(col("k")).distinct()
-      val untouched = mirror.join(broadcast(affected), Seq("k"), "left_anti")
-      val remerged = graft.operators.Intervals
-        .mergedIslands(
-          mirror.join(broadcast(affected), Seq("k")).unionByName(b),
-          col("k"), col("ist"), col("ien"), col("ien"))
-        .select(col("k"), col("ist"), col("ien"))
-      // staging write never touches the dir being read, so no lineage
-      // cut is needed before the swap
-      untouched.unionByName(remerged)
-        .write.mode("overwrite").parquet(staging.getPath)
-      commitSwap(dir, old, staging)
-      ()
+      commitSnapshot(batch.sparkSession, path) { existing =>
+        val b = graft.operators.Intervals
+          .mergedIslands(batch, col(keyCol), col(stCol), col(enCol), col(tieCol))
+          .select(col("k"), col("ist"), col("ien"))
+        val mirror = existing.getOrElse(b.limit(0))
+        val affected = b.select(col("k")).distinct()
+        val untouched = mirror.join(broadcast(affected), Seq("k"), "left_anti")
+        val remerged = graft.operators.Intervals
+          .mergedIslands(
+            mirror.join(broadcast(affected), Seq("k")).unionByName(b),
+            col("k"), col("ist"), col("ien"), col("ien"))
+          .select(col("k"), col("ist"), col("ien"))
+        untouched.unionByName(remerged)
+      }
     }
 
   /** Streaming priority-sample mirror: maintains the k
@@ -631,32 +599,25 @@ object StreamingOps {
     * commutative, and idempotent (a replayed doc re-derives the same
     * priority and dropDuplicates keeps one), so like the coverage
     * mirror it needs NO batch-id marker: any replay or batch reorder
-    * converges to the batch recompute. Crash safety is the shared
-    * staged-rename swap. Per batch: one map-side priority projection
+    * converges to the batch recompute. Crash safety is
+    * [[commitSnapshot]]'s swap. Per batch: one map-side priority projection
     * over the batch, a k-row mirror read, one TakeOrdered — churn
     * cost, never corpus cost.
     */
   def prioritySampleEachBatch(docs: DataFrame, k: Int, path: String) =
     docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val s = batch.sparkSession
-      val (dir, old, staging) = healSwap(path)
-      val scored = batch
-        .select(col("doc_id"), col("lang"), col("n_chars").as("weight"))
-        .withColumn("priority", expr(
-          "(weight * 1099511627776) div " +
-            "((CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 13), " +
-            "16, 10) AS BIGINT) div 4096) + 1)"))
-      val mirror =
-        if (dir.exists()) s.read.parquet(path) else scored.limit(0)
-      // staging write reads `path` lazily but never writes it, so no
-      // lineage cut is needed before the swap (coverageMirror argument)
-      mirror.unionByName(scored)
-        .dropDuplicates("doc_id")
-        .orderBy(col("priority").desc, col("doc_id"))
-        .limit(k)
-        .write.mode("overwrite").parquet(staging.getPath)
-      commitSwap(dir, old, staging)
-      ()
+      commitSnapshot(batch.sparkSession, path) { existing =>
+        val scored = batch
+          .select(col("doc_id"), col("lang"), col("n_chars").as("weight"))
+          .withColumn("priority", expr(
+            "(weight * 1099511627776) div " +
+              "((CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 13), " +
+              "16, 10) AS BIGINT) div 4096) + 1)"))
+        existing.getOrElse(scored.limit(0)).unionByName(scored)
+          .dropDuplicates("doc_id")
+          .orderBy(col("priority").desc, col("doc_id"))
+          .limit(k)
+      }
     }
 
   /** Streaming distribution-drift monitor, state half: maintain exact
@@ -664,30 +625,27 @@ object StreamingOps {
     * summary a recurring ingest keeps so drift between any two slices
     * (yesterday vs today, source A vs B) is a catalog-sized read, never
     * a re-scan of history. Counts are additive (NOT replay-idempotent),
-    * so the merge rides the shared (queryTag, batchId) staged-rename
-    * commit like the IVM sinks. State size = |slices| x |categories|,
+    * so the merge commits with a (queryTag, batchId) marker like the
+    * IVM sinks ([[commitSnapshot]]). State size = |slices| x |categories|,
     * independent of stream length.
     */
   def categoryCountsEachBatch(rows: DataFrame, sliceCol: String,
       catCol: String, path: String, queryTag: String = "default") =
     rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyOnceAtomically(batch.sparkSession, path, queryTag, batchId) {
-        existing =>
-          val delta = batch.groupBy(col(sliceCol), col(catCol))
-            .agg(count(lit(1)).as("n"))
-          existing.getOrElse(delta.limit(0)).unionByName(delta)
-            .groupBy(col(sliceCol), col(catCol))
-            .agg(sum(col("n")).as("n"))
+      commitSnapshot(batch.sparkSession, path, Some(queryTag -> batchId)) { existing =>
+        val delta = batch.groupBy(col(sliceCol), col(catCol))
+          .agg(count(lit(1)).as("n"))
+        graft.operators.Ivm.mergeAggState(existing.getOrElse(delta.limit(0)),
+          delta, Seq(sliceCol, catCol), "n")
       }
-      ()
     }
 
   /** Streaming feature-encoder mirror, state half: maintain the
     * (cat, fold) label-sum state of the out-of-fold target encoder
     * incrementally, so the encoder table a trainer reads is always
     * current without re-scanning order history. Sums are additive (NOT
-    * replay-idempotent), so the merge rides the shared (queryTag,
-    * batchId) staged-rename commit like the IVM/drift sinks. State =
+    * replay-idempotent), so the merge commits with a (queryTag,
+    * batchId) marker like the IVM/drift sinks. State =
     * |cats| x folds rows regardless of stream length; the encoder
     * itself is derived from this state by `graft.queries.Features
     * .oofEncode` — the SAME definition the batch `target_encode_oof`
@@ -696,16 +654,13 @@ object StreamingOps {
   def targetEncodeStateEachBatch(orders: DataFrame, path: String,
       queryTag: String = "default") =
     orders.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyOnceAtomically(batch.sparkSession, path, queryTag, batchId) {
-        existing =>
-          val delta = graft.queries.Features.encodeBase(batch)
-            .groupBy(col("cat"), col("fold"))
-            .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
-          existing.getOrElse(delta.limit(0)).unionByName(delta)
-            .groupBy(col("cat"), col("fold"))
-            .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
+      commitSnapshot(batch.sparkSession, path, Some(queryTag -> batchId)) { existing =>
+        val delta = graft.queries.Features.encodeBase(batch)
+          .groupBy(col("cat"), col("fold"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
+        graft.operators.Ivm.mergeAggState(existing.getOrElse(delta.limit(0)),
+          delta, Seq("cat", "fold"), "n", "s")
       }
-      ()
     }
 
   /** Drift half: the exact-integer total-variation table between two
@@ -734,37 +689,48 @@ object StreamingOps {
       .orderBy(col(catCol))
   }
 
-  /** The shared exactly-once transactional-sink skeleton: skip if
-    * (queryTag, batchId) is already committed in the snapshot's
-    * `_graft_commit` marker, else compute the new state from the
-    * existing snapshot (None on first batch) and swap it in atomically
-    * — marker written INSIDE the staging directory, then directory
-    * renames with crash healing (see [[ivmJoinAggEachBatch]]'s
-    * contract docs).
+  /** The one commit path of every snapshot sink. A snapshot at `path`
+    * is only ever replaced by a staged-rename swap, so a crash or a
+    * failed write at any point leaves either the previous snapshot or
+    * the new one on disk, never a hole or a half-written mirror:
+    *  1. heal an interrupted earlier swap ([[healSwap]]);
+    *  2. with `once = Some((queryTag, batchId))`, skip the batch when the
+    *     snapshot's `_graft_commit` marker shows it is already applied:
+    *     same tag and an id at or past this one. Sinks whose merge is
+    *     not replay-idempotent need this; a DIFFERENT tag is a new query
+    *     lineage whose ids restart at 0, so it applies;
+    *  3. compute the next state from the current snapshot (None before
+    *     the first batch). The snapshot is read only when `next` asks
+    *     for it, since a parquet schema read costs a Spark job;
+    *  4. write that state to `path.staging`, plus the marker
+    *     (`queryTag:batchId`, underscore-prefixed so parquet readers skip
+    *     it) when `once` is set, so the id commits WITH the data;
+    *  5. swap staging into place ([[commitSwap]]).
+    * The write reads `path` lazily but only ever writes staging, so no
+    * lineage cut is needed before the swap.
     */
-  private def applyOnceAtomically(s: org.apache.spark.sql.SparkSession,
-      path: String, queryTag: String,
-      batchId: Long)(computeState: Option[DataFrame] => DataFrame): Unit = {
+  private def commitSnapshot(s: org.apache.spark.sql.SparkSession,
+      path: String, once: Option[(String, Long)] = None)
+      (next: (=> Option[DataFrame]) => DataFrame): Unit = {
     val (dir, old, staging) = healSwap(path)
     val marker = new java.io.File(dir, "_graft_commit")
-    val lastApplied: Option[(String, Long)] =
-      if (marker.exists()) {
+    val applied = once.exists { case (queryTag, batchId) =>
+      marker.exists() && {
         val txt = new String(
           java.nio.file.Files.readAllBytes(marker.toPath)).trim
         val i = txt.lastIndexOf(':')
-        Some((txt.substring(0, i), txt.substring(i + 1).toLong))
-      } else None
-    val seen = lastApplied.exists { case (tag, id) =>
-      tag == queryTag && batchId <= id }
-    if (!seen) {
-      val existing =
+        txt.substring(0, i) == queryTag && batchId <= txt.substring(i + 1).toLong
+      }
+    }
+    if (!applied) {
+      lazy val existing =
         if (dir.exists()) Some(s.read.parquet(path)) else None
-      computeState(existing)
-        .localCheckpoint(true)
-        .write.mode("overwrite").parquet(staging.getPath)
-      java.nio.file.Files.write(
-        new java.io.File(staging, "_graft_commit").toPath,
-        s"$queryTag:$batchId".getBytes)
+      next(existing).write.mode("overwrite").parquet(staging.getPath)
+      once.foreach { case (queryTag, batchId) =>
+        java.nio.file.Files.write(
+          new java.io.File(staging, "_graft_commit").toPath,
+          s"$queryTag:$batchId".getBytes)
+      }
       commitSwap(dir, old, staging)
     }
   }
@@ -774,8 +740,7 @@ object StreamingOps {
     * already committed, drop the backup; only the backup present -> the
     * swap died between renames, roll back (any marker inside was never
     * observable, so a source replay re-applies cleanly); stale staging
-    * is discarded. Shared by the batch-id sinks and the idempotent
-    * coverage mirror.
+    * is discarded.
     */
   private def healSwap(path: String):
       (java.io.File, java.io.File, java.io.File) = {

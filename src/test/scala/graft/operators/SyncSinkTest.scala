@@ -44,4 +44,22 @@ class SyncSinkTest extends AnyFunSuite {
     assert(lines.contains("daily_enrollment: active = 1"))
     assert(lines.contains("WARNING: 2 rows dropped"))
   }
+
+  test("writeReport of a local report runs no Spark job and writes its lines in order") {
+    val rep = Seq[(String, String, Long)](("sections", "created", 3L),
+      ("daily_enrollment", "deleted", 1L), ("sections", null, 1L),
+      ("daily_enrollment", "active", 2L)).toDF("dataset", "status", "n")
+    val out = java.nio.file.Files.createTempDirectory("report").resolve("report")
+    SyncSink.writeReport(spark, rep.limit(1), out.toString, Seq("stale"))
+    val (_, rec) = graft.Layers.record(spark) {
+      SyncSink.writeReport(spark, rep, out.toString, Seq("1 row dropped"))
+    }
+    assert(rec.total.jobs == 0, rec.sites)
+    val parts = out.toFile.listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1)
+    val lines = java.nio.file.Files.readAllLines(parts.head.toPath).toArray.toSeq
+    assert(lines == Seq("daily_enrollment: active = 2",
+      "daily_enrollment: deleted = 1", "sections: null = 1",
+      "sections: created = 3", "WARNING: 1 row dropped"))
+  }
 }

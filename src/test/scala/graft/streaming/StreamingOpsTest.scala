@@ -381,6 +381,35 @@ class StreamingOpsTest extends AnyFunSuite {
     assert(last == Set(3L))
   }
 
+  test("overwriteMirrorEachBatch keeps the previous mirror when a batch fails mid-write") {
+    implicit val sqlCtx = spark.sqlContext
+    val path = java.nio.file.Files.createTempDirectory("mirror_fail").toString + "/mirror"
+    // a poison row fails the batch's write task
+    def poisoned(mem: MemoryStream[(Long, String)]) =
+      mem.toDF.toDF("id", "status").withColumn("status",
+        when(col("id") === 99L, raise_error(lit("poison row")))
+          .otherwise(col("status")))
+    def mirror() = spark.read.parquet(path).as[(Long, String)].collect().toSet
+    val mem = MemoryStream[(Long, String)]
+    val sq = StreamingOps.overwriteMirrorEachBatch(poisoned(mem), path).start()
+    mem.addData((1L, "a"), (2L, "b"))
+    sq.processAllAvailable()
+    mem.addData((3L, "c"), (99L, "x"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      sq.processAllAvailable()
+    }
+    sq.stop()
+    assert(mirror() == Set((1L, "a"), (2L, "b")))
+    // the next query discards the failed batch's staging and commits
+    val mem2 = MemoryStream[(Long, String)]
+    val sq2 = StreamingOps.overwriteMirrorEachBatch(poisoned(mem2), path).start()
+    mem2.addData((4L, "d"))
+    sq2.processAllAvailable()
+    sq2.stop()
+    assert(mirror() == Set((4L, "d")))
+    assert(!new java.io.File(path + ".staging").exists())
+  }
+
   test("upsertMirrorEachBatch MERGE-applies change batches to the snapshot") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("upsert_mirror").toString
