@@ -10,15 +10,20 @@
 # usage: scripts/ab_perfbench.sh <old_rev> <workload> [pairs=10] [first_seed=101]
 # output: one line per run, then each side's median and Q1/Q3 for every
 # end-to-end metric in BENCHMARK.json, and how many pairs the working
-# tree won (ties count for neither side). TMPDIR picks where the two
-# exports and their builds land; they are removed on exit.
+# tree won (ties count for neither side). The first build or run that
+# fails, prints nothing, or reports an incorrect result or a failed
+# operation stops the script with the tail of its log and exit status 1.
+# TMPDIR picks where the two exports and their builds land; they are
+# removed on exit. The export path is kept short because perfbench's sbt
+# build binds a unix socket under it, and such a path may not pass ~104
+# characters.
 set -euo pipefail
 REV=$1
 WORKLOAD=$2
 PAIRS=${3:-10}
 SEED0=${4:-101}
 REPO=$(git rev-parse --show-toplevel)
-AB=$(mktemp -d "${TMPDIR:-/tmp}/ab_perfbench.XXXXXX")
+AB=$(mktemp -d "${TMPDIR:-/tmp}/abp.XXXX")
 trap 'rm -rf "$AB"' EXIT
 mkdir "$AB/old" "$AB/new"
 git -C "$REPO" archive "$REV" | tar -x -C "$AB/old"
@@ -33,9 +38,10 @@ run_side() { # $1 = old|new, $2 = seed; appends "<side> <seed> <json>"
   local out
   if ! out=$(cd "$AB/$1" && python3 perfbench/run.py --workload "$WORKLOAD" \
       --seed "$2" --seconds 5 --trace 0 2>>"$AB/$1.log" | tail -n 1) \
-      || [ -z "$out" ]; then
+      || ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(not r["correct"] or r["failed"] != 0)' "$out" 2>/dev/null; then
+    echo "ab_perfbench: $1 seed $2 failed: ${out:-no output}" >&2
     tail -n 20 "$AB/$1.log" >&2
-    out='{"correct": false, "failed": -1, "metrics": {}}'
+    exit 1
   fi
   echo "$1 $2 $out" >> "$AB/results"
   python3 - "$1" "$2" "$out" <<'PY'
@@ -74,9 +80,7 @@ for line in open(sys.argv[2]):
     side, seed, js = line.split(" ", 2)
     runs[side][int(seed)] = json.loads(js)
 seeds = sorted(set(runs["old"]) & set(runs["new"]))
-for side in ("old", "new"):
-    bad = [s for s, r in runs[side].items() if not r["correct"] or r["failed"]]
-    print(f"{side}: {len(runs[side])} runs, failed or incorrect on seeds {bad or 'none'}")
+print(f"{len(seeds)} pairs, every run correct with 0 failed operations")
 print(f"{'metric':<14}{'old median [Q1, Q3]':>30}{'new median [Q1, Q3]':>30}"
       f"{'old IQR':>10}{'new wins':>10}")
 for m in bench["end_to_end"]:

@@ -1,6 +1,13 @@
 package graft
 
+import java.io.{OutputStream, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 /** Typed access to the engine's table surface.
   *
@@ -64,13 +71,50 @@ object Tables {
           schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** CSV sink (SURVEY §2.1 K1; reference src/canvas.py:59). Single-file
-    * output is only for small update files handed to a downstream REST
-    * sink; large outputs keep their partitioning.
+  /** CSV sink (SURVEY §2.1 K1; reference src/canvas.py:59) with a header,
+    * replacing any earlier output at `path`. Large outputs keep their
+    * partitioning and go through Spark's writer. `singleFile = true` is
+    * for the small update files handed to a downstream REST sink: the
+    * rows are collected and rendered on the driver by Spark's own CSV
+    * generator (header, session time zone), so the bytes equal a
+    * `coalesce(1)` write, and committed as one
+    * `part-00000-<uuid>-c000.csv` by [[commitFile]]. A local frame costs
+    * no Spark job. The rows must fit in `spark.driver.maxResultSize`; a
+    * larger frame fails its collect.
     */
-  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").option("header", "true").csv(path)
+  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit =
+    if (!singleFile) df.write.mode("overwrite").option("header", "true").csv(path)
+    else {
+      val spark = df.sparkSession
+      val rows = df.collect()
+      val options = new CSVOptions(Map("header" -> "true"),
+        spark.sessionState.conf.csvColumnPruning,
+        spark.sessionState.conf.sessionLocalTimeZone)
+      val toInternal = ExpressionEncoder(df.schema, lenient = true).createSerializer()
+      commitFile(spark, path, s"part-00000-${UUID.randomUUID()}-c000.csv") { out =>
+        val gen = new UnivocityGenerator(df.schema, new OutputStreamWriter(out, UTF_8), options)
+        gen.writeHeaders()
+        rows.foreach(r => gen.write(toInternal(r)))
+        gen.flush()
+      }
+    }
+
+  /** Commits one file `name` under the directory `path` from the driver:
+    * deletes any earlier output at `path`, writes `body` to a hidden temp
+    * file in the directory, then renames it to `name`. A body that fails
+    * leaves no file behind.
+    */
+  private[graft] def commitFile(spark: SparkSession, path: String, name: String)
+                               (body: OutputStream => Unit): Unit = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir)) require(fs.delete(dir, true), s"delete $dir failed")
+    val tmp = new Path(dir, s".$name.inprogress")
+    try {
+      val out = fs.create(tmp)
+      try body(out) finally out.close()
+      require(fs.rename(tmp, new Path(dir, name)), s"rename $tmp failed")
+    } finally fs.delete(tmp, false)
   }
 
   /** ORC scan (SURVEY §2.1 format coverage beyond the reference's

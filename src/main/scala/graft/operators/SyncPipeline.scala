@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -13,8 +16,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * anti-joins (J2-J5) + the enrollment symmetric diff (J6) → FK-ordered
   * sink loop (K3) → change report (K4/A3).
   *
-  * Everything between the source scans and the sinks is one lazy Catalyst
-  * lineage per entity; the FK order of the sink loop is the only
+  * Everything between the source scans and the update sets is one lazy
+  * Catalyst lineage per entity; the update sets are computed together,
+  * before any upload. The FK order of the sink loop is the only
   * sequential constraint (it lives in driver code by design — it is a
   * correctness contract with the downstream SIS import, not a data
   * dependency Catalyst could see).
@@ -42,19 +46,27 @@ object SyncPipeline {
   /** Full run: updates → ordered sinks → report rows. Returns the sunk
     * dataset names (in order), the change report and per-entity metrics.
     *
+    * As in the reference (`download_all_updates`, then
+    * `upload_all_updates`; SURVEY §3.3), every update set is computed
+    * before the first upload: each runs as one `collect()` on its own
+    * thread, all at once, so every diff sees the pre-upload mirror. The
+    * sink then gets, in FK order, a local frame holding those rows with
+    * the update set's schema. If any diff fails, no sink runs, and the
+    * first failure is rethrown once every diff has finished. Each update
+    * set must fit in `spark.driver.maxResultSize`; a larger one fails its
+    * collect.
+    *
     * Each entity's update set carries a Spark [[Observation]], so
-    * per-entity row, null-key and per-status counts are collected DURING
-    * the sink write — no second pass over the data (a separate count()
-    * would re-execute the whole diff per entity, and at 100 TB the
-    * re-scan costs more than the sync itself). A row has a null key when
-    * any of its key columns is null: such a row can never match. The
-    * change report is built from those per-status counts as a local
-    * frame (dataset, status, n), one row per sunk entity and non-zero
-    * status; reading it runs no Spark job, and it describes exactly the
-    * rows that were uploaded, even when the sink applies them to the
-    * mirror. Returned metrics cover exactly the sunk entities (an
-    * observation only resolves after an action has run on its dataset,
-    * so the sink must run one).
+    * per-entity row, null-key and per-status counts are collected by
+    * that same `collect()` — no second pass over the data (a separate
+    * count() would re-execute the whole diff per entity). A row has a
+    * null key when any of its key columns is null: such a row can never
+    * match. The change report is built from those per-status counts as a
+    * local frame (dataset, status, n), one row per sunk entity and
+    * non-zero status; reading it runs no Spark job, and it describes
+    * exactly the rows that were uploaded, even when the sink applies
+    * them to the mirror. Metrics and report do not depend on the sink
+    * running any action.
     */
   def runObserved(entities: Seq[Entity], order: Seq[String])
                  (sink: (String, DataFrame) => Unit)
@@ -69,7 +81,7 @@ object SyncPipeline {
         sum(when(nullKey, 1L).otherwise(0L)).as("n_null_key"),
         byStatus(SyncSink.reportStatus(df)).as("n_by_status"))
     }
-    val sunk = SyncSink.uploadAll(updates, order)(sink)
+    val sunk = SyncSink.uploadAll(collectAll(updates), order)(sink)
     val metrics = sunk.map(n => n -> obs(n).get).toMap
     val lines = for {
       n <- sunk
@@ -77,6 +89,31 @@ object SyncPipeline {
     } yield Row(n, s.getString(0), s.getLong(1))
     val report = SparkSession.active.createDataFrame(lines.asJava, ReportSchema)
     (sunk, report, metrics)
+  }
+
+  /** Collects every update set at once, one pool thread per entity, and
+    * returns each as a local frame with its schema. The pool is created
+    * for this call, so its threads inherit the caller's job group and
+    * local properties. The first failure is rethrown after every collect
+    * has finished, and the pool is gone when this returns.
+    */
+  private def collectAll(updates: Map[String, DataFrame]): Map[String, DataFrame] = {
+    val pool = Executors.newFixedThreadPool(math.max(updates.size, 1),
+      (r: Runnable) => new Thread(r, "sync-diff"))
+    try {
+      val pending = updates.map { case (name, df) =>
+        name -> pool.submit[Array[Row]](() => df.collect())
+      }
+      val done = pending.map { case (name, f) => name -> Try(f.get()) }
+      done.values.collectFirst { case Failure(e: ExecutionException) => throw e.getCause }
+      done.map { case (name, rows) =>
+        val df = updates(name)
+        name -> df.sparkSession.createDataFrame(rows.get.toSeq.asJava, df.schema)
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 
   private val ReportSchema = StructType(Seq(

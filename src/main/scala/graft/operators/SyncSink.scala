@@ -2,9 +2,10 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Tables
 
 /** Ordered multi-sink + sync report (SURVEY §2.1 K3/K4, §2.4 A3).
   *
@@ -14,9 +15,11 @@ import org.apache.spark.sql.functions._
   * src/canvas.py:107-133, order list at 108-116) — and writes a per-file
   * change report (src/canvas.py:136-162). The order is a *correctness*
   * constraint that lives outside the DAG, so it stays in typed driver
-  * code: each dataset's sink action is an ordinary Spark write (or any
+  * code: each dataset's sink action is an ordinary write (or any
   * side-effecting callback), but the loop awaits each before starting
-  * the next.
+  * the next. `SyncPipeline.runObserved` computes every update set
+  * before this loop starts, so its sinks get small local frames, and a
+  * single-file `Tables.writeCsv` of one runs no Spark job.
   */
 object SyncSink {
 
@@ -65,8 +68,9 @@ object SyncSink {
     * per-dataset counts in (dataset, status) order, then warnings;
     * src/canvas.py:136-162) to one `part-00000` file under `path`,
     * replacing any earlier output. The report is a handful of rows, so
-    * it is sorted on the driver and written through the session's
-    * Hadoop FileSystem: a local report costs no Spark job.
+    * it is sorted on the driver and committed by `Tables.commitFile`
+    * (written to a hidden temp file, then renamed): a local report costs
+    * no Spark job, and a failed write leaves no truncated report.
     */
   def writeReport(spark: SparkSession, report: DataFrame, path: String,
                   warnings: Seq[String] = Nil): Unit = {
@@ -74,11 +78,7 @@ object SyncSink {
       .sortBy(r => (r.getString(0), Option(r.getString(1))))
       .map(r => s"${r.getString(0)}: ${r.getString(1)} = ${r.getLong(2)}")
       .toSeq ++ warnings.map(w => s"WARNING: $w")
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) require(fs.delete(dir, true), s"delete $dir failed")
-    val out = fs.create(new Path(dir, "part-00000"))
-    try out.write(lines.map(_ + "\n").mkString.getBytes(UTF_8))
-    finally out.close()
+    Tables.commitFile(spark, path, "part-00000")(
+      _.write(lines.map(_ + "\n").mkString.getBytes(UTF_8)))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,6 +28,73 @@ class TablesTest extends AnyFunSuite {
     val back = Tables.csv(spark, s"$dir/users", schema)
     assert(back.schema == schema)
     assert(back.orderBy("id_num").collect().toSeq == sample.orderBy("id_num").collect().toSeq)
+  }
+
+  private def partFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).toSeq
+
+  private def singlePart(dir: String): Array[Byte] = {
+    val parts = partFiles(dir)
+    assert(parts.size == 1, parts)
+    java.nio.file.Files.readAllBytes(parts.head.toPath)
+  }
+
+  test("single-file writeCsv writes the bytes of Spark's coalesce(1) writer") {
+    val valueSchema = StructType(Seq(
+      StructField("s", StringType), StructField("d", DoubleType),
+      StructField("b", BooleanType), StructField("day", DateType),
+      StructField("ts", TimestampType), StructField("n", LongType)))
+    val day = java.sql.Date.valueOf("2025-08-25")
+    val ts = java.sql.Timestamp.valueOf("2025-08-25 13:45:06.789")
+    val values = Seq(
+      Row("plain", 1.5, true, day, ts, 1L),
+      Row("a,b", -0.25, false, null, null, null),
+      Row("say \"hi\"", 1e20, null, day, ts, -7L),
+      Row(null, null, true, day, ts, 0L),
+      Row("", Double.NaN, false, day, ts, Long.MaxValue),
+      Row("line1\nline2", 0.1, true, day, ts, 3L))
+    val df = spark.createDataFrame(java.util.Arrays.asList(values: _*), valueSchema)
+    val dir = java.nio.file.Files.createTempDirectory("csvbytes").toString
+    Seq("values" -> df, "empty" -> df.limit(0)).foreach { case (name, frame) =>
+      frame.coalesce(1).write.option("header", "true").csv(s"$dir/spark_$name")
+      Tables.writeCsv(frame, s"$dir/graft_$name", singleFile = true)
+      val (want, got) = (singlePart(s"$dir/spark_$name"), singlePart(s"$dir/graft_$name"))
+      assert(new String(got, "UTF-8") == new String(want, "UTF-8"), name)
+      assert(got.sameElements(want), name)
+    }
+  }
+
+  test("single-file writeCsv of a local frame runs no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("csvjobs").toString
+    val (_, rec) = Layers.record(spark) {
+      Tables.writeCsv(sample, s"$dir/users", singleFile = true)
+    }
+    assert(rec.total.jobs == 0, rec.sites)
+    assert(partFiles(s"$dir/users").map(_.getName).forall(_.matches("part-00000-.*-c000\\.csv")))
+  }
+
+  test("single-file writeCsv replaces earlier output with exactly one part- file") {
+    val out = java.nio.file.Files.createTempDirectory("csvreplace").resolve("users").toString
+    sample.repartition(3).write.option("header", "true").csv(out)
+    assert(partFiles(out).size > 1)
+    Tables.writeCsv(sample.filter($"id_num" < 3), out, singleFile = true)
+    assert(partFiles(out).size == 1)
+    assert(Tables.csv(spark, out, schema).orderBy("id_num").collect().toSeq ==
+      sample.filter($"id_num" < 3).orderBy("id_num").collect().toSeq)
+  }
+
+  test("commitFile leaves no part- file when its body fails mid-write") {
+    val out = java.nio.file.Files.createTempDirectory("commit").resolve("report").toString
+    Tables.commitFile(spark, out, "part-00000")(_.write("old\n".getBytes("UTF-8")))
+    val e = intercept[IllegalStateException] {
+      Tables.commitFile(spark, out, "part-00000") { o =>
+        o.write("half a rep".getBytes("UTF-8"))
+        throw new IllegalStateException("disk full")
+      }
+    }
+    assert(e.getMessage == "disk full")
+    assert(partFiles(out).isEmpty)
+    assert(new java.io.File(out).listFiles().forall(_.getName.startsWith(".")))
   }
 
   test("json lines round-trip with explicit schema") {

@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSqlBridge, Row}
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+import org.scalatest.concurrent.{Eventually, Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.{Layers, TestSpark}
 import graft.sources.Jdbc
@@ -10,9 +17,13 @@ import graft.sources.Jdbc
   * (SURVEY §3.3, §5 item 5): ERP truth vs mirror → updates → FK-ordered
   * sink → report, with exact expected row sets.
   */
-class SyncPipelineTest extends AnyFunSuite {
+class SyncPipelineTest extends AnyFunSuite with TimeLimits with Eventually {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  implicit val signaler: Signaler = ThreadSignaler
+
+  private def poolThreads: Int =
+    Thread.getAllStackTraces.keySet.asScala.count(t => t.isAlive && t.getName == "sync-diff")
 
   test("end-to-end sync: missing rows, enrollment diff, FK order, report") {
     // ERP truth: two faculty, two courses, three enrollments.
@@ -185,5 +196,107 @@ class SyncPipelineTest extends AnyFunSuite {
       Row("courses", "created", 1L),
       Row("daily_enrollment", "active", 1L),
       Row("daily_enrollment", "deleted", 1L)))
+  }
+
+  test("a sink that runs no action still gets complete metrics and report") {
+    val entities = Seq(
+      SyncPipeline.Entity("faculty_users",
+        Seq((1L, "prof.a"), (2L, "prof.b")).toDF("id_num", "login_id"),
+        Seq((1L, "prof.a")).toDF("id_num", "login_id"), Seq("id_num")),
+      SyncPipeline.Entity("daily_enrollment",
+        Seq((10L, "c1"), (11L, "c1")).toDF("user_id", "course_id"),
+        Seq((10L, "c1"), (12L, "c2")).toDF("user_id", "course_id"),
+        Seq("user_id", "course_id"), symmetric = true))
+    val sunk = mutable.ArrayBuffer.empty[String]
+    val (order, report, metrics) = failAfter(60.seconds) {
+      SyncPipeline.runObserved(entities, SyncSink.FK_ORDER)((name, _) => sunk += name)
+    }
+    assert(order == Seq("faculty_users", "daily_enrollment"))
+    assert(sunk.toSeq == order)
+    assert(metrics("faculty_users")("n_rows") == 1L)
+    assert(metrics("daily_enrollment")("n_rows") == 2L)
+    assert(metrics("daily_enrollment")("n_null_key") == 0L)
+    assert(report.as[(String, String, Long)].collect().toSet == Set(
+      ("faculty_users", "created", 1L),
+      ("daily_enrollment", "active", 1L),
+      ("daily_enrollment", "deleted", 1L)))
+  }
+
+  test("every diff sees the pre-upload mirror, even one another upload appends to") {
+    // courses and ctl_library_courses both diff against MIRROR_COURSES,
+    // and the sink appends each upload to it. Uploading courses first
+    // must not shrink ctl_library_courses' update set (c2 and c3 overlap).
+    val dir = java.nio.file.Files.createTempDirectory("derby").toString
+    val conn = Jdbc.Conn(s"jdbc:derby:$dir/syncdb;create=true")
+    val table = "MIRROR_COURSES"
+    Jdbc.overwriteMirror(Seq(("c1", "Intro")).toDF("crs_cde", "title"),
+      conn, table, Set(table))
+    def entity(name: String, codes: String*) = SyncPipeline.Entity(name,
+      codes.map(c => (c, s"title $c")).toDF("crs_cde", "title"),
+      Jdbc.readTable(spark, conn, table), Seq("crs_cde"))
+    val entities = Seq(entity("courses", "c1", "c2", "c3"),
+      entity("ctl_library_courses", "c2", "c3", "c4"))
+
+    val sunk = mutable.LinkedHashMap.empty[String, Set[String]]
+    val (_, _, metrics) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
+      (name, df) =>
+        sunk(name) = df.select("crs_cde").as[String].collect().toSet
+        Jdbc.append(df, conn, table)
+    }
+    assert(sunk.toSeq == Seq("courses" -> Set("c2", "c3"),
+      "ctl_library_courses" -> Set("c2", "c3", "c4")))
+    assert(metrics("ctl_library_courses")("n_rows") == 3L)
+    assert(Jdbc.readTable(spark, conn, table).count() == 6)
+  }
+
+  test("a failed diff runs no sink, surfaces its error and leaves no pool thread") {
+    val courses = Seq("c1", "c2").toDF("crs_cde")
+      .withColumn("title", when(col("crs_cde") === "c2", raise_error(lit("bad course c2")))
+        .otherwise(lit("Intro")))
+    val entities = Seq(
+      SyncPipeline.Entity("faculty_users", Seq((1L, "prof.a")).toDF("id_num", "login_id"),
+        spark.emptyDataset[(Long, String)].toDF("id_num", "login_id"), Seq("id_num")),
+      SyncPipeline.Entity("courses", courses,
+        Seq(("c1", "Intro")).toDF("crs_cde", "title"), Seq("crs_cde")))
+    val sunk = mutable.ArrayBuffer.empty[String]
+    val e = intercept[Exception] {
+      failAfter(60.seconds) {
+        SyncPipeline.runObserved(entities, SyncSink.FK_ORDER)((name, _) => sunk += name)
+      }
+    }
+    assert(e.getMessage.contains("bad course c2"), e)
+    assert(sunk.isEmpty)
+    eventually(timeout(10.seconds))(assert(poolThreads == 0))
+  }
+
+  test("the caller's job group is on every diff job") {
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+    }
+    val entities = SyncSink.FK_ORDER.zipWithIndex.map { case (name, i) =>
+      SyncPipeline.Entity(name, Seq((i, "x"), (i + 100, "y")).toDF("id_num", "v"),
+        Seq((i, "x")).toDF("id_num", "v"), Seq("id_num"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup("sync-caller", "diff jobs inherit it", interruptOnCancel = false)
+    try {
+      val (order, _, metrics) = failAfter(60.seconds) {
+        SyncPipeline.runObserved(entities, SyncSink.FK_ORDER)((_, _) => ())
+      }
+      assert(order == SyncSink.FK_ORDER)
+      assert(metrics.values.map(_("n_rows")).toSet == Set(1L))
+      GraftSqlBridge.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get >= SyncSink.FK_ORDER.size)
+    assert(groups.asScala.toSet == Set("sync-caller"))
   }
 }
