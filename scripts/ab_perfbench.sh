@@ -9,10 +9,13 @@
 #
 # usage: scripts/ab_perfbench.sh <old_rev> <workload> [pairs=10] [first_seed=101]
 # output: one line per run, then each side's median and Q1/Q3 for every
-# end-to-end metric in BENCHMARK.json, and how many pairs the working
-# tree won (ties count for neither side). The first build or run that
-# fails, prints nothing, or reports an incorrect result or a failed
-# operation stops the script with the tail of its log and exit status 1.
+# end-to-end metric in BENCHMARK.json, how many pairs the working tree
+# won (ties count for neither side), and the change of the medians,
+# new / old - 1, beside the metric's bound; a change worse than the
+# bound in the metric's `better` direction is marked OVER BOUND. The
+# first build or run that fails, prints nothing, or reports an incorrect
+# result or a failed operation stops the script with the tail of its
+# log and exit status 1.
 # TMPDIR picks where the two exports and their builds land; they are
 # removed on exit. The export path is kept short because perfbench's sbt
 # build binds a unix socket under it, and such a path may not pass ~104
@@ -82,9 +85,9 @@ for line in open(sys.argv[2]):
 seeds = sorted(set(runs["old"]) & set(runs["new"]))
 print(f"{len(seeds)} pairs, every run correct with 0 failed operations")
 print(f"{'metric':<14}{'old median [Q1, Q3]':>30}{'new median [Q1, Q3]':>30}"
-      f"{'old IQR':>10}{'new wins':>10}")
+      f"{'old IQR':>10}{'new wins':>10}{'new/old-1':>11}  bound")
 for m in bench["end_to_end"]:
-    name, lower = m["name"], m["better"] == "lower"
+    name, lower, bound = m["name"], m["better"] == "lower", m["bound"]
     vals = {side: {s: runs[side][s]["metrics"][name]["value"] for s in seeds
                    if name in runs[side][s]["metrics"]} for side in runs}
     both = [s for s in seeds if s in vals["old"] and s in vals["new"]]
@@ -96,6 +99,9 @@ for m in bench["end_to_end"]:
         xs = list(vals[side].values())
         cells.append(f"{pct(xs, .5):.3f} [{pct(xs, .25):.3f}, {pct(xs, .75):.3f}]")
     old = list(vals["old"].values())
+    change = pct(list(vals["new"].values()), .5) / pct(old, .5) - 1
+    over = change > bound if lower else change < -bound
     print(f"{name:<14}{cells[0]:>30}{cells[1]:>30}"
-          f"{pct(old, .75) - pct(old, .25):>10.3f}{f'{wins}/{len(both)}':>10}")
+          f"{pct(old, .75) - pct(old, .25):>10.3f}{f'{wins}/{len(both)}':>10}"
+          f"{change:>+11.1%}  {bound:.0%}{'  OVER BOUND' if over else ''}")
 PY

@@ -38,9 +38,6 @@ object Terms {
       .otherwise(concat(y, lit("2S")))
   }
 
-  /** nextTerm over a packed 4-char key. */
-  def nextTermPacked(term: Column): Column = nextTerm(yrCde(term), trmCde(term))
-
   /** The reference's term-resolution flow (reference
     * src/integrator.py:20-38 + src/canvas.py:19-27) as one composition:
     * read the current term from the config singleton (S2), optionally

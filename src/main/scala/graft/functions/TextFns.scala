@@ -128,11 +128,6 @@ object TextFns {
   def hexVal(c: Column): Column =
     when(ascii(c) >= 97, ascii(c) - 87).otherwise(ascii(c) - 48)
 
-  /** Lowest bit of the b-th (1-based) hex digit of md5(s) — the portable
-    * per-shingle "random bit" used by SimHash.
-    */
-  def md5Bit(s: Column, b: Int): Column = hexVal(substring(md5(s), b, 1)) % 2
-
   /** The stopword sample the quality formula scores against (an
     * inlined-constant contract: every oracle mirrors this exact list).
     */

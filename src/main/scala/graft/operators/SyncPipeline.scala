@@ -5,10 +5,7 @@ import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The reference's full sync run as one composable pipeline
@@ -56,48 +53,49 @@ object SyncPipeline {
     * set must fit in `spark.driver.maxResultSize`; a larger one fails its
     * collect.
     *
-    * Each entity's update set carries a Spark [[Observation]], so
-    * per-entity row, null-key and per-status counts are collected by
-    * that same `collect()` — no second pass over the data (a separate
-    * count() would re-execute the whole diff per entity). A row has a
-    * null key when any of its key columns is null: such a row can never
-    * match. The change report is built from those per-status counts as a
-    * local frame (dataset, status, n), one row per sunk entity and
-    * non-zero status; reading it runs no Spark job, and it describes
-    * exactly the rows that were uploaded, even when the sink applies
-    * them to the mirror. Metrics and report do not depend on the sink
-    * running any action.
+    * The per-entity metrics `n_rows` and `n_null_key` and the report's
+    * per-status counts are counted on the driver from those same
+    * collected rows, so they need no second pass over the data. A row
+    * has a null key when any of its key columns is null: such a row can
+    * never match. A row's status is its `status` field, or "created"
+    * when the update set has none; a null status is counted as its own.
+    * The change report is a local frame (dataset, status, n), one row
+    * per sunk entity and non-zero status; reading it runs no Spark job,
+    * and it describes exactly the rows that were uploaded, even when the
+    * sink applies them to the mirror. Metrics and report do not depend on
+    * the sink running any action.
     */
   def runObserved(entities: Seq[Entity], order: Seq[String])
                  (sink: (String, DataFrame) => Unit)
       : (Seq[String], DataFrame, Map[String, Map[String, Any]]) = {
-    val obs = entities.map(e => e.name -> Observation(s"sync_${e.name}")).toMap
-    val keysOf = entities.map(e => e.name -> e.keys).toMap
-    val byStatus = udaf(StatusCounts, Encoders.STRING)
-    val updates = computeUpdates(entities).map { case (name, df) =>
-      val nullKey = keysOf(name).map(col(_).isNull).reduce(_ || _)
-      name -> df.observe(obs(name),
-        count(lit(1)).as("n_rows"),
-        sum(when(nullKey, 1L).otherwise(0L)).as("n_null_key"),
-        byStatus(SyncSink.reportStatus(df)).as("n_by_status"))
+    val updates = computeUpdates(entities)
+    val rows = collectAll(updates)
+    val local = updates.map { case (name, df) =>
+      name -> df.sparkSession.createDataFrame(rows(name).toSeq.asJava, df.schema)
     }
-    val sunk = SyncSink.uploadAll(collectAll(updates), order)(sink)
-    val metrics = sunk.map(n => n -> obs(n).get).toMap
-    val lines = for {
-      n <- sunk
-      s <- metrics(n)("n_by_status").asInstanceOf[Seq[Row]]
-    } yield Row(n, s.getString(0), s.getLong(1))
+    val sunk = SyncSink.uploadAll(local, order)(sink)
+    val keysOf = entities.map(e => e.name -> e.keys).toMap
+    val metrics = sunk.map { n =>
+      val keys = keysOf(n).map(updates(n).schema.fieldIndex)
+      n -> Map[String, Any](
+        "n_rows" -> rows(n).length.toLong,
+        "n_null_key" -> rows(n).count(r => keys.exists(r.isNullAt)).toLong)
+    }.toMap
+    val lines = sunk.flatMap { n =>
+      val status = updates(n).schema.fieldNames.indexOf("status")
+      def statusOf(r: Row) = if (status < 0) "created" else r.getString(status)
+      rows(n).groupMapReduce(statusOf)(_ => 1L)(_ + _).map { case (s, k) => Row(n, s, k) }
+    }
     val report = SparkSession.active.createDataFrame(lines.asJava, ReportSchema)
     (sunk, report, metrics)
   }
 
-  /** Collects every update set at once, one pool thread per entity, and
-    * returns each as a local frame with its schema. The pool is created
-    * for this call, so its threads inherit the caller's job group and
-    * local properties. The first failure is rethrown after every collect
-    * has finished, and the pool is gone when this returns.
+  /** Collects every update set at once, one pool thread per entity. The
+    * pool is created for this call, so its threads inherit the caller's
+    * job group and local properties. The first failure is rethrown after
+    * every collect has finished, and the pool is gone when this returns.
     */
-  private def collectAll(updates: Map[String, DataFrame]): Map[String, DataFrame] = {
+  private def collectAll(updates: Map[String, DataFrame]): Map[String, Array[Row]] = {
     val pool = Executors.newFixedThreadPool(math.max(updates.size, 1),
       (r: Runnable) => new Thread(r, "sync-diff"))
     try {
@@ -106,10 +104,7 @@ object SyncPipeline {
       }
       val done = pending.map { case (name, f) => name -> Try(f.get()) }
       done.values.collectFirst { case Failure(e: ExecutionException) => throw e.getCause }
-      done.map { case (name, rows) =>
-        val df = updates(name)
-        name -> df.sparkSession.createDataFrame(rows.get.toSeq.asJava, df.schema)
-      }
+      done.map { case (name, rows) => name -> rows.get }
     } finally {
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
@@ -120,28 +115,4 @@ object SyncPipeline {
     StructField("dataset", StringType, nullable = false),
     StructField("status", StringType),
     StructField("n", LongType, nullable = false)))
-
-  /** Rows per report status. The state is one counter per distinct
-    * status (a null status is counted as its own), and every counter it
-    * emits is non-zero.
-    */
-  private object StatusCounts
-      extends Aggregator[String, Seq[(String, Long)], Seq[(String, Long)]] {
-    def zero: Seq[(String, Long)] = Vector.empty
-    def reduce(b: Seq[(String, Long)], status: String): Seq[(String, Long)] =
-      add(b, status, 1L)
-    def merge(a: Seq[(String, Long)], b: Seq[(String, Long)]): Seq[(String, Long)] =
-      b.foldLeft(a) { case (acc, (status, n)) => add(acc, status, n) }
-    def finish(r: Seq[(String, Long)]): Seq[(String, Long)] = r
-
-    private def add(b: Seq[(String, Long)], status: String, n: Long) =
-      b.indexWhere(_._1 == status) match {
-        case -1 => b :+ (status -> n)
-        case i => b.updated(i, status -> (b(i)._2 + n))
-      }
-
-    // Derived once: every observed upload plans the aggregate anew.
-    lazy val bufferEncoder: Encoder[Seq[(String, Long)]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[(String, Long)]] = bufferEncoder
-  }
 }

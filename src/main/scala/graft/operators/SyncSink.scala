@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -19,7 +19,8 @@ import graft.Tables
   * side-effecting callback), but the loop awaits each before starting
   * the next. `SyncPipeline.runObserved` computes every update set
   * before this loop starts, so its sinks get small local frames, and a
-  * single-file `Tables.writeCsv` of one runs no Spark job.
+  * single-file `Tables.writeCsv` of one runs no Spark job; the sync's
+  * metrics and change report are counted from those same collected rows.
   */
 object SyncSink {
 
@@ -42,24 +43,21 @@ object SyncSink {
     }
   }
 
-  /** A row's report status: the update frame's `status` column, or
-    * "created" when the frame has none (anti-join entities without one).
-    */
-  def reportStatus(df: DataFrame): Column =
-    if (df.columns.contains("status")) col("status") else lit("created")
-
   /** Per-entity change statistics across all updates (A3): the counts the
     * Canvas side computes and the reference consumes
     * (src/canvas.py:137-150), recomputed from the update frames. It
     * re-executes every diff (one union + one aggregation over all of
     * them), so it counts what the diffs yield now, not what was uploaded.
-    * `SyncPipeline.runObserved` does not call it: it builds the same
-    * report from the counts its uploads observed. Kept as the reference
+    * A row's status is the frame's `status` column, or "created" when
+    * the frame has none (anti-join entities without one).
+    * `SyncPipeline.runObserved` does not call it: it counts the same
+    * report from the update sets' collected rows. Kept as the reference
     * that report is tested against.
     */
   def changeReport(updates: Map[String, DataFrame]): DataFrame =
     updates.map { case (name, df) =>
-      df.select(lit(name).as("dataset"), reportStatus(df).as("status"))
+      val status = if (df.columns.contains("status")) col("status") else lit("created")
+      df.select(lit(name).as("dataset"), status.as("status"))
     }.reduce(_ unionByName _)
       .groupBy(col("dataset"), col("status"))
       .agg(count(lit(1)).as("n"))

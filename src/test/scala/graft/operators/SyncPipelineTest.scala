@@ -103,7 +103,7 @@ class SyncPipelineTest extends AnyFunSuite with TimeLimits with Eventually {
     }
     val sunk = scala.collection.mutable.ArrayBuffer.empty[String]
     val (order, report, _) = SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) {
-      // an action per entity resolves its Observation
+      // the sink reads each local update set it is handed
       (name, df) => sunk += name; df.collect(); ()
     }
     assert(order == SyncSink.FK_ORDER)
@@ -298,5 +298,60 @@ class SyncPipelineTest extends AnyFunSuite with TimeLimits with Eventually {
     }
     assert(jobs.get >= SyncSink.FK_ORDER.size)
     assert(groups.asScala.toSet == Set("sync-caller"))
+  }
+
+  test("a sink that fails partway stops the FK-ordered sync and surfaces its error") {
+    val entities = SyncSink.FK_ORDER.zipWithIndex.map { case (name, i) =>
+      SyncPipeline.Entity(name, Seq((i, "x"), (i + 100, "y")).toDF("id_num", "v"),
+        Seq((i, "x")).toDF("id_num", "v"), Seq("id_num"))
+    }
+    val sunk = mutable.ArrayBuffer.empty[String]
+    val e = intercept[IllegalStateException] {
+      failAfter(60.seconds) {
+        SyncPipeline.runObserved(entities, SyncSink.FK_ORDER) { (name, _) =>
+          if (name == "sections") throw new IllegalStateException("upload of sections refused")
+          sunk += name
+        }
+      }
+    }
+    assert(e.getMessage == "upload of sections refused")
+    assert(sunk.toSeq == SyncSink.FK_ORDER.takeWhile(_ != "sections"))
+    eventually(timeout(10.seconds))(assert(poolThreads == 0))
+  }
+
+  test("two concurrent runs in one session each return their own results") {
+    // Same entity names, different data: each run's order, metrics,
+    // report and uploaded rows must equal what it yields when run alone.
+    def entities(ids: Seq[Long], enr: Seq[(Long, String)]) = Seq(
+      SyncPipeline.Entity("faculty_users", ids.map(i => (i, s"prof$i")).toDF("id_num", "login_id"),
+        Seq((1L, "prof1")).toDF("id_num", "login_id"), Seq("id_num")),
+      SyncPipeline.Entity("courses", ids.map(i => (s"c$i", "t")).toDF("crs_cde", "title"),
+        Seq(("c2", "t")).toDF("crs_cde", "title"), Seq("crs_cde")),
+      SyncPipeline.Entity("daily_enrollment", enr.toDF("user_id", "course_id"),
+        Seq((10L, "c1"), (12L, "c2")).toDF("user_id", "course_id"),
+        Seq("user_id", "course_id"), symmetric = true))
+    val a = entities(Seq(1L, 2L, 3L), Seq((10L, "c1"), (11L, "c1")))
+    val b = entities(Seq(1L, 4L, 5L, 6L, 7L), Seq((12L, "c2"), (13L, "c3"), (14L, "c3")))
+    def run(es: Seq[SyncPipeline.Entity]) = {
+      val sunk = mutable.LinkedHashMap.empty[String, Set[Row]]
+      val (order, report, metrics) = SyncPipeline.runObserved(es, SyncSink.FK_ORDER) {
+        (name, df) => sunk(name) = df.collect().toSet
+      }
+      (order, report.collect().toSet, metrics, sunk.toSeq)
+    }
+    val (soloA, soloB) = (run(a), run(b))
+    assert(soloA != soloB)
+
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = Seq(a, b).map { es =>
+        pool.submit[Any] { () => start.await(); run(es) }
+      }
+      start.countDown()
+      val Seq(concA, concB) = failAfter(120.seconds)(runs.map(_.get()))
+      assert(concA == soloA)
+      assert(concB == soloB)
+    } finally pool.shutdownNow()
   }
 }
