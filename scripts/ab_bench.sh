@@ -6,16 +6,22 @@
 # way to conclude a regression/improvement on this shared VM — totals
 # across sessions drift ±10-15%.
 #
-# usage: scripts/ab_bench.sh <query> <old-rev> [sf_dir] [rounds]
-# SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM size both arms (default 32 / 48g).
-# output: one line per run (arm, round, per-query seconds = min of the
-# bench unit's two samples), then a min-per-arm summary. Paste the
+# usage: scripts/ab_bench.sh <query[,query...]> <old-rev> [sf_dir] [rounds]
+# Without sf_dir, Bench reads SPARK_GRAFT_SF_DIR or its own default
+# corpus (sf0.1). SPARK_GRAFT_CPUS /
+# SPARK_DRIVER_MEM size both arms (default: nproc cores, and half of
+# MemTotal clamped to 2-8g).
+# output: one line per run and query (arm, round, per-query seconds =
+# min of the bench unit's samples, then the headline sample's Spark
+# jobs in total and per call site from Bench's `layers`). Paste the
 # table into the round notes / an AB_*.md artifact.
 set -euo pipefail
 QUERY=$1
 REV=$2
-SFDIR=$(cd "${3:-tmp_sf1_organic}" && pwd)
+if [ -n "${3:-}" ]; then export SPARK_GRAFT_SF_DIR=$(cd "$3" && pwd); fi
 ROUNDS=${4:-2}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
+MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 REPO=$(git rev-parse --show-toplevel)
 # The OLD arm is a plain export of <old-rev> (no worktree bookkeeping
 # in the repo); TMPDIR picks where it lands.
@@ -30,22 +36,27 @@ echo "ab_bench: building working-tree jar ..." >&2
 
 run_arm() { # $1 = dir, $2 = label, $3 = round
   local out
-  out=$(cd "$1" && SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_ONLY="$QUERY" \
-    SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-    SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} \
+  out=$(cd "$1" && SPARK_GRAFT_ONLY="$QUERY" \
+    SPARK_GRAFT_CPUS=$CPUS SPARK_DRIVER_MEM=$MEM \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep -m1 '"metric"')
   AB_OUT="$out" python3 - "$2" "$3" "$QUERY" <<'PY'
 import json, os, sys
-label, rnd, q = sys.argv[1], sys.argv[2], sys.argv[3]
+label, rnd = sys.argv[1], sys.argv[2]
 d = json.loads(os.environ["AB_OUT"])
-samples = d.get("samples", {}).get(q) or [d["queries"][q]]
-guard = d.get("guards", {}).get(q)
-print(f"{label} round {rnd}: {q} = {min(samples):.2f} s  (samples {samples})"
-      + (f"  guard: {guard}" if guard else ""))
+for q in sys.argv[3].split(","):
+    samples = d.get("samples", {}).get(q) or [d["queries"][q]]
+    guard = d.get("guards", {}).get(q)
+    print(f"{label} round {rnd}: {q} = {min(samples):.2f} s  (samples {samples})"
+          + (f"  guard: {guard}" if guard else ""))
+    lay = d.get("layers", {}).get(q)
+    if lay:
+        sites = sorted(lay["sites"].items(), key=lambda kv: kv[0])
+        print(f"  jobs {lay['jobs']}: " + ", ".join(
+            f"{site} x{v['jobs']}" for site, v in sites))
 PY
 }
 
-echo "query=$QUERY old=$REV sf_dir=$SFDIR rounds=$ROUNDS"
+echo "query=$QUERY old=$REV sf_dir=${SPARK_GRAFT_SF_DIR:-default} rounds=$ROUNDS cpus=$CPUS mem=$MEM"
 for r in $(seq 1 "$ROUNDS"); do
   run_arm "$WT" "OLD" "$r"
   run_arm "$REPO" "NEW" "$r"

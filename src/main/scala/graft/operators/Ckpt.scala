@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one checkpoint path of the iterative graph operators (CC, LPA,
-  * BFS, k-core, PageRank, shortest path), and the lifecycle of what it
-  * creates.
+  * BFS, h-index coreness, PageRank, shortest path), the one loop that
+  * four of them run on ([[iterate]]: CC, BFS, PageRank, shortest path),
+  * and the lifecycle of what it creates.
   *
   * Policy: [[save]] checkpoints RELIABLY exactly when the context has a
   * checkpoint dir (`spark.checkpoint.dir`, or `setCheckpointDir`), and
@@ -22,12 +23,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * blocks they are dead weight on the executors. Spark reclaims them
   * only when the driver's ContextCleaner notices the RDD object is
   * unreachable — at some future GC. At scale that laziness is real
-  * memory: a 400-round k-core peel would hold every superseded
-  * frontier until the driver happens to GC. Two deterministic paths
-  * replace that:
+  * memory: a 20-round CC would hold every superseded label table
+  * until the driver happens to GC. Two deterministic paths replace
+  * that:
   *
-  *  - operators [[release]] each SUPERSEDED checkpoint the moment its
-  *    eager successor is materialized;
+  *  - [[iterate]], and each operator for its own one-off saves,
+  *    [[release]] each SUPERSEDED checkpoint the moment its eager
+  *    successor is materialized;
   *  - the FINAL checkpoint backing an operator's return value belongs
   *    to the caller — `spark.catalog.clearCache()` cannot see it (it
   *    is not a CacheManager entry), so [[releaseAll]] is the
@@ -126,6 +128,45 @@ object Ckpt {
     try track(if (reliable) df.checkpoint(eager = true)
               else df.localCheckpoint(eager = true))
     finally sc.setLocalProperty(CallSiteShort, prev)
+  }
+
+  /** The loop of the iterative graph operators: for rounds r = 1, 2, …
+    * from `init`, `state_r = step(state_{r-1}, r)`, with a [[save]]
+    * every `every` rounds that [[release]]s the previous save (`init`
+    * too, if it is one) once it is materialized.
+    *
+    * With a `done` test, each saved round's state is tested and
+    * returned once the test holds; a run that reaches `maxRounds`
+    * without it throws, naming the operator `name`, since a partial
+    * fixed point would be wrong. Without one, the run stops quietly
+    * after `maxRounds` rounds and leaves the last round lazy, so it
+    * composes with the caller's plan.
+    *
+    * The saves run here, so [[save]] labels them with the line that
+    * called `iterate`.
+    */
+  private[graft] def iterate(init: DataFrame, maxRounds: Int, every: Int = 1,
+      name: String = "iterate",
+      done: Option[(DataFrame, Int) => Boolean] = None)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var state = init
+    var saved = init
+    var round = 0
+    var settled = false
+    while (!settled && round < maxRounds) {
+      round += 1
+      state = step(state, round)
+      if (round % every == 0 && (done.isDefined || round < maxRounds)) {
+        state = save(state)
+        release(saved)
+        saved = state
+        settled = done.exists(_(state, round))
+      }
+    }
+    if (done.isDefined && !settled)
+      throw new IllegalStateException(s"$name did not converge after " +
+        s"$maxRounds rounds; a partial result would be wrong — raise the cap")
+    state
   }
 
   /** SparkContext's local-property key for a job's short call site. */

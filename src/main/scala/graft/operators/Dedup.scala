@@ -833,8 +833,9 @@ object Dedup {
     * two shuffle-joins + one aggregate; the driver sees only the
     * changed-label count.
     *
-    * Checkpointing: every round's label table is checkpointed to cut the
-    * growing lineage, reliable or local per [[Ckpt]]'s policy.
+    * Checkpointing: every round's label table is checkpointed by
+    * [[Ckpt.iterate]] to cut the growing lineage, reliable or local per
+    * [[Ckpt]]'s policy.
     *
     * Throws IllegalStateException if maxIters rounds don't converge —
     * a partially-propagated labeling is WRONG, never silently returned.
@@ -930,10 +931,8 @@ object Dedup {
       .unionByName(sym.select(col("u"), col("u").as("v")).distinct())
       .repartition(col("v")))
     Ckpt.release(p0) // superseded: every later plan reads `edges` only
-    var labels = edges.select(col("u").as("node")).distinct()
+    val labels0 = edges.select(col("u").as("node")).distinct()
       .withColumn("lbl", col("node"))
-    var converged = false
-    var iter = 0
     // Convergence check WITHOUT a per-round join: every step only ever
     // DECREASES a node's label (least of own + neighbors' labels, then
     // label-of-label, which is <= label), so the label sum is strictly
@@ -943,6 +942,14 @@ object Dedup {
     // — a long sum can overflow at billions of 64-bit ids, and a wrapped
     // (or ANSI-nulled) sum could fake convergence.
     var prevSum: Option[java.math.BigDecimal] = None
+    def sumSettled(labels: DataFrame): Boolean = {
+      val newSum = labels
+        .agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO)).as("s"))
+        .head().getDecimal(0)
+      try prevSum.exists(_.compareTo(newSum) == 0)
+      finally prevSum = Some(newSum)
+    }
     // One propagate+jump unit over the current label table `cur`,
     // jumping through `through`. Jumps go through a SEPARATE table
     // (the previous checkpointed table, or the previous unit's output)
@@ -972,37 +979,21 @@ object Dedup {
           .select(col("n.node").as("node"), col("p_lbl").as("lbl"))
       }
     }
-    while (!converged && iter < maxIters) {
-      // TWO units per checkpointed round: the checkpoint
-      // materialization and the convergence aggregate are
-      // driver-synchronized job waves — the dominant cost on a
-      // chain-diameter graph once each unit is one linear dataflow.
-      // Two units between checkpoints halve those waves. The second
-      // unit's cur is the first unit's (uncheckpointed) output —
-      // referenced exactly once, so its subtree executes once inside
-      // the same job — while its jumps go through the CHECKPOINTED
-      // table (jumping through `once` would re-execute that subtree
-      // three more times; through a one-unit-stale map the jump is
-      // still valid and still compounds the per-round contraction to
-      // ~7x — a diameter-d chain converges in ~log7(d) rounds).
-      val once = unit(labels, labels)
-      val prevLabels = labels
-      labels = Ckpt.save(unit(once, labels)) // cut the growing lineage
-      // the new eager checkpoint is self-contained; round N-1's blocks
-      // are dead now (round 1's `prevLabels` is lazy — release no-ops)
-      Ckpt.release(prevLabels)
-      val newSum = labels
-        .agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO)).as("s"))
-        .head().getDecimal(0)
-      converged = prevSum.exists(_.compareTo(newSum) == 0)
-      prevSum = Some(newSum)
-      iter += 1
+    // TWO units per checkpointed round: the checkpoint materialization
+    // and the convergence aggregate are driver-synchronized job waves —
+    // the dominant cost on a chain-diameter graph once each unit is one
+    // linear dataflow. Two units between checkpoints halve those waves.
+    // The second unit's cur is the first unit's (uncheckpointed) output
+    // — referenced exactly once, so its subtree executes once inside
+    // the same job — while its jumps go through the CHECKPOINTED table
+    // (jumping through the first unit's output would re-execute that
+    // subtree three more times; through a one-unit-stale map the jump
+    // is still valid and still compounds the per-round contraction to
+    // ~7x — a diameter-d chain converges in ~log7(d) rounds).
+    val labels = Ckpt.iterate(labels0, maxIters, name = "componentsFromPairs",
+        done = Some((l, _) => sumSettled(l))) { (cur, _) =>
+      unit(unit(cur, cur), cur)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"componentsFromPairs did not converge after $maxIters rounds; " +
-          "a partial labeling would be wrong — raise maxIters")
     Ckpt.release(edges) // returned plan reads only the final labels
     labels.select(col("node").as("doc_id"), col("lbl").as("rep_doc_id"))
   }
@@ -1019,9 +1010,11 @@ object Dedup {
     * the (shrinking) frontier against the checkpointed edge table
     * (pre-partitioned on the join key, so only the frontier moves), one
     * anti-join against visited, rounds = graph diameter (small for dup
-    * clusters by construction). Visited is re-checkpointed per round to
-    * keep lineage flat. Throws after `maxIters` rounds with a live
-    * frontier — a partial layering is wrong, never silently returned.
+    * clusters by construction). Visited, with each node's layer, is the
+    * one state of a [[Ckpt.iterate]] loop and is re-checkpointed per
+    * round to keep lineage flat. Throws after `maxIters` rounds with a
+    * live frontier — a partial layering is wrong, never silently
+    * returned.
     *
     * Input: (a, b) pairs with a < b. Output: (doc_id, layer) for every
     * node in the pair graph; representatives are layer 0. Checkpoints
@@ -1033,40 +1026,23 @@ object Dedup {
       .unionByName(p0.select(col("b").as("u"), col("a").as("v")))
       .repartition(col("u")))
     val comp = componentsFromPairs(p0)
-    var visited = Ckpt.save(comp.filter(col("doc_id") === col("rep_doc_id"))
+    val reps = Ckpt.save(comp.filter(col("doc_id") === col("rep_doc_id"))
       .select(col("doc_id").as("node"), lit(0L).as("layer")))
-    Ckpt.release(p0) // superseded: edges + the initial visited are saved
-    var frontier = visited
-    var layer = 1
-    var done = false
-    while (!done && layer <= maxIters) {
-      val next = Ckpt.save(edges
-        .join(frontier.select(col("node").as("u")), Seq("u"))
+    Ckpt.release(p0) // superseded: edges + the representatives are saved
+    // One state: every node reached so far with its layer. Round r's
+    // frontier is the layer r-1 rows, and the run is done when round r
+    // added no layer-r row.
+    def layer(visited: DataFrame, r: Int) =
+      visited.filter(col("layer") === r.toLong)
+    val visited = Ckpt.iterate(reps, maxIters, name = "bfsLayers",
+        done = Some((v, r) => layer(v, r).isEmpty)) { (v, r) =>
+      v.unionByName(edges
+        .join(layer(v, r - 1).select(col("node").as("u")), Seq("u"))
         .select(col("v").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("layer", lit(layer.toLong)))
-      val prevFrontier = frontier
-      if (next.isEmpty) {
-        Ckpt.release(next) // empty terminal frontier: nothing reads it
-        done = true
-      } else {
-        val prevVisited = visited
-        visited = Ckpt.save(visited.unionByName(next))
-        Ckpt.release(prevVisited) // new visited checkpoint supersedes it
-        frontier = next
-        layer += 1
-      }
-      // the previous frontier fed only this round's join; idempotent if
-      // it was also the just-released visited (round 1), and must stay
-      // when it IS the live visited (first-round-empty graph edge case)
-      if (!(prevFrontier eq visited)) Ckpt.release(prevFrontier)
+        .join(v, Seq("node"), "left_anti")
+        .withColumn("layer", lit(r.toLong)))
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"bfsLayers frontier still live after $maxIters rounds; " +
-          "a partial layering would be wrong — raise maxIters")
     Ckpt.release(edges) // returned plan reads only the final visited
-    if (!(frontier eq visited)) Ckpt.release(frontier)
     visited.select(col("node").as("doc_id"), col("layer"))
   }
 

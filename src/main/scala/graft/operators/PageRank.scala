@@ -24,10 +24,11 @@ import org.apache.spark.sql.functions._
   * dst with map-side partial sums. The edge list is the big side and is
   * scanned once per iteration; ranks are |V| rows. Nothing collects to
   * the driver, and the rank lineage is CUT every [[CHECKPOINT_EVERY]]
-  * iterations (eager [[Ckpt.save]], the [[Dedup.componentsFromPairs]]
-  * pattern) — without the cut the plan tree nests one join + aggregate
-  * per iteration and analysis/optimization cost explodes at tens of
-  * iterations even though each executed stage is cheap.
+  * iterations (eager saves by [[Ckpt.iterate]], the loop
+  * [[Dedup.componentsFromPairs]] runs on) — without the cut the plan
+  * tree nests one join + aggregate per iteration and
+  * analysis/optimization cost explodes at tens of iterations even
+  * though each executed stage is cheap.
   *
   * Contract: every node must appear as a `src` (for undirected/bipartite
   * graphs pass both edge directions) — sinks would otherwise swallow
@@ -105,27 +106,18 @@ object PageRank {
           .withColumn("is_seed", lit(1L))), Seq("node"), "left")
         .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
     }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("node"), (col("is_seed") * scale).as("rank"))
-    var lastCkpt: DataFrame = null
-    for (i <- 1 to iters) {
+    // The LAST iteration stays lazy so the caller's downstream plan
+    // composes with it as usual.
+    Ckpt.iterate(nodes.select(col("node"), (col("is_seed") * scale).as("rank")),
+        iters, every = checkpointEvery) { (ranks, _) =>
       val contrib = ed.join(ranks, col("src") === col("node"))
         .select(col("dst"), expr("rank div deg").as("c"))
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("s"))
-      ranks = nodes.join(contrib, col("node") === col("dst"), "left")
+      nodes.join(contrib, col("node") === col("dst"), "left")
         .select(col("node"),
           expr(s"(15 * cast($scale as bigint) * is_seed " +
             "+ 85 * coalesce(s, 0)) div 100").as("rank"))
-      // Cut the growing lineage; the LAST iteration stays lazy so the
-      // caller's downstream plan composes with it as usual. Each new
-      // eager periodic checkpoint supersedes the previous one.
-      if (i % checkpointEvery == 0 && i < iters) {
-        val prevCkpt = lastCkpt
-        ranks = Ckpt.save(ranks)
-        lastCkpt = ranks
-        if (prevCkpt != null) Ckpt.release(prevCkpt)
-      }
     }
-    ranks
   }
 }

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * distance table against the edge list (keyed by source node) plus a
   * min-aggregate — both map-side combinable, no driver-side graph. The
   * edge table is materialized once up front and every round's distance
-  * table is eagerly checkpointed ([[Ckpt.save]]), so lineage stays
-  * flat and the (potentially expensive) edge-building pipeline upstream
-  * runs exactly once. H is small by construction; the frontier table is
+  * table but the last is eagerly checkpointed ([[Ckpt.iterate]]), so
+  * lineage stays flat and the (potentially expensive) edge-building
+  * pipeline upstream runs exactly once; the last round composes with
+  * the caller's plan. H is small by construction; the frontier table is
   * bounded by |V|, never by |paths|.
   */
 object ShortestPath {
@@ -32,22 +33,17 @@ object ShortestPath {
                            maxHops: Int): DataFrame = Ckpt.scoped {
     val e = Ckpt.save(edges.select(col("src"), col("dst"),
       col("cost").cast("long").as("cost")))
-    var dist = Ckpt.save(e.sparkSession.range(1)
-      .select(lit(source).cast("long").as("node"),
-        lit(0L).as("min_cost")))
-    var hop = 0
-    while (hop < maxHops) {
+    // Every hop but the last is checkpointed, and that last one reads
+    // `e`, so `e` stays saved for the caller.
+    Ckpt.iterate(e.sparkSession.range(1).select(
+        lit(source).cast("long").as("node"), lit(0L).as("min_cost")),
+        maxHops) { (dist, _) =>
       val relaxed = dist
         .join(e, dist("node") === e("src"))
         .select(e("dst").as("node"),
           (dist("min_cost") + e("cost")).as("min_cost"))
-      val prevDist = dist
-      dist = Ckpt.save(dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("min_cost")).as("min_cost")))
-      Ckpt.release(prevDist) // new eager checkpoint supersedes it
-      hop += 1
+      dist.unionByName(relaxed)
+        .groupBy(col("node")).agg(min(col("min_cost")).as("min_cost"))
     }
-    Ckpt.release(e) // returned plan is the final dist checkpoint alone
-    dist
   }
 }

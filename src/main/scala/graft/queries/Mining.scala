@@ -604,8 +604,8 @@ object Mining {
     // KCORE_ROUNDS-round synchronous h-index iteration — h_0 = degree,
     // h_{t+1} = neighbor H-index — which is pointwise non-increasing
     // and EQUALS exact peeling coreness once converged (Lü et al. 2016;
-    // KCoreTest pins corenessHIndex == coreness on random graphs at
-    // this depth). Fixed rounds make it oracle-expressible as an
+    // KCoreTest pins corenessHIndex to a sequential peel on random
+    // graphs). Fixed rounds make it oracle-expressible as an
     // unrolled CTE chain, exactly like communities_lpa — closing the
     // one `no_oracle` row in CORRECTNESS_r08.
     "kcore_docs" -> ((s, dir) => {

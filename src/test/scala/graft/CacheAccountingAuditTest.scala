@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    released synchronously by clearCache — the Blocking-style
   *    documented contract ("the entry must live until the caller's
   *    clearCache");
-  *  - localCheckpoint entries (the iterative graph family: KCore's
-  *    per-round frontiers etc.): not CacheManager-backed. Superseded
-  *    rounds are released by the operators themselves; the FINAL
+  *  - localCheckpoint entries (the iterative graph family: the
+  *    per-round states of Ckpt.iterate's loops etc.): not
+  *    CacheManager-backed. Superseded rounds are released by the
+  *    operators themselves; the FINAL
   *    returned checkpoints are released deterministically by the
   *    caller-facing Ckpt.releaseAll() (clearCache's analog for
   *    checkpoint blocks), with the ContextCleaner GC path as backstop.

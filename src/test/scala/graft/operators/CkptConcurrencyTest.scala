@@ -70,7 +70,7 @@ class CkptConcurrencyTest extends AnyFunSuite {
   }
 
   test("two operators race a releaseAll hammer without losing blocks") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     val pairs = spark.range(0, 400)
       .select(col("id").as("a"), (col("id") + 1).as("b"))
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -90,7 +90,11 @@ class CkptConcurrencyTest extends AnyFunSuite {
       }),
       new Thread(() => {
         try Ckpt.scoped {
-          assert(KCore.coreness(pairs).count() === 401L)
+          // 49 of its 50 hops are saved, each released by the next
+          val edges = pairs.select(col("a").as("src"), col("b").as("dst"),
+            lit(1L).as("cost"))
+          assert(ShortestPath.boundedCheapestPaths(edges, source = 0L,
+            maxHops = 50).count() === 51L)
         } catch { case t: Throwable => err = t }
       }))
     hammer.start()

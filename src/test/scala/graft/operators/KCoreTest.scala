@@ -9,9 +9,35 @@ class KCoreTest extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def corenessOf(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    KCore.coreness(pairs.toDF("a", "b"))
+  private def hIndex(pairs: Seq[(Long, Long)], rounds: Int): Map[Long, Long] =
+    KCore.corenessHIndex(pairs.toDF("a", "b"), rounds)
       .as[(Long, Long)].collect().toMap
+
+  private def corenessOf(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    hIndex(pairs, rounds = 25)
+
+  /** Reference coreness: sequential peeling over an adjacency map — for
+    * k = 1, 2, …, delete nodes of degree < k until none is left; a node
+    * deleted at level k has coreness k - 1.
+    */
+  private def peel(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    var adj = pairs.flatMap(p => Seq(p, p.swap))
+      .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).toSet }
+    val ref = scala.collection.mutable.Map.empty[Long, Long]
+    var k = 1L
+    while (adj.nonEmpty) {
+      var changed = true
+      while (changed) {
+        val below = adj.filter(_._2.size < k).keySet
+        changed = below.nonEmpty
+        below.foreach { v => ref(v) = k - 1 }
+        adj = (adj -- below).map { case (u, vs) => u -> (vs -- below) }
+      }
+      adj.keys.foreach(v => ref(v) = k)
+      k += 1
+    }
+    ref.toMap
+  }
 
   test("mixed graph: clique, triangle, chain, pendant") {
     // 4-clique {1,2,3,4} — coreness 3; bridge chain 4-5, 5-6 — 5 and 6
@@ -21,12 +47,12 @@ class KCoreTest extends AnyFunSuite {
       i <- 1L to 4L; j <- (i + 1) to 4L
     } yield (i, j)
     val rest = Seq((4L, 5L), (5L, 6L), (7L, 8L), (7L, 9L), (8L, 9L), (9L, 10L))
-    val result = corenessOf(clique ++ rest)
     val expected = Map(
       1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 1L, 6L -> 1L,
       7L -> 2L, 8L -> 2L, 9L -> 2L, 10L -> 1L)
-    assert(result == expected)
+    assert(peel(clique ++ rest) == expected)
+    assert(corenessOf(clique ++ rest) == expected)
   }
 
   test("single edge: both endpoints coreness 1") {
@@ -49,23 +75,7 @@ class KCoreTest extends AnyFunSuite {
         if rnd.nextDouble() < 0.15
       } yield (i, j)).toVector
       if (pairs.nonEmpty) {
-        // reference: sequential peeling over an adjacency map
-        var adj = pairs.flatMap(p => Seq(p, p.swap))
-          .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).toSet }
-        val ref = scala.collection.mutable.Map.empty[Long, Long]
-        var k = 1L
-        while (adj.nonEmpty) {
-          var changed = true
-          while (changed) {
-            val below = adj.filter(_._2.size < k).keySet
-            changed = below.nonEmpty
-            below.foreach { v => ref(v) = k - 1 }
-            adj = (adj -- below).map { case (u, vs) => u -> (vs -- below) }
-          }
-          adj.keys.foreach(v => ref(v) = k)
-          k += 1
-        }
-        assert(corenessOf(pairs) == ref.toMap, s"trial $trial")
+        assert(corenessOf(pairs) == peel(pairs), s"trial $trial")
       }
     }
   }
@@ -74,8 +84,8 @@ class KCoreTest extends AnyFunSuite {
     // Lü et al. 2016: the iterated neighbor H-index equals coreness at
     // its fixpoint, and the sequence is pointwise non-increasing — so
     // at a rounds count past convergence the fixed-round operator must
-    // equal the peeling one. Random graphs, same generator family as
-    // the peeling reference test; plus extra rounds are a no-op.
+    // equal the peeling reference. Random graphs, same generator family
+    // as the reference test above; plus extra rounds are a no-op.
     val rnd = new scala.util.Random(13)
     for (trial <- 1 to 3) {
       val n = 25
@@ -84,13 +94,9 @@ class KCoreTest extends AnyFunSuite {
         if rnd.nextDouble() < 0.2
       } yield (i, j)).toVector
       if (pairs.nonEmpty) {
-        val exact = corenessOf(pairs)
-        val h = KCore.corenessHIndex(pairs.toDF("a", "b"), rounds = 25)
-          .as[(Long, Long)].collect().toMap
-        assert(h == exact, s"trial $trial")
-        val h2 = KCore.corenessHIndex(pairs.toDF("a", "b"), rounds = 30)
-          .as[(Long, Long)].collect().toMap
-        assert(h2 == h, s"trial $trial idempotent tail")
+        val h = hIndex(pairs, rounds = 25)
+        assert(h == peel(pairs), s"trial $trial")
+        assert(hIndex(pairs, rounds = 30) == h, s"trial $trial idempotent tail")
       }
     }
   }
@@ -101,10 +107,7 @@ class KCoreTest extends AnyFunSuite {
     // the query's declared KCORE_ROUNDS=4.
     val clique = for { i <- 1L to 5L; j <- (i + 1) to 5L } yield (i, j)
     val g = clique ++ Seq((5L, 6L), (7L, 8L))
-    val exact = corenessOf(g)
-    val h2 = KCore.corenessHIndex(g.toDF("a", "b"), rounds = 2)
-      .as[(Long, Long)].collect().toMap
-    assert(h2 == exact)
+    assert(hIndex(g, rounds = 2) == peel(g))
   }
 
   test("h-index: reliable checkpoint dir mode matches local mode") {

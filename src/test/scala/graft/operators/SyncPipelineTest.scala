@@ -69,6 +69,8 @@ class SyncPipelineTest extends AnyFunSuite with TimeLimits with Eventually {
       ("daily_enrollment", "deleted", 1L)))
   }
 
+  // The metrics are counted from the collected update sets before the
+  // first sink call, not during the sink write; the name is kept.
   test("runObserved collects per-entity row metrics during the sink write, no re-scan") {
     val faculty = Seq((1L, "prof.a"), (2L, "prof.b")).toDF("id_num", "login_id")
     val facMirror = Seq((1L, "prof.a")).toDF("id_num", "login_id")
