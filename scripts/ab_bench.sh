@@ -13,8 +13,11 @@
 # MemTotal clamped to 2-8g).
 # output: one line per run and query (arm, round, per-query seconds =
 # min of the bench unit's samples, then the headline sample's Spark
-# jobs in total and per call site from Bench's `layers`). Paste the
-# table into the round notes / an AB_*.md artifact.
+# jobs in total and per call site from Bench's `layers`). After the
+# rounds, per query and arm: the min-max across rounds of those job
+# counts, in total and per call site, so a job that AQE submits in
+# some runs and not others reads as spread, not as a change. Paste the
+# output into the round notes / an AB_*.md artifact.
 set -euo pipefail
 QUERY=$1
 REV=$2
@@ -26,7 +29,8 @@ REPO=$(git rev-parse --show-toplevel)
 # The OLD arm is a plain export of <old-rev> (no worktree bookkeeping
 # in the repo); TMPDIR picks where it lands.
 WT=$(mktemp -d "${TMPDIR:-/tmp}/ab_wt.XXXXXX")
-trap 'rm -rf "$WT"' EXIT
+JOBS=$(mktemp "${TMPDIR:-/tmp}/ab_jobs.XXXXXX")
+trap 'rm -rf "$WT" "$JOBS"' EXIT
 git -C "$REPO" archive "$REV" | tar -x -C "$WT"
 
 echo "ab_bench: building old jar at $REV ..." >&2
@@ -39,10 +43,11 @@ run_arm() { # $1 = dir, $2 = label, $3 = round
   out=$(cd "$1" && SPARK_GRAFT_ONLY="$QUERY" \
     SPARK_GRAFT_CPUS=$CPUS SPARK_DRIVER_MEM=$MEM \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep -m1 '"metric"')
-  AB_OUT="$out" python3 - "$2" "$3" "$QUERY" <<'PY'
+  AB_OUT="$out" python3 - "$2" "$3" "$QUERY" "$JOBS" <<'PY'
 import json, os, sys
 label, rnd = sys.argv[1], sys.argv[2]
 d = json.loads(os.environ["AB_OUT"])
+runs = open(sys.argv[4], "a")
 for q in sys.argv[3].split(","):
     samples = d.get("samples", {}).get(q) or [d["queries"][q]]
     guard = d.get("guards", {}).get(q)
@@ -53,6 +58,8 @@ for q in sys.argv[3].split(","):
         sites = sorted(lay["sites"].items(), key=lambda kv: kv[0])
         print(f"  jobs {lay['jobs']}: " + ", ".join(
             f"{site} x{v['jobs']}" for site, v in sites))
+        runs.write(json.dumps({"arm": label, "query": q, "jobs": lay["jobs"],
+            "sites": {k: v["jobs"] for k, v in sites}}) + "\n")
 PY
 }
 
@@ -61,3 +68,18 @@ for r in $(seq 1 "$ROUNDS"); do
   run_arm "$WT" "OLD" "$r"
   run_arm "$REPO" "NEW" "$r"
 done
+
+echo "headline jobs, min-max over $ROUNDS rounds:"
+python3 - "$JOBS" "$QUERY" <<'PY'
+import json, sys
+runs = [json.loads(l) for l in open(sys.argv[1])]
+span = lambda xs: f"{min(xs)}" if min(xs) == max(xs) else f"{min(xs)}-{max(xs)}"
+for q in sys.argv[2].split(","):
+    for arm in ("OLD", "NEW"):
+        rs = [r for r in runs if r["query"] == q and r["arm"] == arm]
+        if not rs:
+            continue
+        sites = sorted({s for r in rs for s in r["sites"]})
+        print(f"{arm} {q}: jobs {span([r['jobs'] for r in rs])}: " + ", ".join(
+            f"{s} x{span([r['sites'].get(s, 0) for r in rs])}" for s in sites))
+PY

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Where a body's Spark work went, per call site. Each job is attributed
   * to the description of its SQL execution, which is the user call site
-  * of the action that started it (`count at LabelProp.scala:113`); AQE's
+  * of the action that started it (`first at LabelProp.scala:93`); AQE's
   * query-stage jobs carry that execution's id, so they land on the
   * action, not on their own `CompletableFuture` stage names. A job
   * outside any SQL execution, such as a parquet schema read, falls back

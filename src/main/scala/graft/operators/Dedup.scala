@@ -454,8 +454,11 @@ object Dedup {
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("inter"))
 
-  /** Rep-doc count up to which [[containmentPairs]]' verify broadcasts
-    * its per-doc shingle arrays: at ~1.2 KB of array per doc the
+  /** Doc count up to which [[containmentPairs]]' verify broadcasts its
+    * per-doc shingle arrays — counted as the distinct doc_ids of the
+    * post-cap index, which are exactly the broadcast rows (a
+    * representative whose shingles all fall over the df cap has no
+    * array): at ~1.2 KB of array per doc the
     * broadcast sits near 240 MB at the cap — comfortable on the target
     * executors. Past it (millions of distinct docs at 100 TB) the same
     * joins run as plain shuffled joins.
@@ -483,7 +486,7 @@ object Dedup {
     *     positional bound drops candidates that cannot reach ⌈t·|A|⌉;
     *  5. one verify: size(array_intersect) of the two docs' shingle
     *     arrays. The doc-array joins carry a broadcast hint when the
-    *     representative count is at most [[ARRAY_VERIFY_MAX_DOCS]], and
+    *     post-cap index holds at most [[ARRAY_VERIFY_MAX_DOCS]] docs, and
     *     are plain shuffled joins otherwise — the only size-dependent
     *     choice, and it moves the physical plan, never the rows.
     *
@@ -586,10 +589,12 @@ object Dedup {
       case None => invAll.drop("k")
     }).withColumn("sz",
       count(lit(1)).over(Window.partitionBy(col("doc_id")))))
-    // Force the post-cap index into its cache so the pre-cap postings
-    // cache (only needed for the injectivity check + this one build)
-    // can release NOW instead of riding through the pair joins.
-    inv.count()
+    // One job forces the post-cap index into its cache, so the pre-cap
+    // postings cache (only needed for the injectivity check + this one
+    // build) can release NOW instead of riding through the pair joins,
+    // and sizes the verify: the distinct doc_ids of inv are exactly the
+    // rows of the docsArr table below.
+    val nDocs = inv.agg(countDistinct(col("doc_id"))).first().getLong(0)
     rawInv.unpersist()
     // Size-complementary filter, applied map-side right after the
     // shingle join and before anything shuffles on (a,b): a-side docs
@@ -657,10 +662,9 @@ object Dedup {
     // broadcast ceiling the array joins are map-side (zero shuffle);
     // past it they shuffle, with hashed 8-byte keys ~2·nCand·avgSz·8
     // bytes. docsArr is persisted because both joins read it.
-    val nRep = weights.count()
-    val bcast = nRep <= bcastDocsCap
+    val bcast = nDocs <= bcastDocsCap
     Guard.record("containment",
-      s"verify=${if (bcast) "arrays" else "arrshuffle"} nRep=$nRep " +
+      s"verify=${if (bcast) "arrays" else "arrshuffle"} nDocs=$nDocs " +
         s"keys=${if (hashKeys) "hashed64" else "text"}")
     val docsArr = materialized(inv.groupBy(col("doc_id"))
       .agg(collect_list(col("s")).as("arr")))
@@ -1093,10 +1097,6 @@ object Dedup {
       .groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("rep_doc_id"), count(lit(1)).as("n_docs"))
 
-  /** Embedding near-duplicate pairs: blocked pair join + exact quantized
-    * cosine >= threshold. `blockKey` bounds the pair space (a label, or an
-    * LSH bucket from VectorFns.lshBucket at scale).
-    */
   /** Embedding near-duplicate pairs via banded sign-projection LSH —
     * the scale path for [[embeddingNearDup]]: no externally supplied
     * block key, no corpus cap. `nTables` independent hash tables of
@@ -1268,6 +1268,10 @@ object Dedup {
     cross.unionByName(intra)
   }
 
+  /** Embedding near-duplicate pairs: blocked pair join + exact quantized
+    * cosine >= threshold. `blockKey` bounds the pair space (a label, or an
+    * LSH bucket from VectorFns.lshBucket at scale).
+    */
   def embeddingNearDup(embs: DataFrame, blockKey: Column, threshold: Double): DataFrame = {
     // Norms are computed once per vector before the pair join (n of them),
     // not once per pair (n^2 of them); same doubles, same cosine values.

@@ -3,8 +3,9 @@ package graft.operators
 /** Registry for data-dependent physical-plan decisions ("guards").
   *
   * Operators whose physical shape is chosen at runtime from measured
-  * statistics (containment broadcast-vs-shuffle verify arrays,
-  * LPA packed-long-vs-struct argmax, embed broadcast-vs-shuffle
+  * statistics (containment broadcast-vs-shuffle verify arrays, LPA
+  * broadcast-vs-shuffle votes and packed-long-vs-struct argmax, both
+  * on one `lpa` line from one probe, embed broadcast-vs-shuffle
   * vector fetch, prefix-vs-plain Jaccard index) record the decision
   * here. Each `record` still emits the historical `graft.guard ...`
   * stderr line for ad-hoc runs, but the registry is what makes the

@@ -372,8 +372,8 @@ object Advanced {
     // identical update), summarized as the community-size histogram.
     // Round 16 (guide §2.4/§3.1): the pair list is handed RAW to
     // communitiesDistinct, which dedups INSIDE the single
-    // symmetrize+partition exchange — same distinct symmetric edge set
-    // as `.distinct()` + communities (part ids are even, supplier ids
+    // symmetrize+partition exchange — the distinct symmetric edge set
+    // the oracle's `DISTINCT` builds (part ids are even, supplier ids
     // odd, so neither reversed duplicates nor self-pairs can exist) —
     // and propagates votes under the byte-budgeted broadcast regime:
     // with edges frozen on HashPartitioning(u) and the per-round label

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.{TextFns, TopKAgg}
 import graft.operators.Layout
+import TextDedup.hexValSql
 import Util._
 
 /** Extended analytics surface: pivot, grouping sets, exact percentiles,
@@ -18,10 +19,6 @@ object Extended {
     * (kept in exact long arithmetic on both engines).
     */
   private val POW31: Seq[Long] = Seq.iterate(1L, 8)(_ * 31L)
-
-  /** hex-digit value of 1-based digit b of md5 hex m (DuckDB side). */
-  private def hexValSql(m: String, b: Int) =
-    s"(CASE WHEN ascii(substr($m, $b, 1)) >= 97 THEN ascii(substr($m, $b, 1)) - 87 ELSE ascii(substr($m, $b, 1)) - 48 END)"
 
   /** BPE-ish token classes: letter runs, digit runs, single punctuation. */
   private val BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"

@@ -19,7 +19,7 @@ class LayersTest extends AnyFunSuite {
     } finally spark.catalog.clearCache()
 
     val sites = first.sites.keys
-    assert(sites.exists(_.startsWith("count at LabelProp.scala")), sites)
+    assert(sites.exists(_.startsWith("first at LabelProp.scala")), sites)
     assert(sites.exists(_.contains("LayersTest.scala")), sites)
     assert(first.sites.values.map(_.jobs).sum == first.total.jobs)
     assert(first.total.jobs > 0 && first.total.tasks > 0)

@@ -10,8 +10,42 @@ class LabelPropTest extends AnyFunSuite {
   import spark.implicits._
 
   private def lpa(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    LabelProp.communities(edges.toDF("a", "b"), iters)
+    LabelProp.communitiesDistinct(edges.toDF("a", "b"), iters)
       .as[(Long, Long)].collect().toMap
+
+  /** Plain synchronous LPA: a node's neighbors are its distinct
+    * symmetric neighbors (a self-pair makes a node its own neighbor),
+    * the node also votes for its own label, and the label with the most
+    * votes wins, ties going to the smallest label.
+    */
+  private def model(pairs: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val nbrs = (pairs ++ pairs.map(_.swap)).groupBy(_._1)
+      .map { case (u, es) => u -> es.map(_._2).distinct }
+    var labels = nbrs.keys.map(u => u -> u).toMap
+    for (_ <- 1 to iters) {
+      labels = nbrs.map { case (u, vs) =>
+        val votes = (labels(u) +: vs.map(labels))
+          .groupBy(identity).map { case (l, ls) => (l, ls.size) }
+        u -> votes.minBy { case (l, n) => (-n, l) }._1
+      }
+    }
+    labels
+  }
+
+  /** Both vote regimes against the model: the broadcast regime at the
+    * default budget and the shuffle regime at budget 0.
+    */
+  private def assertModel(raw: Seq[(Long, Long)], iters: Int,
+                          clue: String): Unit = {
+    val ref = model(raw, iters)
+    val bc = LabelProp.communitiesDistinct(raw.toDF("a", "b"), iters)
+      .as[(Long, Long)].collect().toMap
+    assert(bc == ref, s"broadcast regime, $clue, iters=$iters")
+    val sh = LabelProp.communitiesDistinctBudget(raw.toDF("a", "b"), iters,
+        budgetMB = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(sh == ref, s"shuffle regime, $clue, iters=$iters")
+  }
 
   test("two disjoint triangles settle on their min-id labels") {
     val out = lpa(Seq((1L, 2L), (2L, 3L), (1L, 3L),
@@ -33,26 +67,14 @@ class LabelPropTest extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("iters must be at least 1") {
-    intercept[IllegalArgumentException] {
-      LabelProp.communities(Seq((1L, 2L)).toDF("a", "b"), iters = 0)
-    }
-  }
-
-  test("communitiesDistinct == communities(distinct) on a raw pair list " +
+  test("communitiesDistinct == the LPA model on a raw pair list " +
       "with duplicates (no reversed duplicates)") {
     // Bipartite-style orientation (a even, b odd) — the communities_lpa
     // encoding — with heavy duplication, so the fused
     // repartition+dropDuplicates edge build has real work to do.
     val raw = Seq((2L, 3L), (2L, 3L), (2L, 5L), (4L, 3L), (4L, 7L),
       (6L, 7L), (6L, 7L), (6L, 7L), (8L, 9L), (2L, 5L), (4L, 3L))
-    for (iters <- 1 to 3) {
-      val fused = LabelProp.communitiesDistinct(raw.toDF("a", "b"), iters)
-        .as[(Long, Long)].collect().toMap
-      val ref = LabelProp.communities(raw.toDF("a", "b").distinct(), iters)
-        .as[(Long, Long)].collect().toMap
-      assert(fused == ref, s"iters=$iters")
-    }
+    for (iters <- 1 to 3) assertModel(raw, iters, "packed")
   }
 
   test("communitiesDistinct handles ids outside the packed-argmax range " +
@@ -60,35 +82,36 @@ class LabelPropTest extends AnyFunSuite {
     val big = 1L << 40
     val raw = Seq((big + 2, big + 3), (big + 2, big + 3), (big + 2, big + 5),
       (big + 4, big + 3), (big + 8, big + 9))
-    val fused = LabelProp.communitiesDistinct(raw.toDF("a", "b"), 2)
-      .as[(Long, Long)].collect().toMap
-    val ref = LabelProp.communities(raw.toDF("a", "b").distinct(), 2)
-      .as[(Long, Long)].collect().toMap
-    assert(fused == ref)
+    for (iters <- 1 to 3) assertModel(raw, iters, "struct")
   }
 
   test("communitiesDistinct broadcast and shuffle vote regimes agree " +
-      "with communities(distinct) (self-vote fold, both argmax paths)") {
+      "with the LPA model (self-vote fold, both argmax paths)") {
     // Star + triangle-ish mix where self-votes DECIDE some nodes (a
     // node whose own label got no edge vote must still be a candidate
-    // with count 1), plus an isolated-pair edge. Run the same corpus
-    // through the broadcast regime (default budget) and the shuffle
-    // fallback (budget 0) and require both to equal the multiset
-    // reference on the distinct pair list.
+    // with count 1), plus an isolated-pair edge.
     val raw = Seq((2L, 3L), (2L, 5L), (2L, 7L), (4L, 3L), (4L, 5L),
       (6L, 3L), (8L, 9L), (10L, 11L), (10L, 13L), (12L, 11L))
     val rawBig = raw.map { case (a, b) => (a + (1L << 40), b + (1L << 40)) }
     for ((data, tag) <- Seq((raw, "packed"), (rawBig, "struct"));
-         iters <- 1 to 3) {
-      val ref = LabelProp.communities(data.toDF("a", "b").distinct(), iters)
-        .as[(Long, Long)].collect().toMap
-      val bc = LabelProp.communitiesDistinct(data.toDF("a", "b"), iters)
-        .as[(Long, Long)].collect().toMap
-      assert(bc == ref, s"broadcast regime, $tag, iters=$iters")
-      val sh = LabelProp.communitiesDistinctBudget(data.toDF("a", "b"), iters,
-          budgetMB = 0)
-        .as[(Long, Long)].collect().toMap
-      assert(sh == ref, s"shuffle regime, $tag, iters=$iters")
+         iters <- 1 to 3)
+      assertModel(data, iters, tag)
+  }
+
+  test("communitiesDistinct == the LPA model on seeded random graphs " +
+      "with duplicates, reversed duplicates and self-pairs") {
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 3) {
+      val n = 25
+      val offset = if (trial == 2) 1L << 40 else 0L
+      val pairs = (for {
+        i <- 0L until n; j <- i until n
+        if rnd.nextDouble() < (if (i == j) 0.2 else 0.15)
+      } yield (i + offset, j + offset)).toVector
+      val dups = pairs.filter(_ => rnd.nextDouble() < 0.3)
+      val reversed = pairs.filter(_ => rnd.nextDouble() < 0.3).map(_.swap)
+      val raw = rnd.shuffle(pairs ++ dups ++ reversed)
+      assertModel(raw, iters = trial, s"trial $trial")
     }
   }
 
