@@ -20,15 +20,6 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // Dev-only subset filter (comma-separated names); the driver sets
-    // only SPARK_GRAFT_SF_DIR, so production runs always time everything.
-    // A filtered run (per-query A/B, scaling probe) skips the streaming
-    // surface and the state bench unless it names one of their entries.
-    val onlyFilter: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => onlyFilter.forall(_.contains(n)))
-
     // Per-query unit: one untimed warmup run, one timed run, then
     // clearCache. The warmup absorbs the one-off JVM costs — C2
     // compilation of large generated methods alone inflates a first run
@@ -95,16 +86,11 @@ object Bench {
       } finally {
         val g = graft.operators.Guard.snapshot()
         if (g.nonEmpty) guardsByQuery(name) = g
-        // Deterministic inter-query reset: clearCache drops CacheManager
-        // entries, but the FINAL localCheckpoint backing a graph
-        // operator's result is not one — only Ckpt.releaseAll can drop
-        // those blocks now rather than at some future weak-ref GC. The
-        // 100x decade probe measured the asynchronous path directly:
-        // dedup_survivorship timed 84.7 s ninth in a shared JVM vs
-        // 13.2 s in isolation, purely from predecessors' lingering
-        // checkpoint blocks (storage pressure -> execution spills).
-        graft.operators.Ckpt.releaseAll()
-        spark.catalog.clearCache(); System.gc()
+        // Deterministic inter-query reset; the 100x decade probe timed
+        // dedup_survivorship at 84.7 s ninth in a shared JVM vs 13.2 s
+        // in isolation, purely from predecessors' lingering checkpoint
+        // blocks (storage pressure -> execution spills).
+        LocalSession.reset(spark); System.gc()
       }
     }
     // Streaming surface: end-to-end curation ingest → truncate-reload
@@ -300,17 +286,14 @@ object Bench {
     val stateNames = stateProviders
       .flatMap(p => Seq(s"streaming_state_$p", s"streaming_state_${p}_restart"))
       .toSet
-    // Fail fast on names that match no entry: a misspelled filter would
-    // otherwise time nothing and print a zero total with no failures.
-    onlyFilter.foreach { f =>
-      val unknown = f -- SparkEntry.queries.keySet -- streamingNames -- stateNames
-      if (unknown.nonEmpty) {
-        System.err.println("[bench] unknown SPARK_GRAFT_ONLY names: " +
-          unknown.toSeq.sorted.mkString(", "))
-        spark.stop()
-        sys.exit(2)
-      }
-    }
+    // Dev-only subset filter (comma-separated names); the driver sets
+    // only SPARK_GRAFT_SF_DIR, so production runs always time everything.
+    // A filtered run (per-query A/B, scaling probe) skips the streaming
+    // surface and the state bench unless it names one of their entries.
+    val onlyFilter = LocalSession.only(spark, "bench",
+      SparkEntry.queries.keySet ++ streamingNames ++ stateNames)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => onlyFilter.forall(_.contains(n)))
 
     val p1 = names.map(n => n -> timeOne(n)).toMap
     val okTimes = p1.values.flatten.map(_._1).toSeq.sorted

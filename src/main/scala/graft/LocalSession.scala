@@ -22,4 +22,36 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     (spark, ScalePosture.configure(spark, sfDir))
   }
+
+  /** The dev-only `SPARK_GRAFT_ONLY` subset (comma-separated names), or
+    * None when it is unset. A name outside `known` fails fast: a
+    * misspelled filter would otherwise run nothing and report no
+    * failure, so it is printed as `[tool] unknown SPARK_GRAFT_ONLY
+    * names: ...`, the session stops and the JVM exits 2.
+    */
+  def only(spark: SparkSession, tool: String, known: Set[String]): Option[Set[String]] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    only.foreach { names =>
+      val unknown = names -- known
+      if (unknown.nonEmpty) {
+        System.err.println(
+          s"[$tool] unknown SPARK_GRAFT_ONLY names: ${unknown.toSeq.sorted.mkString(", ")}")
+        spark.stop()
+        sys.exit(2)
+      }
+    }
+    only
+  }
+
+  /** The reset between two queries: query-local persists are scoped to
+    * one query, so every cached frame is dropped; the graph operators'
+    * result checkpoints are not CacheManager entries, and
+    * `Ckpt.releaseAll` drops their blocks now rather than at some future
+    * weak-ref GC (predecessors' lingering blocks once slowed a later
+    * query 6x through storage pressure and execution spills).
+    */
+  def reset(spark: SparkSession): Unit = {
+    operators.Ckpt.releaseAll()
+    spark.catalog.clearCache()
+  }
 }

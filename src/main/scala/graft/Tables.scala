@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
@@ -45,11 +45,12 @@ object Tables {
     * actually produced: the footer is read once either way, so the
     * branch costs nothing, and every downstream query sees one
     * canonical micros TIMESTAMP column (session tz pinned UTC, so the
-    * NTZ wall-clock equals the instant).
+    * NTZ wall-clock equals the instant). `nanosAsLong` is scoped to this
+    * relation (`scopedRead`); the session's own conf is left as it is.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
+    val raw = GraftSqlBridge.scopedRead(s,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")(table(_, d, "events"))
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -13,21 +13,9 @@ object Verify {
     System.err.println(s"[verify] posture: $posture")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset: comma-separated query names. Driver sets nothing,
-    // so the full dump always runs at the gate.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // Fail fast on names that resolve to no query — a one-character typo
-    // in SPARK_GRAFT_ONLY must not silently run nothing and (below)
-    // delete every previous dump in outDir.
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[verify] unknown SPARK_GRAFT_ONLY names: ${unknown.toSeq.sorted.mkString(", ")}")
-        spark.stop()
-        sys.exit(2)
-      }
-    }
+    // so the full dump always runs at the gate. An unknown name exits
+    // before anything below deletes the previous dumps in outDir.
+    val only = LocalSession.only(spark, "verify", SparkEntry.queries.keySet)
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name))
     }
@@ -65,14 +53,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
         operators.Guard.clear()
-        // Query-local persists are scoped to one query: without this, a
-        // full 232-query dump accumulates every query's caches and ends
-        // up relying on LRU eviction + disk spill at larger SFs. The
-        // graph operators' result checkpoints are NOT CacheManager
-        // entries — releaseAll is their clearCache analog (each result
-        // is fully written out above, never re-read).
-        operators.Ckpt.releaseAll()
-        spark.catalog.clearCache()
+        // Without the reset a full dump accumulates every query's caches
+        // and ends up relying on LRU eviction + disk spill at larger SFs
+        // (each result is fully written out above, never re-read).
+        LocalSession.reset(spark)
       }
     }
     Files.writeString(Paths.get(s"$outDir/guards.json"),

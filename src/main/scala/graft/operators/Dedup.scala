@@ -1097,6 +1097,18 @@ object Dedup {
       .groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("rep_doc_id"), count(lit(1)).as("n_docs"))
 
+  /** floor(log2(max(1, n / ref))) extra bits over `base`, capped at
+    * `maxBits` — the corpus-adaptive bucket width. Integer-exact
+    * (highestOneBit position), so the DuckDB twin
+    * `least(base + length(bin(greatest(n // ref, 1))) - 1, maxBits)`
+    * computes the identical value and the banding stays mirrored.
+    */
+  def adaptiveBits(base: Int, n: Long, ref: Long, maxBits: Int): Int = {
+    val extra = 63 - java.lang.Long.numberOfLeadingZeros(
+      math.max(1L, n / ref))
+    math.min(base + extra, maxBits)
+  }
+
   /** Embedding near-duplicate pairs via banded sign-projection LSH —
     * the scale path for [[embeddingNearDup]]: no externally supplied
     * block key, no corpus cap. `nTables` independent hash tables of
@@ -1113,56 +1125,27 @@ object Dedup {
     * all-pairs at the declared query's parameters, with zero missed
     * planted duplicates). The pair set is DISTINCT-ed (a pair can
     * collide in several tables) BEFORE vectors are fetched, so exact
-    * cosine runs once per candidate; raise `nBits` with log(n) to hold
-    * per-bucket occupancy flat at cluster scale.
+    * cosine runs once per candidate.
+    *
+    * `tblOff` spaces each table's projection block: `nBits` for a fixed
+    * width, `maxBits` when the width is corpus-adaptive, so the
+    * projection set per table is stable across widths. With `adaptRef`
+    * the bucket width grows as floor(log2(nReps / refReps)) extra bits
+    * over `nBits` (capped at `maxBits`), holding per-bucket occupancy
+    * ≈ refReps/2^nBits FLAT at any corpus scale — the round-14 30x probe
+    * measured the fixed-width detector at scaling exponent 1.74 (bucket
+    * occupancy grows linearly, in-bucket pairs quadratically). The rep
+    * count that sizes the width is the SAME count the replica
+    * contraction already needs, so the decision costs nothing extra; it
+    * is recorded via [[Guard]] (`bits=`). Boundary-recall tradeoff is
+    * explicit: pairs AT the cosine threshold lose per-table collision
+    * probability with every added bit (the embed_lsh_recall audit
+    * measures recall at the width the full corpus actually uses), while
+    * exactly-parallel duplicates collide at any width. Holding boundary
+    * recall flat instead would mean raising nTables alongside — a cost
+    * knob callers own, not a default.
     */
-  def embeddingNearDupLsh(embs: DataFrame, threshold: Double, dims: Int,
-                          nTables: Int = 2, nBits: Int = 8,
-                          probe: Boolean = false): DataFrame =
-    embeddingNearDupLshAt(embs, threshold, dims, nTables, nBits,
-      tblOff = nBits, probe = probe)
-
-  /** floor(log2(max(1, n / ref))) extra bits over `base`, capped at
-    * `maxBits` — the corpus-adaptive bucket width. Integer-exact
-    * (highestOneBit position), so the DuckDB twin
-    * `least(base + length(bin(greatest(n // ref, 1))) - 1, maxBits)`
-    * computes the identical value and the banding stays mirrored.
-    */
-  def adaptiveBits(base: Int, n: Long, ref: Long, maxBits: Int): Int = {
-    val extra = 63 - java.lang.Long.numberOfLeadingZeros(
-      math.max(1L, n / ref))
-    math.min(base + extra, maxBits)
-  }
-
-  /** Corpus-adaptive [[embeddingNearDupLshAt]]: bucket width grows as
-    * floor(log2(nReps / refReps)) extra bits over `nBits` (capped at
-    * `maxBits`), holding per-bucket occupancy ≈ refReps/2^nBits FLAT at
-    * any corpus scale — the round-14 30x probe measured the fixed-width
-    * detector at scaling exponent 1.74 (bucket occupancy grows linearly,
-    * in-bucket pairs quadratically); with the width tracking log(n) the
-    * pair space stays ~linear. The rep count that sizes the width is the
-    * SAME count the replica contraction already needs, so the decision
-    * costs nothing extra; it is recorded via [[Guard]] (`bits=`).
-    * Boundary-recall tradeoff is explicit: pairs AT the cosine threshold
-    * lose per-table collision probability with every added bit (the
-    * embed_lsh_recall audit measures recall at the width the full corpus
-    * actually uses), while exactly-parallel duplicates collide at any
-    * width. Holding boundary recall flat instead would mean raising
-    * nTables alongside — a cost knob callers own, not a default.
-    */
-  def embeddingNearDupLshAdaptive(embs: DataFrame, threshold: Double,
-                                  dims: Int, nTables: Int, nBits: Int,
-                                  refReps: Long, maxBits: Int): DataFrame =
-    embeddingNearDupLshAt(embs, threshold, dims, nTables, nBits,
-      tblOff = maxBits, probe = false, adaptRef = Some(refReps),
-      maxBits = maxBits)
-
-  /** Core of the banded-LSH near-dup detector; `tblOff` spaces each
-    * table's projection block (pass maxBits when the effective width is
-    * corpus-adaptive so the projection set per table is stable across
-    * widths, nBits for the fixed-width legacy layout).
-    */
-  private[graft] def embeddingNearDupLshAt(
+  def embeddingNearDupLsh(
       embs: DataFrame, threshold: Double, dims: Int,
       nTables: Int, nBits: Int, tblOff: Int,
       probe: Boolean = false, adaptRef: Option[Long] = None,

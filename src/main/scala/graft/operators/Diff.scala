@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Diff/sync operators — the engine's reason to exist.
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   *    "truth" side shuffles.
   *  - When the mirror side is a small dimension, Catalyst/AQE picks a
   *    broadcast anti-join automatically; don't force it for big mirrors.
-  *  - `changedRows` is one full-outer join, not two anti-joins — a single
-  *    shuffle instead of two.
+  *  - `changeSet` (and `changedRows`, which is `changeSet` over the keys)
+  *    is one full-outer join, not two anti-joins — a single shuffle
+  *    instead of two.
   */
 object Diff {
 
@@ -33,17 +34,17 @@ object Diff {
   /** Symmetric diff with status derivation (SURVEY §2.3 J6 —
     * DailyEnrollment.sql): rows only in `truth` become adds
     * (status=active), rows only in `mirror` become drops (status=deleted).
-    * One full-outer join on the composite key; the Canvas SIS enrollment
-    * format carries the status column
+    * It is [[changeSet]] over the two key projections: with no data
+    * columns no key can be an update, so `upsert` is an add and `delete`
+    * a drop (duplicate keys pair up as the join does). The Canvas SIS
+    * enrollment format carries the status column
     * (reference tests/test_connect.py:160-161).
     */
   def changedRows(truth: DataFrame, mirror: DataFrame, keys: Seq[String]): DataFrame = {
-    val t = truth.select(keys.map(col): _*).withColumn("_t", lit(1))
-    val m = mirror.select(keys.map(col): _*).withColumn("_m", lit(1))
-    t.join(m, keys, "full_outer")
-      .filter(col("_t").isNull || col("_m").isNull)
-      .withColumn("status", when(col("_m").isNull, lit("active")).otherwise(lit("deleted")))
-      .select(keys.map(col) :+ col("status"): _*)
+    val kc = keys.map(col)
+    val status = when(col("op") === "upsert", lit("active")).otherwise(lit("deleted"))
+    changeSet(truth.select(kc: _*), mirror.select(kc: _*), keys)
+      .select(kc :+ status.as("status"): _*)
   }
 
   /** Per-entity change statistics (SURVEY §2.4 A3): what Canvas computes
@@ -70,8 +71,8 @@ object Diff {
     * (single shuffle); comparisons are null-safe (`<=>`). Contract: both
     * sides unique on `keys`.
     *
-    * This is the keyed upgrade of [[changedRows]] (which emits key-level
-    * add/drop status only, no update detection and no payload).
+    * [[changedRows]] is this over the key columns alone (key-level
+    * add/drop status, no update detection and no payload).
     */
   def changeSet(truth: DataFrame, mirror: DataFrame, keys: Seq[String]): DataFrame = {
     val dataCols = truth.columns.toSeq.filterNot(keys.contains)

@@ -1,20 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental view maintenance for JOIN views — the delta-join product
-  * rule. For an insert-only change set (ΔA, ΔB) against base tables
-  * (A₀, B₀):
+  * rule over signed deltas. Against base tables (A₀, B₀), changes
+  * (ΔA, ΔB) carry a `sign` (+1 insert, -1 delete):
   *
   *   Δ(A ⋈ B) = ΔA ⋈ B₀  ∪  A₀ ⋈ ΔB  ∪  ΔA ⋈ ΔB
   *
   * (the cross term appears exactly once — each new-new pair must count
   * once, and it is in neither ΔA⋈B₀ nor A₀⋈ΔB). An aggregate view over
   * the join then maintains by unioning the old grouped state with the
-  * delta contributions and re-aggregating on the group key — additive
-  * measures (SUM/COUNT) merge exactly; the shuffle is keyed by the
-  * GROUP key over delta-sized input, never a rescan of the base join.
+  * signed delta contributions and re-aggregating on the group key —
+  * additive measures (SUM/COUNT) merge exactly; the shuffle is keyed by
+  * the GROUP key over delta-sized input, never a rescan of the base
+  * join. An insert-only change set is the case where every sign is +1
+  * (the `ivm_join_view` query).
   *
   * This is the join sibling of the fact-only `ivm_monthly_revenue`
   * query: there the delta feeds one table; here both sides of a join
@@ -22,15 +24,6 @@ import org.apache.spark.sql.functions._
   * a full recompute (which is exactly what the DuckDB oracle checks).
   */
 object Ivm {
-
-  /** The three delta-join terms, unioned. All four inputs must share
-    * the join key column `key`; columns are resolved by name.
-    */
-  def deltaJoin(a0: DataFrame, da: DataFrame, b0: DataFrame, db: DataFrame,
-                key: String): DataFrame =
-    da.join(b0, key)
-      .unionByName(a0.join(db, key))
-      .unionByName(da.join(db, key))
 
   /** Merge an old grouped-SUM state with delta contributions: union on
     * (groupCols, measures) and re-aggregate, summing each measure.
@@ -43,23 +36,6 @@ object Ivm {
     oldState.unionByName(delta)
       .groupBy(groupCols.map(col): _*)
       .agg(sums.head, sums.tail: _*)
-  }
-
-  /** Convenience: maintain SUM(measureExpr) grouped by groupCols over
-    * A ⋈ B where both sides receive insert-only deltas. Returns the
-    * maintained view (base-view state merged with the delta terms) —
-    * bit-equal to recomputing the view over (A₀∪ΔA) ⋈ (B₀∪ΔB).
-    */
-  def maintainJoinAgg(a0: DataFrame, da: DataFrame,
-                      b0: DataFrame, db: DataFrame, key: String,
-                      groupCols: Seq[String], measureExpr: Column,
-                      measureName: String): DataFrame = {
-    def agg(df: DataFrame): DataFrame =
-      df.groupBy(groupCols.map(col): _*)
-        .agg(sum(measureExpr).as(measureName))
-    val oldView = agg(a0.join(b0, key))
-    val deltaView = agg(deltaJoin(a0, da, b0, db, key))
-    mergeAggState(oldView, deltaView, groupCols, measureName)
   }
 
   /** SIGNED delta-join — the bag-algebra product rule with retractions.

@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
@@ -26,6 +29,22 @@ import graft.functions.TextFns
   * and aggregates, never by the decode.
   */
 object Multimodal {
+
+  private type Payload = (Long, Array[Byte])
+
+  /** `df`'s `cols` as a typed Dataset, mapped partition-at-a-time: each
+    * partition runs [[codecInit]], then the `perPartition` block (which
+    * may hold per-partition caches) to get its row function. The rows
+    * never reach the driver.
+    */
+  private def mapRows[I: TypeTag, O: TypeTag](df: DataFrame, cols: String*)
+      (perPartition: => I => O): Dataset[O] =
+    df.select(cols.map(col): _*).as[I](ExpressionEncoder[I]())
+      .mapPartitions { rows =>
+        codecInit
+        val f = perPartition
+        rows.map(f)
+      }(ExpressionEncoder[O]())
 
   /** A decoded media feature row: the stub emits a deterministic
     * fixed-width feature vector per payload.
@@ -64,18 +83,11 @@ object Multimodal {
     * output schema, no driver materialization — is the shared contract
     * and is what the tests pin.
     */
-  def decodeFeatures(withPayload: DataFrame): Dataset[MediaFeatures] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    withPayload.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val feats = bytes.take(8).map(b => (b & 0xff) / 255.0f)
-          MediaFeatures(id, bytes.length, feats)
-        }
-      }
-  }
+  def decodeFeatures(withPayload: DataFrame): Dataset[MediaFeatures] =
+    mapRows[Payload, MediaFeatures](withPayload, "doc_id", "payload") { case (id, bytes) =>
+      val feats = bytes.take(8).map(b => (b & 0xff) / 255.0f)
+      MediaFeatures(id, bytes.length, feats)
+    }
 
   /** A real-header decode row: container format sniffed from magic bytes
     * plus the pixel dimensions parsed from the format's own header
@@ -148,20 +160,13 @@ object Multimodal {
     * [[decodePixelStats]]. Same plumbing contract: typed Dataset out of
     * mapPartitions, payload bytes never leave the executors.
     */
-  def decodeDims(withPayload: DataFrame): Dataset[MediaDims] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    withPayload.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          parseDims(bytes) match {
-            case Some((fmt, w, h)) => MediaDims(id, fmt, w, h)
-            case None              => MediaDims(id, "unknown", -1L, -1L)
-          }
-        }
+  def decodeDims(withPayload: DataFrame): Dataset[MediaDims] =
+    mapRows[Payload, MediaDims](withPayload, "doc_id", "payload") { case (id, bytes) =>
+      parseDims(bytes) match {
+        case Some((fmt, w, h)) => MediaDims(id, fmt, w, h)
+        case None              => MediaDims(id, "unknown", -1L, -1L)
       }
-  }
+    }
 
   /** Decoded audio container metadata (header-level, no codec). */
   final case class AudioMeta(doc_id: Long, fmt: String, sample_rate: Long,
@@ -226,20 +231,13 @@ object Multimodal {
     * [[decodeAudioStats]] (FLAC waveform decode has no JDK codec and
     * stays header-only). Payload bytes never leave the executors.
     */
-  def decodeAudioMeta(withPayload: DataFrame): Dataset[AudioMeta] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    withPayload.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          parseAudioMeta(bytes) match {
-            case Some((fmt, sr, ch, ms)) => AudioMeta(id, fmt, sr, ch, ms)
-            case None => AudioMeta(id, "unknown", -1L, -1L, -1L)
-          }
-        }
+  def decodeAudioMeta(withPayload: DataFrame): Dataset[AudioMeta] =
+    mapRows[Payload, AudioMeta](withPayload, "doc_id", "payload") { case (id, bytes) =>
+      parseAudioMeta(bytes) match {
+        case Some((fmt, sr, ch, ms)) => AudioMeta(id, fmt, sr, ch, ms)
+        case None => AudioMeta(id, "unknown", -1L, -1L, -1L)
       }
-  }
+    }
 
   /** Frame sampling for "video" payloads: every `stride`-th byte index is
     * a frame handle. Pure expressions: sequence + filter HOF; at scale
@@ -314,36 +312,28 @@ object Multimodal {
     * decode round-trip must match it exactly, bit for bit. That makes
     * the codec path itself (not just the plumbing) hash-checkable.
     */
-  def encodePngPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        codecInit
-        ids.map { id =>
-          val w = (8 + id % 9).toInt
-          val h = (8 + (id / 9) % 7).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val r = ((id * 31 + x * 7 + y * 13) % 256).toInt
-              val g = ((id * 17 + x * 11 + y * 3) % 256).toInt
-              val b = ((id * 23 + x * 5 + y * 19) % 256).toInt
-              img.setRGB(x, y, (r << 16) | (g << 8) | b)
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          (id, bos.toByteArray)
+  def encodePngPayload(docs: DataFrame): DataFrame =
+    mapRows[Long, Payload](docs, "doc_id") { id =>
+      val w = (8 + id % 9).toInt
+      val h = (8 + (id / 9) % 7).toInt
+      val img = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val r = ((id * 31 + x * 7 + y * 13) % 256).toInt
+          val g = ((id * 17 + x * 11 + y * 3) % 256).toInt
+          val b = ((id * 23 + x * 5 + y * 19) % 256).toInt
+          img.setRGB(x, y, (r << 16) | (g << 8) | b)
+          x += 1
         }
+        y += 1
       }
-      .toDF("doc_id", "payload")
-  }
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", bos)
+      (id, bos.toByteArray)
+    }.toDF("doc_id", "payload")
 
   /** Exact per-image pixel statistics from a REAL codec decode. */
   final case class PixelStats(doc_id: Long, fmt: String, width: Long,
@@ -357,40 +347,32 @@ object Multimodal {
     * crawl always contains garbage bytes, and dropping them silently
     * would hide ingest corruption from quality gates.
     */
-  def decodePixelStats(withPayload: DataFrame): Dataset[PixelStats] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    withPayload.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        codecInit
-        rows.map { case (id, bytes) =>
-          val fmt = parseDims(bytes).map(_._1).getOrElse("unknown")
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) PixelStats(id, "unknown", -1L, -1L, 0L, 0L, 0L, 0L)
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = img.getRGB(x, y)
-                sr += (p >> 16) & 0xff
-                sg += (p >> 8) & 0xff
-                sb += p & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            PixelStats(id, fmt, w.toLong, h.toLong, w.toLong * h, sr, sg, sb)
+  def decodePixelStats(withPayload: DataFrame): Dataset[PixelStats] =
+    mapRows[Payload, PixelStats](withPayload, "doc_id", "payload") { case (id, bytes) =>
+      val fmt = parseDims(bytes).map(_._1).getOrElse("unknown")
+      val img =
+        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+        catch { case scala.util.control.NonFatal(_) => null }
+      if (img == null) PixelStats(id, "unknown", -1L, -1L, 0L, 0L, 0L, 0L)
+      else {
+        val w = img.getWidth
+        val h = img.getHeight
+        var sr = 0L; var sg = 0L; var sb = 0L
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val p = img.getRGB(x, y)
+            sr += (p >> 16) & 0xff
+            sg += (p >> 8) & 0xff
+            sb += p & 0xff
+            x += 1
           }
+          y += 1
         }
+        PixelStats(id, fmt, w.toLong, h.toLong, w.toLong * h, sr, sg, sb)
       }
-  }
+    }
 
   /** 8x8 grayscale PNG per document rendered from its text fingerprint:
     * 64 pixel bytes are md5(fp + "#" + k) for k in 0..3 concatenated, so
@@ -400,39 +382,33 @@ object Multimodal {
     * pixel-space dedup pipeline. Input must carry a string `fp` column
     * (see [[graft.functions.TextFns.fingerprint]]).
     */
-  def encodeFingerprintImage(withFp: DataFrame): DataFrame = {
-    val spark = withFp.sparkSession
-    import spark.implicits._
-    withFp.select(col("doc_id"), col("fp"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        codecInit
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.map { case (id, fp) =>
-          val px = new Array[Byte](64)
-          var k = 0
-          while (k < 4) {
-            md.reset()
-            val d = md.digest(
-              (fp + "#" + k).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            System.arraycopy(d, 0, px, k * 16, 16)
-            k += 1
-          }
-          val img = new java.awt.image.BufferedImage(
-            8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var i = 0
-          while (i < 64) {
-            raster.setSample(i % 8, i / 8, 0, px(i) & 0xff)
-            i += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          (id, bos.toByteArray)
+  def encodeFingerprintImage(withFp: DataFrame): DataFrame =
+    mapRows[(Long, String), Payload](withFp, "doc_id", "fp") {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      row => {
+        val (id, fp) = row
+        val px = new Array[Byte](64)
+        var k = 0
+        while (k < 4) {
+          md.reset()
+          val d = md.digest(
+            (fp + "#" + k).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          System.arraycopy(d, 0, px, k * 16, 16)
+          k += 1
         }
+        val img = new java.awt.image.BufferedImage(
+          8, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+        val raster = img.getRaster
+        var i = 0
+        while (i < 64) {
+          raster.setSample(i % 8, i / 8, 0, px(i) & 0xff)
+          i += 1
+        }
+        val bos = new java.io.ByteArrayOutputStream()
+        javax.imageio.ImageIO.write(img, "png", bos)
+        (id, bos.toByteArray)
       }
-      .toDF("doc_id", "payload")
-  }
+    }.toDF("doc_id", "payload")
 
   final case class AHashRow(doc_id: Long, ahash: Long)
 
@@ -444,40 +420,32 @@ object Multimodal {
     * conversion and stop being the identity). Unreadable payloads hash
     * to -1.
     */
-  def decodeAHash(withPayload: DataFrame): Dataset[AHashRow] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    withPayload.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        codecInit
-        rows.map { case (id, bytes) =>
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null || img.getWidth != 8 || img.getHeight != 8)
-            AHashRow(id, -1L)
-          else {
-            val raster = img.getRaster
-            val s = new Array[Int](64)
-            var sum = 0L
-            var i = 0
-            while (i < 64) {
-              s(i) = raster.getSample(i % 8, i / 8, 0)
-              sum += s(i)
-              i += 1
-            }
-            var hash = 0L
-            i = 0
-            while (i < 64) {
-              if (s(i).toLong * 64 > sum) hash |= (1L << i)
-              i += 1
-            }
-            AHashRow(id, hash)
-          }
+  def decodeAHash(withPayload: DataFrame): Dataset[AHashRow] =
+    mapRows[Payload, AHashRow](withPayload, "doc_id", "payload") { case (id, bytes) =>
+      val img =
+        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+        catch { case scala.util.control.NonFatal(_) => null }
+      if (img == null || img.getWidth != 8 || img.getHeight != 8)
+        AHashRow(id, -1L)
+      else {
+        val raster = img.getRaster
+        val s = new Array[Int](64)
+        var sum = 0L
+        var i = 0
+        while (i < 64) {
+          s(i) = raster.getSample(i % 8, i / 8, 0)
+          sum += s(i)
+          i += 1
         }
+        var hash = 0L
+        i = 0
+        while (i < 64) {
+          if (s(i).toLong * 64 > sum) hash |= (1L << i)
+          i += 1
+        }
+        AHashRow(id, hash)
       }
-  }
+    }
 
   /** Deterministic 16-bit mono PCM WAV per document: n = 64 + id%64
     * samples at 8 kHz, sample(i) = ((id*37 + i*17) % 4001) − 2000. Same
@@ -488,34 +456,27 @@ object Multimodal {
     * [[parseAudioMeta]] documents), built directly — encode is byte
     * layout, decode exercises the JDK codec.
     */
-  def encodeWavPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val n = (64 + id % 64).toInt
-          val rate = 8000
-          val dataLen = n * 2
-          val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-            .put("WAVE".getBytes("US-ASCII"))
-          bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1).putShort(1) // PCM, mono
-            .putInt(rate).putInt(rate * 2) // sample rate, byte rate
-            .putShort(2).putShort(16) // block align, bits/sample
-          bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-          var i = 0
-          while (i < n) {
-            bb.putShort((((id * 37 + i * 17) % 4001) - 2000).toShort)
-            i += 1
-          }
-          (id, bb.array())
-        }
+  def encodeWavPayload(docs: DataFrame): DataFrame =
+    mapRows[Long, Payload](docs, "doc_id") { id =>
+      val n = (64 + id % 64).toInt
+      val rate = 8000
+      val dataLen = n * 2
+      val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
+        .put("WAVE".getBytes("US-ASCII"))
+      bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
+        .putShort(1).putShort(1) // PCM, mono
+        .putInt(rate).putInt(rate * 2) // sample rate, byte rate
+        .putShort(2).putShort(16) // block align, bits/sample
+      bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
+      var i = 0
+      while (i < n) {
+        bb.putShort((((id * 37 + i * 17) % 4001) - 2000).toShort)
+        i += 1
       }
-      .toDF("doc_id", "payload")
-  }
+      (id, bb.array())
+    }.toDF("doc_id", "payload")
 
   /** Exact per-clip sample statistics from a REAL codec decode. */
   final case class AudioStats(doc_id: Long, n_samples: Long, sum_s: Long,
@@ -529,85 +490,81 @@ object Multimodal {
     * classic cheap voice-activity feature). Unparseable payloads yield a
     * sentinel row (n_samples = -1) rather than throwing.
     */
-  def decodeAudioStats(withPayload: DataFrame): Dataset[AudioStats] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    withPayload.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // Per-partition reader cache: AudioSystem.getAudioInputStream
-        // re-walks the AudioFileReader SPI chain per call, and each
-        // non-matching provider signals "not mine" by THROWING — so a
-        // WAV corpus pays provider exception construction per clip.
-        // Caching the last provider that succeeded (the JDK WAV reader
-        // here) and trying it first turns the steady state into one
-        // direct reader call; any clip it rejects falls back to the
-        // full SPI walk, so non-WAV and garbage payloads behave exactly
-        // as before. Same decoder class either way — the codec path
-        // stays the JDK's.
-        var cachedReader: javax.sound.sampled.spi.AudioFileReader = null
-        def open(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream = {
-          if (cachedReader != null) {
-            try {
-              return cachedReader.getAudioInputStream(
-                new java.io.ByteArrayInputStream(bytes))
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException =>
-                // fall through to the full SPI walk
-            }
-          }
-          val it = java.util.ServiceLoader
-            .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
-          while (it.hasNext) {
-            val r = it.next()
-            try {
-              val ais = r.getAudioInputStream(
-                new java.io.ByteArrayInputStream(bytes))
-              cachedReader = r
-              return ais
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException => ()
-            }
-          }
-          throw new javax.sound.sampled.UnsupportedAudioFileException(
-            "no AudioFileReader accepted the payload")
-        }
-        rows.map { case (id, bytes) =>
+  def decodeAudioStats(withPayload: DataFrame): Dataset[AudioStats] =
+    mapRows[Payload, AudioStats](withPayload, "doc_id", "payload") {
+      // Per-partition reader cache: AudioSystem.getAudioInputStream
+      // re-walks the AudioFileReader SPI chain per call, and each
+      // non-matching provider signals "not mine" by THROWING — so a
+      // WAV corpus pays provider exception construction per clip.
+      // Caching the last provider that succeeded (the JDK WAV reader
+      // here) and trying it first turns the steady state into one
+      // direct reader call; any clip it rejects falls back to the
+      // full SPI walk, so non-WAV and garbage payloads behave exactly
+      // as before. Same decoder class either way — the codec path
+      // stays the JDK's.
+      var cachedReader: javax.sound.sampled.spi.AudioFileReader = null
+      def open(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream = {
+        if (cachedReader != null) {
           try {
-            val ais = open(bytes)
-            val f = ais.getFormat
-            val data = ais.readAllBytes()
-            ais.close()
-            if (f.getSampleSizeInBits != 16 || f.getChannels != 1 || f.isBigEndian)
-              AudioStats(id, -1L, 0L, 0L, 0L, 0L, 0L)
-            else {
-              val n = data.length / 2
-              var sum = 0L; var sq = 0L; var zc = 0L
-              var mn = Long.MaxValue; var mx = Long.MinValue
-              var prevNeg = false
-              var i = 0
-              while (i < n) {
-                val v = ((data(2 * i) & 0xff) | (data(2 * i + 1) << 8)).toShort.toLong
-                sum += v; sq += v * v
-                if (v < mn) mn = v
-                if (v > mx) mx = v
-                val neg = v < 0
-                if (i > 0 && neg != prevNeg) zc += 1
-                prevNeg = neg
-                i += 1
-              }
-              if (n == 0) AudioStats(id, 0L, 0L, 0L, 0L, 0L, 0L)
-              else AudioStats(id, n.toLong, sum, sq, mn, mx, zc)
-            }
+            return cachedReader.getAudioInputStream(
+              new java.io.ByteArrayInputStream(bytes))
           } catch {
-            // NonFatal, not just the checked pair: ImageIO/audio SPI
-            // readers throw RuntimeExceptions (AIOOBE, IllegalArgument)
-            // on truncated or adversarial payloads, and a single bad
-            // blob must yield the sentinel row, never fail the task.
-            case scala.util.control.NonFatal(_) =>
-              AudioStats(id, -1L, 0L, 0L, 0L, 0L, 0L)
+            case _: javax.sound.sampled.UnsupportedAudioFileException =>
+              // fall through to the full SPI walk
           }
+        }
+        val it = java.util.ServiceLoader
+          .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
+        while (it.hasNext) {
+          val r = it.next()
+          try {
+            val ais = r.getAudioInputStream(
+              new java.io.ByteArrayInputStream(bytes))
+            cachedReader = r
+            return ais
+          } catch {
+            case _: javax.sound.sampled.UnsupportedAudioFileException => ()
+          }
+        }
+        throw new javax.sound.sampled.UnsupportedAudioFileException(
+          "no AudioFileReader accepted the payload")
+      }
+      row => {
+        val (id, bytes) = row
+        try {
+          val ais = open(bytes)
+          val f = ais.getFormat
+          val data = ais.readAllBytes()
+          ais.close()
+          if (f.getSampleSizeInBits != 16 || f.getChannels != 1 || f.isBigEndian)
+            AudioStats(id, -1L, 0L, 0L, 0L, 0L, 0L)
+          else {
+            val n = data.length / 2
+            var sum = 0L; var sq = 0L; var zc = 0L
+            var mn = Long.MaxValue; var mx = Long.MinValue
+            var prevNeg = false
+            var i = 0
+            while (i < n) {
+              val v = ((data(2 * i) & 0xff) | (data(2 * i + 1) << 8)).toShort.toLong
+              sum += v; sq += v * v
+              if (v < mn) mn = v
+              if (v > mx) mx = v
+              val neg = v < 0
+              if (i > 0 && neg != prevNeg) zc += 1
+              prevNeg = neg
+              i += 1
+            }
+            if (n == 0) AudioStats(id, 0L, 0L, 0L, 0L, 0L, 0L)
+            else AudioStats(id, n.toLong, sum, sq, mn, mx, zc)
+          }
+        } catch {
+          // NonFatal, not just the checked pair: ImageIO/audio SPI
+          // readers throw RuntimeExceptions (AIOOBE, IllegalArgument)
+          // on truncated or adversarial payloads, and a single bad
+          // blob must yield the sentinel row, never fail the task.
+          case scala.util.control.NonFatal(_) =>
+            AudioStats(id, -1L, 0L, 0L, 0L, 0L, 0L)
         }
       }
-  }
+    }
 }

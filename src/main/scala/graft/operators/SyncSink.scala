@@ -45,22 +45,21 @@ object SyncSink {
 
   /** Per-entity change statistics across all updates (A3): the counts the
     * Canvas side computes and the reference consumes
-    * (src/canvas.py:137-150), recomputed from the update frames. It
-    * re-executes every diff (one union + one aggregation over all of
-    * them), so it counts what the diffs yield now, not what was uploaded.
-    * A row's status is the frame's `status` column, or "created" when
-    * the frame has none (anti-join entities without one).
+    * (src/canvas.py:137-150), recomputed from the update frames as the
+    * union of [[Diff.changeStats]] over them. It re-executes every diff,
+    * so it counts what the diffs yield now, not what was uploaded. A
+    * row's status is the frame's `status` column, or "created" when the
+    * frame has none (anti-join entities without one).
     * `SyncPipeline.runObserved` does not call it: it counts the same
     * report from the update sets' collected rows. Kept as the reference
     * that report is tested against.
     */
   def changeReport(updates: Map[String, DataFrame]): DataFrame =
     updates.map { case (name, df) =>
-      val status = if (df.columns.contains("status")) col("status") else lit("created")
-      df.select(lit(name).as("dataset"), status.as("status"))
+      val withStatus =
+        if (df.columns.contains("status")) df else df.withColumn("status", lit("created"))
+      Diff.changeStats(withStatus, name).withColumnRenamed("entity", "dataset")
     }.reduce(_ unionByName _)
-      .groupBy(col("dataset"), col("status"))
-      .agg(count(lit(1)).as("n"))
 
   /** Write the sync report as text lines (K4, report.txt shape:
     * per-dataset counts in (dataset, status) order, then warnings;

@@ -549,10 +549,10 @@ object Mining {
 
     // Incremental view maintenance for a JOIN view (operators/
     // Ivm.scala): both the fact AND the dim receive insert-only deltas
-    // (deterministic modulus splits stand in for the late batch), and
-    // the maintained revenue-per-segment view is produced via the
-    // delta-join product rule ΔA⋈B₀ ∪ A₀⋈ΔB ∪ ΔA⋈ΔB + grouped-state
-    // merge. The oracle recomputes the view from scratch — hash
+    // (deterministic modulus splits stand in for the late batch; every
+    // delta row has sign = 1), and the maintained revenue-per-segment
+    // view is produced via the delta-join product rule
+    // ΔA⋈B₀ ∪ A₀⋈ΔB ∪ ΔA⋈ΔB + grouped-state merge. The oracle recomputes the view from scratch — hash
     // equality IS the proof the product rule loses/doubles nothing.
     // At scale only the delta terms shuffle fresh data; the state merge
     // is keyed by the bounded group key.
@@ -567,13 +567,13 @@ object Mining {
         col("c_mktsegment"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val (o0, dO) = (o.filter(col("o_orderkey") % 97 =!= 0),
-        o.filter(col("o_orderkey") % 97 === 0))
+        o.filter(col("o_orderkey") % 97 === 0).withColumn("sign", lit(1L)))
       val (c0, dC) = (c.filter(col("ck") % 101 =!= 0),
-        c.filter(col("ck") % 101 === 0))
-      Ivm.maintainJoinAgg(o0, dO, c0, dC, "ck",
-        Seq("c_mktsegment"), col("price"), "rev")
+        c.filter(col("ck") % 101 === 0).withColumn("sign", lit(1L)))
+      Ivm.maintainJoinAggSigned(o0, dO, c0, dC, "ck",
+          Seq("c_mktsegment"), "price")
         .select(col("c_mktsegment"),
-          expr("CAST(rev * 100 AS BIGINT)").as("revenue_cents"))
+          expr("CAST(price * 100 AS BIGINT)").as("revenue_cents"))
         .orderBy(col("c_mktsegment"))
     }),
 

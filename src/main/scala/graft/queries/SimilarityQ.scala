@@ -162,7 +162,7 @@ object SimilarityQ {
         (col("na") * col("nb")) >= ND_THRESHOLD)
       .select(col("a"), col("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val found = Dedup.embeddingNearDupLshAt(corpus, threshold = ND_THRESHOLD,
+    val found = Dedup.embeddingNearDupLsh(corpus, threshold = ND_THRESHOLD,
         dims = DIMS, nTables = ND_TABLES, nBits = fullBits,
         tblOff = ND_MAX_BITS)
       .select(col("a"), col("b"))
@@ -336,9 +336,9 @@ object SimilarityQ {
         base.filter(col("vec_id") % 5 === 0)
           .withColumn("vec_id", col("vec_id") + lit(PLANT_OFF))
           .withColumn("embedding", transform(col("embedding"), x => x * lit(0.9))))
-      Dedup.embeddingNearDupLshAdaptive(corpus, threshold = ND_THRESHOLD,
+      Dedup.embeddingNearDupLsh(corpus, threshold = ND_THRESHOLD,
           dims = DIMS, nTables = ND_TABLES, nBits = ND_BITS,
-          refReps = ND_REF, maxBits = ND_MAX_BITS)
+          tblOff = ND_MAX_BITS, adaptRef = Some(ND_REF), maxBits = ND_MAX_BITS)
         .orderBy(col("a"), col("b"))
     }),
 

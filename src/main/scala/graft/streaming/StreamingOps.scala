@@ -139,50 +139,6 @@ object StreamingOps {
       }
   }
 
-  /** [[statusTransitions]] as a Spark 4 `transformWithState`
-    * StatefulProcessor (arbitrary-state API v2) — the current-API twin
-    * of the flatMapGroupsWithState machine. Same state (one small
-    * string per key) and same emitted transitions; the processor form
-    * additionally composes with named state variables, TTL, and timers
-    * when the machine grows. Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * ...state.RocksDBStateStoreProvider) — the only provider
-    * transformWithState supports.
-    */
-  final class StatusMachineProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, StatusEvent, Transition] {
-    @transient private var cur: org.apache.spark.sql.streaming.ValueState[String] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      cur = getHandle.getValueState[String]("cur",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[StatusEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[Transition] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-      var c = if (cur.exists()) cur.get() else "none"
-      for (e <- sorted) if (e.status != c) {
-        out += Transition(key, c, e.status, e.ts)
-        c = e.status
-      }
-      cur.update(c)
-      out.iterator
-    }
-  }
-
-  /** Status machine via transformWithState — see [[StatusMachineProcessor]]. */
-  def statusTransitionsTws(events: Dataset[StatusEvent]): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .transformWithState(new StatusMachineProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-  }
-
   /** Watermarked stream-stream join: purchases enriched with the views
     * that preceded them within `horizon` (the streaming twin of the
     * batch as-of/interval join surface, graft.operators.TemporalJoin).

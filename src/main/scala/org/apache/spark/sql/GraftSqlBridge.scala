@@ -28,4 +28,18 @@ object GraftSqlBridge {
     */
   def drain(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** `read` run on a clone of `spark` whose conf also holds `conf`, its
+    * plan bound back to `spark`. A file relation keeps the session it was
+    * read in, and its scan builds the reader from that session's conf
+    * when it executes, so the settings hold for these relations through
+    * execution while `spark`'s own conf never changes.
+    */
+  def scopedRead(spark: SparkSession, conf: (String, String)*)
+                (read: SparkSession => DataFrame): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val clone = session.cloneSession()
+    conf.foreach { case (k, v) => clone.conf.set(k, v) }
+    classic.Dataset.ofRows(session, read(clone).queryExecution.analyzed)
+  }
 }

@@ -112,6 +112,41 @@ class TablesTest extends AnyFunSuite {
     assert(back.orderBy("id_num").collect().toSeq == sample.orderBy("id_num").collect().toSeq)
   }
 
+  test("events reads TIMESTAMP(NANOS) as micros without changing the session conf") {
+    // nanos_events/events.parquet: three rows whose ts is parquet
+    // TIMESTAMP(NANOS) with sub-microsecond digits. DuckDB 1.0's own
+    // parquet writer stores TIMESTAMP_NS as micros, so the rows come from
+    // DuckDB through Arrow, and pyarrow's writer keeps the nanos:
+    //   python3 -c "import duckdb, pyarrow as pa, pyarrow.parquet as pq
+    //   t = duckdb.sql('''SELECT event_id, epoch_us(ts) * 1000 + ns AS ts,
+    //     user_id, event_type, value FROM (VALUES
+    //     (1::BIGINT, TIMESTAMP '2024-03-01 08:00:00.123456', 789, 7::BIGINT, 'view', 1.5::DOUBLE),
+    //     (2::BIGINT, TIMESTAMP '2024-03-01 08:00:01', 999, 7::BIGINT, 'purchase', 20.0::DOUBLE),
+    //     (3::BIGINT, TIMESTAMP '1999-12-31 23:59:59.999999', 1, 9::BIGINT, 'view', 0.25::DOUBLE))
+    //     v(event_id, ts, ns, user_id, event_type, value) ORDER BY event_id''').arrow()
+    //   pq.write_table(t.set_column(1, 'ts', t.column('ts').cast(pa.timestamp('ns'))),
+    //     'events.parquet')"
+    val dir = new java.io.File(getClass.getResource("/nanos_events").toURI).getPath
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // a plain read's outcome: the ts type it executes with, or its failure
+    def plainRead(): Either[String, DataType] = scala.util.Try {
+      val df = spark.read.parquet(s"$dir/events.parquet")
+      df.collect()
+      df.schema("ts").dataType
+    }.toEither.left.map(_.getClass.getName)
+    val confBefore = spark.conf.getOption(key)
+    val plainBefore = plainRead()
+
+    val ev = Tables.events(spark, dir)
+    assert(spark.conf.getOption(key) == confBefore)
+    // executed after events() returned: the scan still reads the nanos
+    assert(ev.schema("ts").dataType == TimestampType)
+    val micros = ev.orderBy("event_id").select(unix_micros($"ts")).as[Long].collect().toSeq
+    assert(micros == Seq(1709280000123456L, 1709280001000000L, 946684799999999L))
+    assert(spark.conf.getOption(key) == confBefore)
+    assert(plainRead() == plainBefore)
+  }
+
   test("parquet loaders read every driver table at sf0.001") {
     val sf = "/root/testdata/sf0.001"
     Tables.all.foreach { t =>

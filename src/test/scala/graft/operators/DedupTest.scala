@@ -381,7 +381,7 @@ class DedupTest extends AnyFunSuite {
       (3L, Seq.tabulate(8)(i => 0.1f * (i + 1)), 2)     // same dir, other label
     ).toDF("vec_id", "embedding", "label")
     val lsh = Dedup.embeddingNearDupLsh(embs, threshold = 0.99, dims = 8,
-        nTables = 2, nBits = 4)
+        nTables = 2, nBits = 4, tblOff = 4)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
     // (0,3) straddles the label boundary: invisible to label blocking,
     // found by LSH (parallel vectors share every sign projection).
@@ -400,7 +400,7 @@ class DedupTest extends AnyFunSuite {
         .withColumn("vec_id", col("vec_id") + lit(1000000L))
         .withColumn("embedding", transform(col("embedding"), x => x * lit(0.9))))
     val lsh = Dedup.embeddingNearDupLsh(corpus, threshold = 0.95, dims = 64,
-        nTables = 2, nBits = 8)
+        nTables = 2, nBits = 8, tblOff = 8)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
     val labelBlocked = Dedup.embeddingNearDup(corpus, col("label"), 0.95)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
@@ -417,10 +417,10 @@ class DedupTest extends AnyFunSuite {
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val exact = Dedup.embeddingNearDupLsh(base, threshold = 0.45, dims = 64,
-        nTables = 2, nBits = 8)
+        nTables = 2, nBits = 8, tblOff = 8)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
     val probed = Dedup.embeddingNearDupLsh(base, threshold = 0.45, dims = 64,
-        nTables = 2, nBits = 8, probe = true)
+        nTables = 2, nBits = 8, tblOff = 8, probe = true)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
     assert(exact.subsetOf(probed),
       s"probe lost pairs: ${exact -- probed}")
@@ -462,7 +462,7 @@ class DedupTest extends AnyFunSuite {
         .select(col("a"), col("b"), col("cos"))
     }
     val got = Dedup.embeddingNearDupLsh(corpus, threshold = 0.95, dims = 64,
-      nTables = 2, nBits = 8).as[(Long, Long, Double)].collect().toSeq.sorted
+      nTables = 2, nBits = 8, tblOff = 8).as[(Long, Long, Double)].collect().toSeq.sorted
     val want = uncontracted(corpus, threshold = 0.95, dims = 64,
       nTables = 2, nBits = 8).as[(Long, Long, Double)].collect().toSeq.sorted
     assert(want.nonEmpty && want.exists(_._3 < 1.0)) // non-vacuous: replicas AND near-dups

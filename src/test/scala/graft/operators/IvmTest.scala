@@ -26,8 +26,9 @@ class IvmTest extends AnyFunSuite {
       val (d0, dd) = dShuf.splitAt(dCut)
       def fdf(xs: Seq[(Long, Long, Long)]) = xs.toDF("id", "ck", "v")
       def ddf(xs: Seq[(Long, String)]) = xs.toDF("ck", "g")
-      val maintained = Ivm.maintainJoinAgg(
-        fdf(f0), fdf(df), ddf(d0), ddf(dd), "ck", Seq("g"), col("v"), "s")
+      val maintained = Ivm.maintainJoinAggSigned(
+        fdf(f0), fdf(df).withColumn("sign", lit(1L)), ddf(d0),
+        ddf(dd).withColumn("sign", lit(1L)), "ck", Seq("g"), "v")
         .as[(String, Long)].collect().toMap
       val recomputed = fdf(facts).join(ddf(dims), "ck")
         .groupBy("g").agg(sum("v").as("s"))
@@ -85,8 +86,9 @@ class IvmTest extends AnyFunSuite {
     val d = Seq((1L, "a")).toDF("ck", "g")
     val empty_f = f.limit(0)
     val empty_d = d.limit(0)
-    val m = Ivm.maintainJoinAgg(f, empty_f, d, empty_d, "ck",
-      Seq("g"), col("v"), "s").as[(String, Long)].collect().toMap
+    val m = Ivm.maintainJoinAggSigned(f, empty_f.withColumn("sign", lit(1L)),
+      d, empty_d.withColumn("sign", lit(1L)), "ck", Seq("g"), "v")
+      .as[(String, Long)].collect().toMap
     assert(m == Map("a" -> 15L))
   }
 }

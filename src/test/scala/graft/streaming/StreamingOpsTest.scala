@@ -155,45 +155,6 @@ class StreamingOpsTest extends AnyFunSuite {
       ("enr-2", "none", "active")))
   }
 
-  test("transformWithState status machine matches the fMGWS twin across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingOps.{StatusEvent, Transition}
-    // transformWithState only runs on the RocksDB state store provider;
-    // scope the provider switch to this query (set -> start -> restore).
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[StatusEvent]
-      mem.addData(
-        StatusEvent("enr-1", "active", ts(0)),
-        StatusEvent("enr-1", "active", ts(1)), // repeat: no transition
-        StatusEvent("enr-1", "deleted", ts(2)),
-        StatusEvent("enr-2", "active", ts(3)))
-      val out = StreamingOps.statusTransitionsTws(mem.toDS())
-      val sq = out.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("transitions_tws").start()
-      sq.processAllAvailable()
-      // second micro-batch continues from RocksDB-persisted state
-      mem.addData(StatusEvent("enr-1", "active", ts(9)))
-      sq.processAllAvailable()
-      sq.stop()
-      val got = spark.table("transitions_tws").as[Transition].collect()
-        .map(t => (t.key, t.from, t.to)).toSet
-      assert(got == Set(
-        ("enr-1", "none", "active"),
-        ("enr-1", "active", "deleted"),
-        ("enr-1", "deleted", "active"),
-        ("enr-2", "none", "active")))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("heavyHittersStream carries bucket sketches across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
