@@ -12,12 +12,15 @@
 # SPARK_DRIVER_MEM size both arms (default: nproc cores, and half of
 # MemTotal clamped to 2-8g).
 # output: one line per run and query (arm, round, per-query seconds =
-# min of the bench unit's samples, then the headline sample's Spark
-# jobs in total and per call site from Bench's `layers`). After the
-# rounds, per query and arm: the min-max across rounds of those job
-# counts, in total and per call site, so a job that AQE submits in
-# some runs and not others reads as spread, not as a change. Paste the
-# output into the round notes / an AB_*.md artifact.
+# min of the bench unit's samples, then the headline sample's plan_fp
+# and Spark jobs in total and per call site from Bench's `layers`).
+# After the rounds, per query and arm: the min-max across rounds of
+# those job counts, in total and per call site, so a job that AQE
+# submits in some runs and not others reads as spread, not as a change;
+# then per query `plan changed` when the OLD and NEW plan_fp sets
+# differ, else `plan unchanged` (an OLD revision whose Bench has no
+# plan_fp reads `plan_fp n/a`). Paste the output into the round notes /
+# an AB_*.md artifact.
 set -euo pipefail
 QUERY=$1
 REV=$2
@@ -56,9 +59,10 @@ for q in sys.argv[3].split(","):
     lay = d.get("layers", {}).get(q)
     if lay:
         sites = sorted(lay["sites"].items(), key=lambda kv: kv[0])
-        print(f"  jobs {lay['jobs']}: " + ", ".join(
+        print(f"  plan_fp {lay.get('plan_fp', 'n/a')} jobs {lay['jobs']}: " + ", ".join(
             f"{site} x{v['jobs']}" for site, v in sites))
         runs.write(json.dumps({"arm": label, "query": q, "jobs": lay["jobs"],
+            "plan_fp": lay.get("plan_fp"),
             "sites": {k: v["jobs"] for k, v in sites}}) + "\n")
 PY
 }
@@ -82,4 +86,12 @@ for q in sys.argv[2].split(","):
         sites = sorted({s for r in rs for s in r["sites"]})
         print(f"{arm} {q}: jobs {span([r['jobs'] for r in rs])}: " + ", ".join(
             f"{s} x{span([r['sites'].get(s, 0) for r in rs])}" for s in sites))
+    fps = {arm: {r["plan_fp"] for r in runs if r["query"] == q and r["arm"] == arm}
+           for arm in ("OLD", "NEW")}
+    if None in fps["OLD"] | fps["NEW"] or not fps["OLD"] or not fps["NEW"]:
+        print(f"{q}: plan_fp n/a")
+    else:
+        moved = "changed" if fps["OLD"] != fps["NEW"] else "unchanged"
+        print(f"{q}: plan {moved} (OLD {' '.join(sorted(fps['OLD']))}, "
+              f"NEW {' '.join(sorted(fps['NEW']))})")
 PY

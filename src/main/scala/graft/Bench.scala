@@ -47,17 +47,7 @@ object Bench {
     // strictly one-sided (one-off multi-second stalls), so min is the
     // variance-robust round-over-round signal the round-8 judge asked
     // for; the samples map makes the spread auditable.
-    // Guard decisions per query: operators with data-dependent physical
-    // plans (containment verify/keys, LPA argmax packing, embed vector
-    // fetch, prefix-Jaccard index) register which regime actually ran
-    // via operators.Guard; the warmup pass exercises the same decisions
-    // as the timed runs, so snapshot after the unit and ship the map in
-    // the artifact — the committed BENCH then records WHICH plan was
-    // priced, not just how long it took.
-    val guardsByQuery =
-      scala.collection.mutable.Map[String, Map[String, String]]()
     def timeOne(name: String, nTimed: Int = 2): Seq[(Double, Layers.Record)] = {
-      graft.operators.Guard.clear()
       try run(name) catch { case _: Throwable => () } // warm: cache + codegen
       try {
         (1 to nTimed).flatMap { i =>
@@ -67,9 +57,10 @@ object Bench {
           // checkpoint-heavy queries the leftover blocks measurably
           // inflate the NEXT sample (memory pressure -> spills).
           if (i > 1) { System.gc(); Thread.sleep(200) }
-          // Layers.record attributes the sample's jobs to call sites; its
-          // listener is added before the timer starts and drained after
-          // it stops. The artifact ships the headline (min) sample's.
+          // Layers.record attributes the sample's jobs to call sites and
+          // keeps its Guard decisions and plans; its listener is added
+          // before the timer starts and drained after it stops. The
+          // artifact ships the headline (min) sample's.
           try {
             Some(Layers.record(spark) {
               val t0 = System.nanoTime()
@@ -84,8 +75,6 @@ object Bench {
           }
         }
       } finally {
-        val g = graft.operators.Guard.snapshot()
-        if (g.nonEmpty) guardsByQuery(name) = g
         // Deterministic inter-query reset; the 100x decade probe timed
         // dedup_survivorship at 84.7 s ninth in a shared JVM vs 13.2 s
         // in isolation, purely from predecessors' lingering checkpoint
@@ -340,17 +329,18 @@ object Bench {
     val samplesJson = names.map { n =>
       "\"" + n + "\":[" + samples(n).map(r => fmt(r._1)).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    // Guard decisions (only queries that recorded any): the physical
-    // regime each entry actually exercised, committed with its timing.
+    // Per query, from the headline sample's record: the Guard decisions
+    // (only queries that took any), the physical regime each entry
+    // actually exercised; and where its Spark work went, by call site,
+    // with its plan fingerprint and scans.
     import Verify.jsonStr
-    val guardsJson = guardsByQuery.toSeq.sortBy(_._1).map { case (q, g) =>
-      jsonStr(q) + ":" + g.toSeq.sorted.map { case (k, v) =>
-        jsonStr(k) + ":" + jsonStr(v) }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    // Where each query's headline sample spent its Spark work, by call site.
-    val layersJson = headline.toSeq.sortBy(_._1).map { case (q, (_, rec)) =>
-      jsonStr(q) + ":" + rec.json
-    }.mkString("{", ",", "}")
+    val guardsJson = Layers.obj(headline.toSeq.sortBy(_._1).collect {
+      case (q, (_, rec)) if rec.guards.nonEmpty =>
+        q -> Layers.obj(rec.guards.toSeq.sorted.map { case (k, v) => k -> jsonStr(v) })
+    })
+    val layersJson = Layers.obj(headline.toSeq.sortBy(_._1).map {
+      case (q, (_, rec)) => q -> rec.json
+    })
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$samplesJson,"guards":$guardsJson,"layers":$layersJson,"posture":"$posture","streaming_cold":$coldJson,"failed":$failedJson,"sf":"$sfDir"}""")
     // The full line above has outgrown the driver's 2000-char log-tail
     // window (90+ queries x ~27 chars), which cuts its leading

@@ -1,9 +1,12 @@
 package graft
 
-/** Plan-inspection tool: execute declared queries at a given SF dir on
-  * the session Bench uses and print each executed (post-AQE) physical
-  * plan — the feedback loop for the scale audits in PlanShapeTest and
-  * SURVEY §4.
+/** Plan-inspection tool: run declared queries at a given SF dir on the
+  * session Bench uses, through Bench's `noop` write, and print every SQL
+  * execution each one ran (eager checkpoints and probes included, not
+  * only the final write) from its [[Layers]] record: the call site, the
+  * scans and the normalized final (post-AQE) formatted plan, under a
+  * header with the query's `plan_fp` and scans. Two runs of one plan
+  * print the same text, so `scripts/plan_diff.sh` diffs the output as is.
   *
   * usage: runMain graft.ExplainQuery <name>[,<name>...] [sfDir]
   */
@@ -13,40 +16,17 @@ object ExplainQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val (spark, _) = LocalSession(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
-    // Pseudo-names: subtrees that the FINAL executed plan of a declared
-    // query cannot show because they sit upstream of a checkpoint /
-    // driver-action boundary (the round-15 evidence lesson).
-    //  _er_pairs     ER chain's pre-CC survivor pair subtree
-    //  _lpa_edges    communitiesDistinct's fused edge build (r16)
-    //  _contain_cert the single-pass injectivity certificate (r16)
-    import org.apache.spark.sql.functions._
     names.foreach { name =>
-      val df = name match {
-        case "_er_pairs" => queries.Extended.erPairs(spark, sfDir)._1
-        case "_lpa_edges" =>
-          val p = Tables.lineitem(spark, sfDir).select(
-            (col("l_partkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
-          p.select(col("a").as("u"), col("b").as("v"))
-            .unionByName(p.select(col("b").as("u"), col("a").as("v")))
-            .repartition(col("u")).dropDuplicates(Seq("u", "v"))
-        case "_contain_cert" =>
-          val docs = Tables.documents(spark, sfDir)
-            .select(col("doc_id"), col("text"))
-          graft.operators.Dedup.shingleRows(docs, 3)
-            .groupBy(xxhash64(col("s")).as("h"))
-            .agg((min(col("s")) =!= max(col("s"))).as("c"))
-            .agg(max(col("c")))
-        case _ => SparkEntry.queries(name)(spark, sfDir)
+      val (_, rec) = Layers.record(spark) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
       }
-      df.collect()
-      println(s"=====PLAN $name=====")
-      println(df.queryExecution.executedPlan.toString)
-      // Post-execution formatted plan (AQE-final): operator list with
-      // PushedFilters / ReadSchema / join build sides — the round-15
-      // optimization deliverable's plan-evidence format.
-      println(s"=====FORMATTED $name=====")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      LocalSession.reset(spark)
+      println(s"=====QUERY $name plan_fp=${rec.planFp} scans=${Layers.counts(rec.scans)}")
+      rec.executions.zipWithIndex.foreach { case (e, i) =>
+        println(s"=====EXECUTION ${i + 1}/${rec.executions.size} ${e.site} scans=${Layers.counts(e.scans)}")
+        println(e.plan)
+      }
     }
     spark.stop()
   }

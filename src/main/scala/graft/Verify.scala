@@ -35,24 +35,24 @@ object Verify {
           rm(f)
         }
     }
-    // Per-query physical-regime decisions (Guard registry), written as
-    // guards.json next to the dumps: a scale gate's artifact can then
-    // prove WHICH regime (adaptive LSH width, semdedup k, containment
-    // tier) the hash-verified run actually exercised — the round-15
-    // 30x gate's whole point is that those regimes differ from sf0.01.
-    val guards = scala.collection.mutable.Map[String, Map[String, String]]()
-    operators.Guard.clear()
-    selected.foreach { case (name, fn) =>
+    // Per-query physical-regime decisions (Guard lines of the query's
+    // Layers record), written as guards.json next to the dumps: a scale
+    // gate's artifact can then prove WHICH regime (adaptive LSH width,
+    // semdedup k, containment tier) the hash-verified run actually
+    // exercised — the round-15 30x gate's whole point is that those
+    // regimes differ from sf0.01.
+    val guards = selected.toSeq.flatMap { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        val g = operators.Guard.snapshot()
-        if (g.nonEmpty) guards(name) = g
+        val (_, rec) = Layers.record(spark) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
+        Some(name -> rec.guards).filter(_._2.nonEmpty)
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        None
       } finally {
-        operators.Guard.clear()
         // Without the reset a full dump accumulates every query's caches
         // and ends up relying on LRU eviction + disk spill at larger SFs
         // (each result is fully written out above, never re-read).
@@ -60,7 +60,7 @@ object Verify {
       }
     }
     Files.writeString(Paths.get(s"$outDir/guards.json"),
-      guards.toSeq.sortBy(_._1).map { case (q, m) =>
+      guards.sortBy(_._1).map { case (q, m) =>
         s"${jsonStr(q)}: " + m.toSeq.sortBy(_._1)
           .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
           .mkString("{", ",", "}")

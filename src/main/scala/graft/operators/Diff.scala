@@ -83,12 +83,12 @@ object Diff {
     val differs =
       if (dataCols.isEmpty) lit(false)
       else dataCols.map(c => !(col(c) <=> col(s"_m_$c"))).reduce(_ || _)
+    // Filter first, then label: a filter on the `op` CASE would plan as a
+    // CASE, not as `isnull(_t) OR isnull(_m) OR ...`.
     t.join(m, keys, "full_outer")
-      .withColumn("op",
-        when(col("_t").isNull, lit("delete"))
-          .when(col("_m").isNull || differs, lit("upsert")))
-      .filter(col("op").isNotNull)
-      .select(keys.map(col) ++ dataCols.map(col) :+ col("op"): _*)
+      .filter(col("_t").isNull || col("_m").isNull || differs)
+      .select(keys.map(col) ++ dataCols.map(col) :+
+        when(col("_t").isNull, lit("delete")).otherwise(lit("upsert")).as("op"): _*)
   }
 
   /** Apply a [[changeSet]] to a keyed mirror snapshot, producing the next

@@ -53,7 +53,7 @@ object LabelProp {
     * (labels too big to broadcast) edges are checkpointed by v and each
     * round's votes are shuffled by u — one wide exchange per round, the
     * round-15 shape. Both regimes run the same round, are exact, and
-    * the decision is recorded in the Guard registry.
+    * the decision is recorded through Guard.
     */
   def communitiesDistinct(rawPairs: DataFrame, iters: Int): DataFrame =
     communitiesDistinctBudget(rawPairs, iters, BCAST_BUDGET_MB)

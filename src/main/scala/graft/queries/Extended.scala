@@ -134,12 +134,12 @@ object Extended {
   }
 
   /** The pre-CC survivor pair stream (and the persisted name-group frame
-    * backing it, for the caller to release) — factored out of
-    * [[erLabels]] so the plan-evidence tool can dump THIS subtree: the
-    * round-15 distinct-drop lives upstream of componentsFromPairs'
-    * localCheckpoint, so the final query plan cannot show it.
+    * backing it, for the caller to release). The round-15 distinct-drop
+    * lives here, upstream of componentsFromPairs' localCheckpoint, so the
+    * final query plan cannot show it; the checkpoint's own execution in
+    * the query's `graft.Layers` record does.
     */
-  private[graft] def erPairs(s: org.apache.spark.sql.SparkSession,
+  private def erPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
     val c = customer(s, dir).select(col("c_custkey"), col("c_name"))

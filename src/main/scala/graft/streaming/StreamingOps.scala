@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * The reference's streaming stand-ins are poll-until-complete loops and a
   * recurring daily batch (reference: src/canvas.py:38-40,128-129,
   * main.py:1-9); these upgrade to real incremental computation:
-  *  - watermarked tumbling/sliding/session window aggregation over events
+  *  - watermarked tumbling and session window aggregation over events
   *  - stateful dedup within the watermark
   *  - the enrollment-status state machine (J6's active/deleted transitions
   *    as a stream) via flatMapGroupsWithState
@@ -37,15 +37,6 @@ object StreamingOps {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
       .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
         col("event_type"), col("n"), col("total"))
-
-  /** Sliding-window variant (each event lands in size/slide windows). */
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes",
-                    width: String = "10 minutes", slide: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("event_type"), col("n"))
 
   /** Session windows: activity bursts per user separated by >= gap. */
   def sessionCounts(events: DataFrame, watermark: String = "30 minutes",
