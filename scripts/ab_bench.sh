@@ -8,9 +8,8 @@
 #
 # usage: scripts/ab_bench.sh <query[,query...]> <old-rev> [sf_dir] [rounds]
 # Without sf_dir, Bench reads SPARK_GRAFT_SF_DIR or its own default
-# corpus (sf0.1). SPARK_GRAFT_CPUS /
-# SPARK_DRIVER_MEM size both arms (default: nproc cores, and half of
-# MemTotal clamped to 2-8g).
+# corpus (sf0.1). SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM size both arms
+# (scripts/jdk_opens.sh's host-sizing rule).
 # output: one line per run and query (arm, round, per-query seconds =
 # min of the bench unit's samples, then the headline sample's plan_fp
 # and Spark jobs in total and per call site from Bench's `layers`).
@@ -26,8 +25,7 @@ QUERY=$1
 REV=$2
 if [ -n "${3:-}" ]; then export SPARK_GRAFT_SF_DIR=$(cd "$3" && pwd); fi
 ROUNDS=${4:-2}
-CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
-MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
+. "$(dirname "$0")/jdk_opens.sh"
 REPO=$(git rev-parse --show-toplevel)
 # The OLD arm is a plain export of <old-rev> (no worktree bookkeeping
 # in the repo); TMPDIR picks where it lands.
@@ -44,7 +42,6 @@ echo "ab_bench: building working-tree jar ..." >&2
 run_arm() { # $1 = dir, $2 = label, $3 = round
   local out
   out=$(cd "$1" && SPARK_GRAFT_ONLY="$QUERY" \
-    SPARK_GRAFT_CPUS=$CPUS SPARK_DRIVER_MEM=$MEM \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep -m1 '"metric"')
   AB_OUT="$out" python3 - "$2" "$3" "$QUERY" "$JOBS" <<'PY'
 import json, os, sys
@@ -67,7 +64,7 @@ for q in sys.argv[3].split(","):
 PY
 }
 
-echo "query=$QUERY old=$REV sf_dir=${SPARK_GRAFT_SF_DIR:-default} rounds=$ROUNDS cpus=$CPUS mem=$MEM"
+echo "query=$QUERY old=$REV sf_dir=${SPARK_GRAFT_SF_DIR:-default} rounds=$ROUNDS cpus=$SPARK_GRAFT_CPUS mem=$SPARK_DRIVER_MEM"
 for r in $(seq 1 "$ROUNDS"); do
   run_arm "$WT" "OLD" "$r"
   run_arm "$REPO" "NEW" "$r"

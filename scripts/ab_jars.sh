@@ -7,22 +7,19 @@
 #
 # usage: scripts/ab_jars.sh <query> <old_jar> <new_jar> [sf_dir] [rounds]
 # Without sf_dir, Bench reads SPARK_GRAFT_SF_DIR or its own default
-# corpus (sf0.1). SPARK_GRAFT_CPUS / AB_HEAP
-# size both arms (default: nproc cores, and half of MemTotal clamped to
-# 2-8g).
+# corpus (sf0.1). SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM size both arms
+# (scripts/jdk_opens.sh's host-sizing rule).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 . scripts/jdk_opens.sh
 QUERY=$1; OLDJAR=$2; NEWJAR=$3
 if [ -n "${4:-}" ]; then export SPARK_GRAFT_SF_DIR=$4; fi
 ROUNDS=${5:-2}
-HEAP=${AB_HEAP:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 
 run_arm() { # $1 = jar, $2 = label, $3 = round
   local out
   out=$(SPARK_GRAFT_ONLY="$QUERY" \
-    SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} \
-    java -Xmx"$HEAP" $JDK_OPENS -cp "$1:/opt/spark/jars/*" graft.Bench \
+    java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "$1:/opt/spark/jars/*" graft.Bench \
     2>/dev/null | grep -m1 '"metric"')
   AB_OUT="$out" python3 - "$2" "$3" "$QUERY" <<'PY'
 import json, os, sys

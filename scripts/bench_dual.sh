@@ -9,20 +9,20 @@
 # a plan that breaks under AQE re-planning at 10x shows up here first.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+. scripts/jdk_opens.sh
 
 JAR=target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar
 CP="$JAR:/opt/spark/jars/*"
-CPUS=${SPARK_GRAFT_CPUS:-32}
 
 [ -f "$JAR" ] || sbt -batch package
 [ -d tmp_sf1/orders.parquet ] || \
-  java -cp "$CP" -Xmx48g graft.GenBig
+  java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "$CP" graft.GenBig
 
 run_one() { # $1 = sf dir, $2 = artifact path
   # NOTE: no `head` inside the pipeline — closing the pipe early
   # SIGPIPEs the java side under pipefail and aborts the script
-  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS="$CPUS" \
-    java -cp "$CP" -Xmx48g graft.Bench 2>/dev/null \
+  SPARK_GRAFT_SF_DIR="$1" \
+    java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "$CP" graft.Bench 2>/dev/null \
     | grep '"metric"' > "$2".all
   head -1 "$2".all > "$2" && rm -f "$2".all
   echo "== $1 -> $2"

@@ -22,8 +22,8 @@ OUT=${1:-/tmp/verify_sf3}
 JAR=target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar
 
 rm -rf "$OUT"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} SPARK_GRAFT_ONLY="$QUERIES" \
-  java -Xmx48g $JDK_OPENS -cp "$JAR:/opt/spark/jars/*" graft.Verify "$SF_DIR" "$OUT"
+SPARK_GRAFT_ONLY="$QUERIES" \
+  java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "$JAR:/opt/spark/jars/*" graft.Verify "$SF_DIR" "$OUT"
 python3 scripts/check_oracle.py "$SF_DIR" "$OUT" "$OUT_JSON"
 # Fold the guard regimes into the committed artifact.
 python3 - "$OUT_JSON" "$OUT/guards.json" "$SF_DIR" <<'PY'

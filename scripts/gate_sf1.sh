@@ -22,7 +22,7 @@ OUT=${1:-/tmp/verify_sf1}
 rm -rf "$OUT"
 # Full-surface oracle type lint first (every oracle, not just the sample):
 # an uncast HUGEINT can never hash-match Spark BIGINT at the driver.
-java $JDK_OPENS -cp "target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar:/opt/spark/jars/*" \
+java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar:/opt/spark/jars/*" \
   graft.DumpOracles /tmp/oracle_all.json
 python3 scripts/lint_oracle_types.py /root/testdata/sf0.01 /tmp/oracle_all.json
 # Completeness: SAMPLE ∪ gate_exclusions.txt must exactly partition the
@@ -30,7 +30,7 @@ python3 scripts/lint_oracle_types.py /root/testdata/sf0.01 /tmp/oracle_all.json
 # either gated here or excluded with a written reason.
 python3 scripts/assert_gate_coverage.py /tmp/oracle_all.json "$SAMPLE" \
   scripts/gate_exclusions.txt
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} SPARK_GRAFT_ONLY="$SAMPLE" \
-  java $JDK_OPENS -cp "target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar:/opt/spark/jars/*" \
+SPARK_GRAFT_ONLY="$SAMPLE" \
+  java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT"
 python3 scripts/check_oracle.py "$SF_DIR" "$OUT" "$OUT_JSON"

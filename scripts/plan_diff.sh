@@ -13,8 +13,9 @@
 # usage: scripts/plan_diff.sh <old-rev> <query[,query...]> [sf_dir]
 # <old-rev> must contain the ExplainQuery that prints normalized plans
 # (`=====QUERY` headers); an older revision exits 2. Without sf_dir,
-# ExplainQuery reads its own default corpus (sf0.01). SPARK_GRAFT_CPUS
-# sizes both sessions (default: nproc cores).
+# ExplainQuery reads its own default corpus (sf0.01). SPARK_GRAFT_CPUS /
+# SPARK_DRIVER_MEM size both sessions (scripts/jdk_opens.sh's host-sizing
+# rule).
 #
 # output: a unified diff of the plans (OLD then NEW) for every query;
 # exit 0 when it is empty, 1 when the plans differ, and 2 when a build
@@ -24,7 +25,7 @@ REV=$1
 QUERY=$2
 SF=()
 if [ -n "${3:-}" ]; then SF=("$(cd "$3" && pwd)"); fi
-CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
+. "$(dirname "$0")/jdk_opens.sh"
 REPO=$(git rev-parse --show-toplevel)
 WT=$(mktemp -d "${TMPDIR:-/tmp}/plan_wt.XXXXXX")
 OUT=$(mktemp -d "${TMPDIR:-/tmp}/plan_out.XXXXXX")
@@ -38,7 +39,7 @@ for arm in old new; do
     tail -20 "$OUT/$arm.build" >&2; exit 2
   fi
   echo "plan_diff: explaining $QUERY on $arm ..." >&2
-  if ! (cd "$dir" && SPARK_GRAFT_CPUS=$CPUS \
+  if ! (cd "$dir" && \
       sbt -batch "runMain graft.ExplainQuery $QUERY ${SF[*]}" \
       >"$OUT/$arm.raw" 2>"$OUT/$arm.err"); then
     tail -20 "$OUT/$arm.err" >&2; exit 2
@@ -51,7 +52,7 @@ for arm in old new; do
   fi
 done
 
-echo "plan_diff: old=$REV query=$QUERY sf_dir=${SF[*]:-default} cpus=$CPUS"
+echo "plan_diff: old=$REV query=$QUERY sf_dir=${SF[*]:-default} cpus=$SPARK_GRAFT_CPUS"
 if diff -u --label "old ($REV)" --label "new (working tree)" \
     "$OUT/old.plan" "$OUT/new.plan"; then
   echo "plan_diff: no difference"

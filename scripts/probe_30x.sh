@@ -18,8 +18,8 @@ QUERIES=${PROBE_QUERIES:-dedup_containment,embed_near_dup,er_clusters,communitie
 JAR=target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar
 
 run_scale() { # $1 = sf dir
-  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_CPUS=32 \
-    java -Xmx48g $JDK_OPENS -cp "$JAR:/opt/spark/jars/*" graft.Bench 2>/dev/null \
+  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_ONLY="$QUERIES" \
+    java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "$JAR:/opt/spark/jars/*" graft.Bench 2>/dev/null \
     | grep -m1 '"metric"'
 }
 

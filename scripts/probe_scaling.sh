@@ -26,8 +26,8 @@ SCALES=${PROBE_SCALES:-10:tmp_sf1_organic,30:tmp_sf3_organic,100:tmp_sf10_organi
 JAR=target/scala-2.13/lms_erp_data_integrationspark_2.13-0.1.0.jar
 
 run_one() { # $1 = sf dir, $2 = single query name
-  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_ONLY="$2" SPARK_GRAFT_CPUS=32 \
-    java -Xmx48g $JDK_OPENS -cp "$JAR:/opt/spark/jars/*" graft.Bench 2>/dev/null \
+  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_ONLY="$2" \
+    java -Xmx"$SPARK_DRIVER_MEM" $JDK_OPENS -cp "$JAR:/opt/spark/jars/*" graft.Bench 2>/dev/null \
     | grep -m1 '"metric"'
 }
 

@@ -1,10 +1,12 @@
 package graft
 
-import java.io.{OutputStream, OutputStreamWriter}
+import java.io.OutputStreamWriter
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import scala.util.Using
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -73,49 +75,75 @@ object Tables {
     spark.read.option("header", "true").schema(schema).csv(path)
 
   /** CSV sink (SURVEY §2.1 K1; reference src/canvas.py:59) with a header,
-    * replacing any earlier output at `path`. Large outputs keep their
-    * partitioning and go through Spark's writer. `singleFile = true` is
-    * for the small update files handed to a downstream REST sink: the
-    * rows are collected and rendered on the driver by Spark's own CSV
-    * generator (header, session time zone), so the bytes equal a
-    * `coalesce(1)` write, and committed as one
-    * `part-00000-<uuid>-c000.csv` by [[commitFile]]. A local frame costs
-    * no Spark job. The rows must fit in `spark.driver.maxResultSize`; a
-    * larger frame fails its collect.
+    * replacing any earlier output at `path` through [[publish]]: a write
+    * that fails leaves the previous output in place. Large outputs keep
+    * their partitioning and go through Spark's writer. `singleFile =
+    * true` is for the small update files handed to a downstream REST
+    * sink: the rows are collected and rendered on the driver by Spark's
+    * own CSV generator (header, session time zone), so the bytes equal a
+    * `coalesce(1)` write, into one `part-00000-<uuid>-c000.csv`. A local
+    * frame costs no Spark job. The rows must fit in
+    * `spark.driver.maxResultSize`; a larger frame fails its collect.
     */
-  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit =
-    if (!singleFile) df.write.mode("overwrite").option("header", "true").csv(path)
+  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
+    val spark = df.sparkSession
+    if (!singleFile)
+      publish(spark, path)((_, staging) => df.write.option("header", "true").csv(staging.toString))
     else {
-      val spark = df.sparkSession
       val rows = df.collect()
       val options = new CSVOptions(Map("header" -> "true"),
         spark.sessionState.conf.csvColumnPruning,
         spark.sessionState.conf.sessionLocalTimeZone)
       val toInternal = ExpressionEncoder(df.schema, lenient = true).createSerializer()
-      commitFile(spark, path, s"part-00000-${UUID.randomUUID()}-c000.csv") { out =>
-        val gen = new UnivocityGenerator(df.schema, new OutputStreamWriter(out, UTF_8), options)
-        gen.writeHeaders()
-        rows.foreach(r => gen.write(toInternal(r)))
-        gen.flush()
+      val name = s"part-00000-${UUID.randomUUID()}-c000.csv"
+      publish(spark, path) { (fs, staging) =>
+        Using.resource(fs.create(new Path(staging, name))) { out =>
+          val gen = new UnivocityGenerator(df.schema, new OutputStreamWriter(out, UTF_8), options)
+          gen.writeHeaders()
+          rows.foreach(r => gen.write(toInternal(r)))
+          gen.flush()
+        }
       }
     }
+  }
 
-  /** Commits one file `name` under the directory `path` from the driver:
-    * deletes any earlier output at `path`, writes `body` to a hidden temp
-    * file in the directory, then renames it to `name`. A body that fails
-    * leaves no file behind.
+  /** The one way the engine replaces a file output at `path`, on the
+    * FileSystem of the session's Hadoop configuration. It is a staged
+    * swap, so a failed write or a crash at any point leaves the previous
+    * output or the new one at `path`, never a hole or a half-written
+    * file:
+    *  1. heal an interrupted earlier swap. With both `path` and
+    *     `path.old` present the new output had committed, so `.old` is
+    *     dropped; with only `.old` present the swap died between its
+    *     renames, so `.old` is renamed back. A stale `path.staging`
+    *     (left by a failed write) is dropped;
+    *  2. `stage` writes the new output to `path.staging`. A stage that
+    *     writes nothing there leaves `path` as it is;
+    *  3. swap: rename `path` to `path.old`, `.staging` to `path`, then
+    *     delete `.old`.
+    * Every rename and delete result is checked, and a rename only ever
+    * targets an absent path: Hadoop's rename into an existing directory
+    * nests the source inside it. A rename that failed silently would let
+    * the write return while the next heal restores the old output;
+    * throwing fails the write instead.
     */
-  private[graft] def commitFile(spark: SparkSession, path: String, name: String)
-                               (body: OutputStream => Unit): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) require(fs.delete(dir, true), s"delete $dir failed")
-    val tmp = new Path(dir, s".$name.inprogress")
-    try {
-      val out = fs.create(tmp)
-      try body(out) finally out.close()
-      require(fs.rename(tmp, new Path(dir, name)), s"rename $tmp failed")
-    } finally fs.delete(tmp, false)
+  private[graft] def publish(spark: SparkSession, path: String)
+                            (stage: (FileSystem, Path) => Unit): Unit = {
+    val dst = new Path(path)
+    val (old, staging) = (dst.suffix(".old"), dst.suffix(".staging"))
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rename(from: Path, to: Path): Unit =
+      require(!fs.exists(to) && fs.rename(from, to), s"rename $from -> $to failed")
+    def drop(p: Path): Unit =
+      if (fs.exists(p)) require(fs.delete(p, true), s"delete $p failed")
+    if (fs.exists(old)) { if (fs.exists(dst)) drop(old) else rename(old, dst) }
+    drop(staging)
+    stage(fs, staging)
+    if (fs.exists(staging)) {
+      if (fs.exists(dst)) rename(dst, old)
+      rename(staging, dst)
+      drop(old)
+    }
   }
 
   /** ORC scan (SURVEY §2.1 format coverage beyond the reference's
@@ -127,7 +155,7 @@ object Tables {
     spark.read.orc(path)
 
   def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
+    publish(df.sparkSession, path)((_, staging) => df.write.orc(staging.toString))
 
   /** JSON-lines scan with a contracted schema — like [[csv]], never
     * `inferSchema` on a production path (inference is a full extra pass
@@ -140,5 +168,5 @@ object Tables {
     spark.read.schema(schema).json(path)
 
   def writeJsonLines(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
+    publish(df.sparkSession, path)((_, staging) => df.write.json(staging.toString))
 }

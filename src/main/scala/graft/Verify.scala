@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -22,18 +23,15 @@ object Verify {
     // When the subset filter is active, remove unselected queries' stale
     // parquet from a previous full run — otherwise check_oracle.py would
     // happily compare old Spark output against fresh oracle SQL and mask
-    // a regression in a dev re-run.
+    // a regression in a dev re-run; a dump that fails to delete stops
+    // the run for the same reason.
     if (only.isDefined) {
       val keep = selected.keySet + "oracle_sql.json" + "guards.json"
-      Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
-        .filterNot(f => keep.contains(f.getName))
-        .foreach { f =>
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-            x.delete(); ()
-          }
-          rm(f)
-        }
+      val out = new Path(outDir)
+      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(out).map(_.getPath)
+        .filterNot(p => keep.contains(p.getName))
+        .foreach(p => require(fs.delete(p, true), s"delete $p failed"))
     }
     // Per-query physical-regime decisions (Guard lines of the query's
     // Layers record), written as guards.json next to the dumps: a scale

@@ -326,42 +326,30 @@ object Dedup {
     * ordering and mostly fall OUT of the prefix, so the candidate join
     * fans out on rare shingles instead of stop-phrases.
     *
-    * The ceiling ceil(t·|A|) is computed in decimal (t recovered via
-    * toString), not double — same rounding hazard as
-    * [[dfCeilingFraction]].
+    * The minimum overlap is taken from the comparison the verify
+    * applies ([[jaccardFromCounts]]: inter / union ≥ t in double), not
+    * from a real-number ceiling: it is the least k with k/|A| ≥ t in
+    * double arithmetic. A pair that passes the verify has
+    * inter/|A| ≥ inter/union ≥ t (division rounds monotonically), so it
+    * shares at least k shingles and the filter is lossless. ⌈t·|A|⌉
+    * rounded in double is at most one away from that k, so the rule
+    * checks k0 − 1, k0 and k0 + 1. A decimal ceiling of t recovered
+    * through toString overshoots when t's double rounds high
+    * (5/7 → 0.7142857142857143 > 5/7) and drops qualifying pairs.
     */
-  private[operators] def prefixRows(inv: DataFrame, threshold: Double): DataFrame =
-    prefixRowsBy(inv,
-      ceil(col("sz").cast("decimal(20,6)") *
-        lit(BigDecimal(threshold.toString))))
-
-  /** Exact-rational prefix rows for callers whose threshold is a true
-    * p/q rational: ⌈p·sz/q⌉ = (p·sz + q − 1) div q in pure integer
-    * column arithmetic. The double round-trip in [[prefixRows]] can
-    * overshoot the real ceiling for ratios whose nearest double rounds
-    * HIGH (5/7 → 0.7142857142857143 > 5/7), which silently SHRINKS the
-    * prefix and drops qualifying pairs — a correctness leak, not a
-    * physical-plan choice, so the rational API never goes through a
-    * double at all.
-    */
-  private[operators] def prefixRowsExact(inv: DataFrame, num: Int,
-                                         den: Int): DataFrame = {
-    require(num > 0 && den > 0, "threshold must be a positive rational")
-    prefixRowsBy(inv, expr(s"(${num}L * sz + ${den - 1}L) div ${den}L"))
-  }
-
-  /** Shared body: rank each doc's shingles in the global rarest-first
-    * order and keep ranks ≤ sz − ceilOfTSz + 1, where ceilOfTSz is the
-    * caller's column formula for ⌈t·sz⌉ over the window-computed `sz`.
-    */
-  private def prefixRowsBy(inv: DataFrame, ceilOfTSz: Column): DataFrame = {
+  private[operators] def prefixRows(inv: DataFrame, threshold: Double): DataFrame = {
+    val sz = col("sz").cast("double")
+    val k0 = ceil(sz * lit(threshold))
+    val minOverlap = when((k0 - 1).cast("double") / sz >= threshold, k0 - 1)
+      .when(k0.cast("double") / sz >= threshold, k0)
+      .otherwise(k0 + 1)
     val dfreq = inv.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
     val wsz = Window.partitionBy(col("doc_id"))
     inv.join(dfreq, "s")
       .withColumn("sz", count(lit(1)).over(wsz))
       .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= col("sz") - ceilOfTSz + 1)
+      .filter(col("rnk") <= col("sz") - minOverlap + 1)
       .select(col("s"), col("doc_id"), col("sz"))
   }
 
@@ -611,7 +599,7 @@ object Dedup {
     // the measured round-12 dominator) never happens:
     //
     //  1. invR ranks every doc's shingles in the global canonical
-    //     order (df asc, s asc — the prefixRowsBy order), so the
+    //     order (df asc, s asc — the prefixRows order), so the
     //     prefix is rnk <= sz − ⌈t·sz⌉ + 1 and every shingle carries
     //     its position.
     //  2. The candidate join pairs a's prefix rows with the full

@@ -2,6 +2,9 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.Using
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,9 +68,10 @@ object SyncSink {
     * per-dataset counts in (dataset, status) order, then warnings;
     * src/canvas.py:136-162) to one `part-00000` file under `path`,
     * replacing any earlier output. The report is a handful of rows, so
-    * it is sorted on the driver and committed by `Tables.commitFile`
-    * (written to a hidden temp file, then renamed): a local report costs
-    * no Spark job, and a failed write leaves no truncated report.
+    * it is sorted on the driver and published by `Tables.publish`
+    * (written to `path.staging`, then swapped in): a local report costs
+    * no Spark job, and a failed write leaves the previous report in
+    * place.
     */
   def writeReport(spark: SparkSession, report: DataFrame, path: String,
                   warnings: Seq[String] = Nil): Unit = {
@@ -75,7 +79,9 @@ object SyncSink {
       .sortBy(r => (r.getString(0), Option(r.getString(1))))
       .map(r => s"${r.getString(0)}: ${r.getString(1)} = ${r.getLong(2)}")
       .toSeq ++ warnings.map(w => s"WARNING: $w")
-    Tables.commitFile(spark, path, "part-00000")(
-      _.write(lines.map(_ + "\n").mkString.getBytes(UTF_8)))
+    Tables.publish(spark, path) { (fs, staging) =>
+      Using.resource(fs.create(new Path(staging, "part-00000")))(
+        _.write(lines.map(_ + "\n").mkString.getBytes(UTF_8)))
+    }
   }
 }

@@ -1,5 +1,10 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.util.Using
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -368,8 +373,9 @@ object StreamingOps {
     * Additive merges are NOT replay-idempotent the way keyed upserts
     * are, so exactly-once is enforced explicitly: the (queryTag,
     * batchId) marker commits WITH the data ([[commitSnapshot]]), so a
-    * crash at any point leaves either the old snapshot+old id or the
-    * new snapshot+new id, never a snapshot whose id lags its data.
+    * crash or a failed write at any point leaves either the old
+    * snapshot+old id or the new snapshot+new id, never a snapshot whose
+    * id lags its data.
     *
     * `queryTag` names the logical feed: replays keyed on the SAME tag
     * with an already-applied batch id are skipped (restart-from-
@@ -511,8 +517,8 @@ object StreamingOps {
     * keyed-upsert mirror. CRASH safety is separate from replay safety —
     * idempotence cannot recover state a mid-overwrite crash deleted —
     * so the snapshot commits through [[commitSnapshot]] without a
-    * marker: a crash at any point leaves either the previous or the new
-    * mirror on disk, never a hole. Per
+    * marker: a crash or a failed write at any point leaves either the
+    * previous or the new mirror on disk, never a hole. Per
     * batch only affected keys' islands rebuild (the batch-sized key set
     * broadcasts); a reader gets per-key coverage with one sum over the
     * mirror.
@@ -546,8 +552,8 @@ object StreamingOps {
     * commutative, and idempotent (a replayed doc re-derives the same
     * priority and dropDuplicates keeps one), so like the coverage
     * mirror it needs NO batch-id marker: any replay or batch reorder
-    * converges to the batch recompute. Crash safety is
-    * [[commitSnapshot]]'s swap. Per batch: one map-side priority projection
+    * converges to the batch recompute. Crash and failed-write safety is
+    * [[commitSnapshot]]'s staged swap. Per batch: one map-side priority projection
     * over the batch, a k-row mirror read, one TakeOrdered — churn
     * cost, never corpus cost.
     */
@@ -636,90 +642,47 @@ object StreamingOps {
       .orderBy(col(catCol))
   }
 
-  /** The one commit path of every snapshot sink. A snapshot at `path`
-    * is only ever replaced by a staged-rename swap, so a crash or a
-    * failed write at any point leaves either the previous snapshot or
-    * the new one on disk, never a hole or a half-written mirror:
-    *  1. heal an interrupted earlier swap ([[healSwap]]);
-    *  2. with `once = Some((queryTag, batchId))`, skip the batch when the
+  /** The one commit path of every snapshot sink: the snapshot at `path`
+    * is replaced only through `graft.Tables.publish`'s staged swap, so a
+    * crash or a failed write at any point leaves either the previous
+    * snapshot or the new one, never a hole or a half-written mirror.
+    * Inside the publish, after it has healed an interrupted swap:
+    *  1. with `once = Some((queryTag, batchId))`, skip the batch when the
     *     snapshot's `_graft_commit` marker shows it is already applied:
-    *     same tag and an id at or past this one. Sinks whose merge is
-    *     not replay-idempotent need this; a DIFFERENT tag is a new query
+    *     same tag and an id at or past this one. An applied batch stages
+    *     nothing, so nothing is swapped. Sinks whose merge is not
+    *     replay-idempotent need this; a DIFFERENT tag is a new query
     *     lineage whose ids restart at 0, so it applies;
-    *  3. compute the next state from the current snapshot (None before
+    *  2. compute the next state from the current snapshot (None before
     *     the first batch). The snapshot is read only when `next` asks
     *     for it, since a parquet schema read costs a Spark job;
-    *  4. write that state to `path.staging`, plus the marker
+    *  3. write that state to the staging path, plus the marker
     *     (`queryTag:batchId`, underscore-prefixed so parquet readers skip
-    *     it) when `once` is set, so the id commits WITH the data;
-    *  5. swap staging into place ([[commitSwap]]).
+    *     it) when `once` is set, so the id commits WITH the data.
     * The write reads `path` lazily but only ever writes staging, so no
     * lineage cut is needed before the swap.
     */
   private def commitSnapshot(s: org.apache.spark.sql.SparkSession,
       path: String, once: Option[(String, Long)] = None)
-      (next: (=> Option[DataFrame]) => DataFrame): Unit = {
-    val (dir, old, staging) = healSwap(path)
-    val marker = new java.io.File(dir, "_graft_commit")
-    val applied = once.exists { case (queryTag, batchId) =>
-      marker.exists() && {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(marker.toPath)).trim
-        val i = txt.lastIndexOf(':')
-        txt.substring(0, i) == queryTag && batchId <= txt.substring(i + 1).toLong
+      (next: (=> Option[DataFrame]) => DataFrame): Unit =
+    graft.Tables.publish(s, path) { (fs, staging) =>
+      val marker = new Path(path, "_graft_commit")
+      val applied = once.exists { case (queryTag, batchId) =>
+        fs.exists(marker) && {
+          val txt = Using.resource(fs.open(marker))(in =>
+            new String(in.readAllBytes(), UTF_8)).trim
+          val i = txt.lastIndexOf(':')
+          txt.substring(0, i) == queryTag && batchId <= txt.substring(i + 1).toLong
+        }
+      }
+      if (!applied) {
+        lazy val existing =
+          if (fs.exists(new Path(path))) Some(s.read.parquet(path)) else None
+        next(existing).write.parquet(staging.toString)
+        once.foreach { case (queryTag, batchId) =>
+          Using.resource(fs.create(new Path(staging, "_graft_commit")))(
+            _.write(s"$queryTag:$batchId".getBytes(UTF_8)))
+        }
       }
     }
-    if (!applied) {
-      lazy val existing =
-        if (dir.exists()) Some(s.read.parquet(path)) else None
-      next(existing).write.mode("overwrite").parquet(staging.getPath)
-      once.foreach { case (queryTag, batchId) =>
-        java.nio.file.Files.write(
-          new java.io.File(staging, "_graft_commit").toPath,
-          s"$queryTag:$batchId".getBytes)
-      }
-      commitSwap(dir, old, staging)
-    }
-  }
-
-  /** Heal an interrupted staged-rename swap and return (dir, backup,
-    * staging) for a new one: both dir+backup present -> the new snapshot
-    * already committed, drop the backup; only the backup present -> the
-    * swap died between renames, roll back (any marker inside was never
-    * observable, so a source replay re-applies cleanly); stale staging
-    * is discarded.
-    */
-  private def healSwap(path: String):
-      (java.io.File, java.io.File, java.io.File) = {
-    val dir = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
-    val staging = new java.io.File(path + ".staging")
-    if (dir.exists() && old.exists()) deleteRec(old)
-    if (!dir.exists() && old.exists())
-      require(old.renameTo(dir), s"heal rollback $old -> $dir failed")
-    if (staging.exists()) deleteRec(staging)
-    (dir, old, staging)
-  }
-
-  /** Second half of the swap: back up the live dir, promote staging,
-    * drop the backup. A crash between any two steps is healed by the
-    * next [[healSwap]]. Every rename/delete result is checked: a
-    * silently-failed rename (cross-device staging, permissions) would
-    * otherwise let the batch commit while the NEXT healSwap restores
-    * the old snapshot — losing the batch permanently. Throwing instead
-    * fails the batch so the streaming engine replays it. */
-  private def commitSwap(dir: java.io.File, old: java.io.File,
-                         staging: java.io.File): Unit = {
-    if (dir.exists())
-      require(dir.renameTo(old), s"backup rename $dir -> $old failed")
-    require(staging.renameTo(dir), s"promote rename $staging -> $dir failed")
-    if (old.exists()) deleteRec(old)
-    ()
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    require(f.delete() || !f.exists(), s"delete $f failed")
-    ()
-  }
 }

@@ -83,18 +83,67 @@ class TablesTest extends AnyFunSuite {
       sample.filter($"id_num" < 3).orderBy("id_num").collect().toSeq)
   }
 
-  test("commitFile leaves no part- file when its body fails mid-write") {
-    val out = java.nio.file.Files.createTempDirectory("commit").resolve("report").toString
-    Tables.commitFile(spark, out, "part-00000")(_.write("old\n".getBytes("UTF-8")))
+  // every file under dir, hidden checksums included, by name
+  private def contents(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
+  // a frame whose write fails in a task, after its output path is chosen
+  private def poisoned = spark.range(1, 4).select(col("id").as("id_num"),
+    when(col("id") === 3L, raise_error(lit("disk full"))).otherwise(lit("x")).as("login_id"),
+    lit(0.5).as("score"))
+
+  test("a failed writeCsv or writeReport leaves the previous output byte-identical") {
+    val dir = java.nio.file.Files.createTempDirectory("publish")
+    val (out, rep) = (dir.resolve("users").toString, dir.resolve("report").toString)
+    Tables.writeCsv(sample, out, singleFile = true)
+    val before = contents(out)
+    intercept[Exception](Tables.writeCsv(poisoned, out))
+    assert(contents(out) == before)
+    intercept[Exception](Tables.writeCsv(poisoned, out, singleFile = true))
+    assert(contents(out) == before)
     val e = intercept[IllegalStateException] {
-      Tables.commitFile(spark, out, "part-00000") { o =>
+      Tables.publish(spark, out) { (fs, staging) =>
+        val o = fs.create(new org.apache.hadoop.fs.Path(staging, "part-00000"))
         o.write("half a rep".getBytes("UTF-8"))
+        o.close()
         throw new IllegalStateException("disk full")
       }
     }
     assert(e.getMessage == "disk full")
-    assert(partFiles(out).isEmpty)
-    assert(new java.io.File(out).listFiles().forall(_.getName.startsWith(".")))
+    assert(contents(out) == before)
+
+    val report = Seq(("sections", "created", 3L)).toDF("dataset", "status", "n")
+    operators.SyncSink.writeReport(spark, report, rep)
+    val reportBefore = contents(rep)
+    intercept[Exception](operators.SyncSink.writeReport(spark,
+      poisoned.select(col("login_id").as("dataset"), lit("created").as("status"),
+        col("id_num").as("n")), rep))
+    assert(contents(rep) == reportBefore)
+  }
+
+  test("an output stranded at path.old by an interrupted swap heals on the next write") {
+    val out = java.nio.file.Files.createTempDirectory("heal").resolve("users").toString
+    val (old, staging) = (new java.io.File(out + ".old"), new java.io.File(out + ".staging"))
+    Tables.writeCsv(sample, out, singleFile = true)
+    val first = contents(out)
+    // the swap died between its renames: the output sits at .old only
+    assert(new java.io.File(out).renameTo(old))
+    intercept[Exception](Tables.writeCsv(poisoned, out))
+    assert(contents(out) == first)
+    assert(!old.exists())
+
+    assert(new java.io.File(out).renameTo(old))
+    Tables.writeCsv(sample.filter($"id_num" < 3), out, singleFile = true)
+    assert(Tables.csv(spark, out, schema).orderBy("id_num").collect().toSeq ==
+      sample.filter($"id_num" < 3).orderBy("id_num").collect().toSeq)
+    assert(!old.exists() && !staging.exists())
+
+    // the swap died before dropping .old: the new output stays
+    assert(old.mkdir())
+    Tables.writeCsv(sample, out, singleFile = true)
+    assert(Tables.csv(spark, out, schema).count() == 3)
+    assert(!old.exists() && !staging.exists())
   }
 
   test("json lines round-trip with explicit schema") {

@@ -89,15 +89,4 @@ class ContainmentPropertyTest extends AnyFunSuite {
       }
     }
   }
-
-  test("prefixRowsExact never overshoots the true rational ceiling (5/7 class)") {
-    // one doc of 7 distinct shingles: ⌈(5/7)·7⌉ = 5 ⇒ prefix length 3.
-    // The double path computes BigDecimal("0.7142857142857143")·7 > 5
-    // and ceils to 6 (prefix 2) — the leak ADVICE r9 flagged.
-    val idx = Seq.tabulate(7)(j => (1L, s"s$j")).toDF("doc_id", "s")
-    assert(Dedup.prefixRowsExact(idx, 5, 7).count() === 3L)
-    assert(Dedup.prefixRows(idx, 5.0 / 7).count() === 2L,
-      "double path is expected to overshoot — if this starts passing, " +
-        "the decimal recovery changed and the exact overload may be moot")
-  }
 }

@@ -132,6 +132,22 @@ class DedupTest extends AnyFunSuite {
     }
   }
 
+  test("prefixJaccardPairs keeps a pair whose Jaccard equals a threshold that rounds high") {
+    // 7 and 5 word trigrams sharing 5: Jaccard is exactly 5/7, and the
+    // double 5.0 / 7 rounds above 5/7. The verify still admits the pair,
+    // so the prefix must keep enough shingles for the candidate join to
+    // find it.
+    val corpus = Seq((1L, "w1 w2 w3 w4 w5 w6 w7 w8 w9"), (2L, "w3 w4 w5 w6 w7 w8 w9"))
+      .toDF("doc_id", "text")
+    val t = 5.0 / 7
+    val full = Dedup.ngramJaccardPairs(corpus, n = 3, threshold = t)
+      .as[(Long, Long, Double)].collect().toSeq
+    val pref = Dedup.prefixJaccardPairs(corpus, n = 3, threshold = t)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(full == Seq((1L, 2L, t)))
+    assert(pref == full)
+  }
+
   test("prefixRows index is strictly smaller and drops the hottest shingles first") {
     val inv = Dedup.shingleRows(hotDocs, n = 3)
     val pre = Dedup.prefixRows(inv, threshold = 0.8)

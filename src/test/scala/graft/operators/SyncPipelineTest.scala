@@ -10,7 +10,7 @@ import org.scalatest.concurrent.{Eventually, Signaler, ThreadSignaler, TimeLimit
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
-import graft.{Layers, TestSpark}
+import graft.{Layers, Tables, TestSpark}
 import graft.sources.Jdbc
 
 /** Golden end-to-end test of the reference's sync semantics
@@ -319,6 +319,37 @@ class SyncPipelineTest extends AnyFunSuite with TimeLimits with Eventually {
     assert(e.getMessage == "upload of sections refused")
     assert(sunk.toSeq == SyncSink.FK_ORDER.takeWhile(_ != "sections"))
     eventually(timeout(10.seconds))(assert(poolThreads == 0))
+  }
+
+  test("a sink that fails mid-write on sections leaves the previous run's sections upload in place") {
+    val dir = java.nio.file.Files.createTempDirectory("uploads")
+    def contents(name: String): Map[String, Seq[Byte]] =
+      dir.resolve(name).toFile.listFiles().map(f =>
+        f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    def entities(night: Int) = SyncSink.FK_ORDER.zipWithIndex.map { case (name, i) =>
+      SyncPipeline.Entity(name, Seq((i, "x"), (i + 100 * night, "y")).toDF("id_num", "v"),
+        Seq((i, "x")).toDF("id_num", "v"), Seq("id_num"))
+    }
+    def upload(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      Tables.writeCsv(df, dir.resolve(name).toString, singleFile = true)
+    SyncPipeline.runObserved(entities(1), SyncSink.FK_ORDER)(upload)
+    val before = SyncSink.FK_ORDER.map(n => n -> contents(n)).toMap
+    val e = intercept[Exception] {
+      SyncPipeline.runObserved(entities(2), SyncSink.FK_ORDER) { (name, df) =>
+        // the sections upload fails in a task of its write
+        if (name == "sections") Tables.writeCsv(df.repartition(1).withColumn("v",
+          when(col("id_num") > 100, raise_error(lit("disk full"))).otherwise(col("v"))),
+          dir.resolve(name).toString)
+        else upload(name, df)
+      }
+    }
+    assert(e.getMessage.contains("disk full"), e)
+    assert(contents("sections") == before("sections"))
+    // the entities before sections carry the second run's uploads, the
+    // ones after it the first run's
+    val (sunk, rest) = SyncSink.FK_ORDER.span(_ != "sections")
+    assert(sunk.forall(n => contents(n) != before(n)))
+    assert(rest.forall(n => contents(n) == before(n)))
   }
 
   test("two concurrent runs in one session each return their own results") {
